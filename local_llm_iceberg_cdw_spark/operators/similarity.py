@@ -3,10 +3,10 @@
 North-star component (BASELINE.json): approximate-nearest-neighbor over an
 embedding column.
 
-- **Brute-force cosine top-k** — the exact baseline: broadcast the (small)
-  query set against the corpus, one pass, no shuffle until the per-query
-  top-k (window over query_id).  At 100 TB the corpus side stays
-  partitioned; cost is a single scan × |queries|.
+- **Brute-force cosine top-k** — the exact baseline: the (small) query
+  set is driver-side state scored against the corpus in one pass, no
+  shuffle until the per-query top-k (window over query_id).  At 100 TB
+  the corpus side stays partitioned; cost is a single scan × |queries|.
 - **IVF top-k** — the scale path: corpus is bucketed to its nearest
   centroid (inverted file); queries probe only the closest cells, cutting
   the scanned fraction to nprobe/ncells.  Centroids here are a
@@ -16,10 +16,14 @@ embedding column.
   of the dedup stack); fixture corpus is fixed at 500 rows so the oracle
   can brute-force it.
 
-Dot products are built as an explicit left-folded sum over
-`element_at(...)` terms — bit-identical IEEE order to the generated
-DuckDB oracle expression, so value hashes match exactly.  All JVM-side;
-no UDF anywhere.
+Dot products are an explicit left-folded sum in the IEEE order of the
+generated DuckDB oracle expression, so value hashes match exactly.  In
+Catalyst the fold is unrolled over `element_at(...)` terms (`_dot`);
+the query-vs-corpus pair stages (exact top-k, hard negatives, SQ8,
+IVF probes, dense shortlists) run the same fold in numpy inside one
+Arrow ``mapInPandas`` pass, the `_pair_scores` kernel.  IVF cell
+probes, k-means assignment and LSH signatures are Arrow-batched pandas
+stages too.
 """
 
 from __future__ import annotations
@@ -57,14 +61,14 @@ def _norm(a: Column) -> Column:
     return F.sqrt(_dot(a, a))
 
 
-# --- fold-exact numpy twins of the Catalyst expressions (r19 optimization) ----
-# Each replays the judged expression's IEEE-754 op sequence term for term
+# --- fold-exact numpy forms of `_dot` / `_norm` ------------------------------
+# Each replays the oracle expression's IEEE-754 op sequence term for term
 # (one f64 multiply + one f64 add per dim, numpy ufuncs — no FMA, no
 # pairwise/BLAS re-association), so results are BIT-identical to `_dot`/
-# `_norm`, not merely close.  They exist because evaluating the 64-term
-# unrolled expression per pair in Catalyst walks a ~130-node tree 64× per
-# row — ~3 orders of magnitude more expensive per pair than one
-# vectorized fold step over an Arrow batch (guide §4.2).
+# `_norm`, not merely close.  The pair stages use them because evaluating
+# the 64-term unrolled expression per pair in Catalyst walks a ~130-node
+# tree 64× per row — ~3 orders of magnitude more expensive per pair than
+# one vectorized fold step over an Arrow batch (guide §4.2).
 
 
 def _fold_norms_np(mat):
@@ -101,100 +105,33 @@ def _round6_np(a):
     return out.reshape(a.shape)
 
 
-def _collect_query_vectors(emb: DataFrame, with_labels: bool = False):
-    """The N_QUERIES query vectors as driver-side model state (ids
-    ascending): (ids int64[nq], qmat float64[nq×dim][, labels int64[nq]])."""
+def _collect_query_vectors(
+    emb: DataFrame, with_labels: bool = False, vec_id: int | None = None
+):
+    """The query vectors as driver-side model state (ids ascending):
+    ``(ids int64[nq], qmat float64[nq×dim], labels int64[nq] | None)``.
+    Default: the N_QUERIES query set; ``vec_id``: that one vector (nq is
+    0 when it is absent, and every pair stage then yields no rows)."""
     import numpy as np
 
     cols = ["vec_id", "embedding"] + (["label"] if with_labels else [])
-    rows = sorted(
-        emb.filter(F.col("vec_id") < N_QUERIES).select(*cols).collect(),
-        key=lambda r: r.vec_id,
-    )
+    pick = F.col("vec_id") < N_QUERIES if vec_id is None else F.col("vec_id") == vec_id
+    rows = sorted(emb.filter(pick).select(*cols).collect(), key=lambda r: r.vec_id)
     ids = np.array([r.vec_id for r in rows], dtype=np.int64)
-    qmat = np.array([r.embedding for r in rows], dtype=np.float64)
-    if not with_labels:
-        return ids, qmat
-    labels = np.array([r.label for r in rows], dtype=np.int64)
+    qmat = np.array([r.embedding for r in rows], dtype=np.float64).reshape(len(rows), DIM)
+    labels = np.array([r.label for r in rows], dtype=np.int64) if with_labels else None
     return ids, qmat, labels
 
 
-def _cosine_pairs_fold_exact(
-    spark: SparkSession, emb: DataFrame, with_labels: bool = False
-) -> DataFrame:
-    """The (queries × corpus) cosine pair stage as ONE narrow Arrow pass —
-    the fold-exact twin of the judged broadcast-join projection: same
-    pair set (neighbor ≠ query, and label ≠ query label when
-    ``with_labels``), same `round(dot/(qn*cn), 6)` values bitwise.
-    Replaces a BroadcastNestedLoopJoin whose per-pair cost is the
-    64-term Catalyst expression walk; the plan becomes scan →
-    MapInPandas, no join, no row expansion before the window."""
-    import numpy as np
-
-    if with_labels:
-        q_ids, qmat, q_labels = _collect_query_vectors(emb, with_labels=True)
-    else:
-        q_ids, qmat = _collect_query_vectors(emb)
-        q_labels = None
-    qn = _fold_norms_np(qmat)
-    bc = spark.sparkContext.broadcast((q_ids, qmat, qn, q_labels))
-
-    schema = (
-        "query_id long, query_label int, neighbor_id long, neg_label int, cosine double"
-        if with_labels
-        else "query_id long, neighbor_id long, cosine double"
-    )
-
-    def score(batches):
-        import pandas as pd
-
-        q_ids, qmat, qn, q_labels = bc.value
-        nq = len(q_ids)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            m = np.stack(pdf["cv"].to_numpy()).astype(np.float64)
-            n_ids = pdf["neighbor_id"].to_numpy()
-            cn = _fold_norms_np(m)
-            # dot / (qn * cn): multiply the norms first, then divide —
-            # the judged expression's op order (multiply is commutative)
-            cos = _round6_np(_fold_dots_np(m, qmat) / (cn[:, None] * qn[None, :]))
-            keep = n_ids[:, None] != q_ids[None, :]
-            if q_labels is not None:
-                n_labels = pdf["neg_label"].to_numpy()
-                keep &= n_labels[:, None] != q_labels[None, :]
-            bi, qi = np.nonzero(keep)
-            if q_labels is not None:  # dict order == schema order
-                out = {
-                    "query_id": q_ids[qi],
-                    "query_label": q_labels[qi].astype("int32"),
-                    "neighbor_id": n_ids[bi],
-                    "neg_label": n_labels[bi],
-                    "cosine": cos[bi, qi],
-                }
-            else:
-                out = {
-                    "query_id": q_ids[qi],
-                    "neighbor_id": n_ids[bi],
-                    "cosine": cos[bi, qi],
-                }
-            yield pd.DataFrame(out)
-
-    src = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("cv"),
-        *([F.col("label").alias("neg_label")] if with_labels else []),
-    )
-    return src.mapInPandas(score, schema)
-
-
-# Corpus size up to which the pair ops keep the unrolled Catalyst brute
-# form (the exact shape the DuckDB oracle mirrors): the 500-row oracle
-# smoke SFs (sf0.001/sf0.01) stay on it so the expression form executes
-# on every suite run; above it the fold-exact Arrow twin scores the
-# pairs (bit-identical — collect-compared at sf0.1 and covered by the
-# opt-in sf0.1 DuckDB sweep).  r19 optimization, the semdecon pattern.
-PAIR_BRUTE_MAX_ROWS = 500
+def _require_nonzero(ids, norms) -> None:
+    """A zero vector has no cosine (and no SQ8 scale): fail loudly,
+    naming it, instead of emitting a NaN score."""
+    zero = norms == 0
+    if zero.any():
+        raise ValueError(
+            f"embedding vec_id {int(ids[zero.argmax()])} is a zero vector; "
+            "its cosine is undefined"
+        )
 
 
 def _numpy_probe_cells(mat, cents, nprobe: int):
@@ -202,8 +139,8 @@ def _numpy_probe_cells(mat, cents, nprobe: int):
     matrix: per row, the ``nprobe`` nearest centroid ids by cosine, ties
     → lowest id via stable argsort.  IDENTICAL numpy op sequence to the
     in-plan pandas UDF (same matmul, same np.linalg.norm, same stable
-    argsort), so cells computed driver-side for the twin equal the cells
-    the judged plan assigns executor-side."""
+    argsort), so the cells the pair kernel computes equal the cells the
+    IVF recall harnesses assign through the UDF."""
     import numpy as np
 
     cent_ids = np.array([cid for cid, _ in cents], dtype=np.int64)
@@ -215,71 +152,115 @@ def _numpy_probe_cells(mat, cents, nprobe: int):
     return cent_ids[np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]]
 
 
-def _ivf_probed_pairs_fold_exact(
-    spark: SparkSession, emb: DataFrame, cents, nprobe: int, score: str
-) -> DataFrame:
-    """The IVF probed-pair stage as ONE narrow Arrow pass — the r20
-    fold-exact twin of the judged cell-join projections in
-    ``ivf_topk_results`` (score='cosine') and ``quantization.
-    ivfsq8_results`` (score='sq8'): the same pair SET (corpus rows whose
-    top-1 cell is probed by the query, neighbor ≠ query) and bitwise the
-    same scores, with the cell join carried through the Arrow stage
-    instead of a per-pair 64-term Catalyst expression walk.
-
-    Query probe cells are computed driver-side by replaying the
-    `_probe_cells_udf` numpy rule on the collected query matrix (model
-    state, the `collect_centroids` pattern); corpus cell assignment
-    replays the identical rule per Arrow batch — so pair membership
-    matches the judged plan exactly.  Scores replay the judged IEEE op
-    sequences: round6(fold_dot / (qn·cn)) for cosine,
-    round6((m/127)·Σ qᵢ·floor(cᵢ·127/m + 0.5)) for sq8 (the
-    `_sq8_pairs_fold_exact` arithmetic)."""
+def _score_plane(col: str, m, cn, qmat, qn):
+    """The unrounded b×nq plane of one `_pair_scores` score column;
+    m: b×dim corpus batch with norms cn, qmat: nq×dim with norms qn."""
     import numpy as np
 
-    q_ids, qmat = _collect_query_vectors(emb)
-    probe_cells = _numpy_probe_cells(qmat, cents, nprobe)  # nq × nprobe
-    qn = _fold_norms_np(qmat) if score == "cosine" else None
-    bc = spark.sparkContext.broadcast((q_ids, qmat, qn, probe_cells, cents))
-    out_col = "cosine" if score == "cosine" else "sq8_score"
+    if col == "cosine":
+        # multiply the norms first, then divide: the oracle's op order
+        # (multiply is commutative)
+        return _fold_dots_np(m, qmat) / (cn[:, None] * qn[None, :])
+    if col == "exact_dot":
+        return _fold_dots_np(m, qmat)
+    # sq8_score: the code derivation is elementwise (·127 → /m → +0.5 →
+    # floor), folded against q like `_fold_dots_np`
+    mx = np.max(np.abs(m), axis=1)  # greatest(): order-free
+    acc = np.floor(m[:, 0] * 127.0 / mx + 0.5)[:, None] * qmat[None, :, 0]
+    for d in range(1, m.shape[1]):
+        code_d = np.floor(m[:, d] * 127.0 / mx + 0.5)
+        acc = acc + code_d[:, None] * qmat[None, :, d]
+    return (mx / 127.0)[:, None] * acc
 
-    def pairs(batches):
+
+_PAIR_COLUMN_TYPES = {
+    "cosine": "double",
+    "sq8_score": "double",
+    "exact_dot": "double",
+    "cv": "array<float>",
+    "cn": "double",
+}
+
+
+def _pair_scores(
+    spark: SparkSession, emb: DataFrame, queries, emit, probe=None
+) -> DataFrame:
+    """The (queries × corpus) pair stage of every exact and IVF vector op
+    as ONE narrow Arrow pass: scan → MapInPandas, no join, no row
+    expansion before the caller's top-k.
+
+    ``queries`` is `_collect_query_vectors` output.  Pair mask: neighbor
+    ≠ query; neighbor label ≠ query label when the queries carry labels
+    (then ``query_label``/``neg_label`` columns are emitted too); with
+    ``probe=(cents, nprobe)``, the corpus row's top-1 IVF cell must be
+    one of the query's ``nprobe`` probed cells (`_numpy_probe_cells`,
+    driver-side for the queries, per batch for the corpus).
+
+    Emits ``query_id, neighbor_id`` plus, in order, the ``emit`` columns:
+    ``cosine`` = round6(Σ q·c / (qn·cn)); ``sq8_score`` =
+    round6((m/127)·Σ q_d·floor(c_d·127/m + 0.5)), m = max|c_d|;
+    ``exact_dot`` = round6(Σ q·c); ``cv``/``cn`` = the corpus vector
+    and its norm.  Every sum is the LEFT fold of the DuckDB oracle's
+    expression, one f64 multiply and one f64 add per dim (numpy ufuncs:
+    no FMA, no BLAS re-association), and each step rounds exactly once
+    as the oracle's does — so scores are bit-identical to it, not close.
+    A zero query or corpus vector raises ValueError naming its vec_id."""
+    import numpy as np
+
+    q_ids, qmat, q_labels = queries
+    qn = _fold_norms_np(qmat)
+    _require_nonzero(q_ids, qn)
+    probe_cells = _numpy_probe_cells(qmat, probe[0], probe[1]) if probe else None
+    bc = spark.sparkContext.broadcast((q_ids, qmat, qn, q_labels, probe, probe_cells))
+    labeled = q_labels is not None
+
+    def score(batches):
         import pandas as pd
 
-        q_ids, qmat, qn, probe_cells, cents = bc.value
+        q_ids, qmat, qn, q_labels, probe, probe_cells = bc.value
         for pdf in batches:
             if pdf.empty:
                 continue
             m = np.stack(pdf["cv"].to_numpy()).astype(np.float64)  # b×dim
             n_ids = pdf["neighbor_id"].to_numpy()
-            cell = _numpy_probe_cells(m, cents, 1)[:, 0]  # top-1 per row
-            # pair mask: corpus row's cell probed by the query, self off
-            keep = (cell[:, None, None] == probe_cells[None, :, :]).any(axis=2)
-            keep &= n_ids[:, None] != q_ids[None, :]
-            if score == "cosine":
-                cn = _fold_norms_np(m)
-                scores = _round6_np(
-                    _fold_dots_np(m, qmat) / (qn[None, :] * cn[:, None])
-                )
-            else:  # sq8: the _sq8_pairs_fold_exact ADC arithmetic
-                mx = np.max(np.abs(m), axis=1)  # greatest(|c_i|): order-free
-                codes0 = np.floor(m[:, 0] * 127.0 / mx + 0.5)
-                acc = codes0[:, None] * qmat[None, :, 0]
-                for d in range(1, m.shape[1]):
-                    code_d = np.floor(m[:, d] * 127.0 / mx + 0.5)
-                    acc = acc + code_d[:, None] * qmat[None, :, d]
-                scores = _round6_np((mx / 127.0)[:, None] * acc)
+            cn = _fold_norms_np(m)
+            _require_nonzero(n_ids, cn)
+            keep = n_ids[:, None] != q_ids[None, :]
+            if labeled:
+                n_labels = pdf["neg_label"].to_numpy()
+                keep &= n_labels[:, None] != q_labels[None, :]
+            if probe:
+                cell = _numpy_probe_cells(m, probe[0], 1)[:, 0]
+                keep &= (cell[:, None, None] == probe_cells[None, :, :]).any(axis=2)
             bi, qi = np.nonzero(keep)
-            yield pd.DataFrame(
-                {
-                    "query_id": q_ids[qi],
-                    "neighbor_id": n_ids[bi],
-                    out_col: scores[bi, qi],
-                }
-            )
+            out = {"query_id": q_ids[qi]}  # dict order == schema order
+            if labeled:
+                out["query_label"] = q_labels[qi].astype("int32")
+            out["neighbor_id"] = n_ids[bi]
+            if labeled:
+                out["neg_label"] = n_labels[bi]
+            for col in emit:
+                if col == "cn":
+                    out[col] = cn[bi]
+                elif col == "cv":
+                    out[col] = pdf["cv"].to_numpy()[bi]
+                else:
+                    out[col] = _round6_np(_score_plane(col, m, cn, qmat, qn)[bi, qi])
+            yield pd.DataFrame(out)
 
-    return emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
-    ).mapInPandas(pairs, f"query_id long, neighbor_id long, {out_col} double")
+    src = emb.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("cv"),
+        *([F.col("label").alias("neg_label")] if labeled else []),
+    )
+    schema = ", ".join(
+        ["query_id long"]
+        + (["query_label int"] if labeled else [])
+        + ["neighbor_id long"]
+        + (["neg_label int"] if labeled else [])
+        + [f"{c} {_PAIR_COLUMN_TYPES[c]}" for c in emit]
+    )
+    return src.mapInPandas(score, schema)
 
 
 def _materialized(df: DataFrame, n_partitions: int = 32) -> DataFrame:
@@ -367,35 +348,12 @@ FROM per ORDER BY label
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact brute-force top-k: queries (vec_id < N_QUERIES) × corpus.
 
-    Norms are computed once per vector *before* the join (an O(n) pass),
-    so the O(n·q) pair stage does one dot product, not three.
+    The query vectors are driver-side model state, so the O(n·q) pair
+    stage is one narrow Arrow pass over the corpus (`_pair_scores`) —
+    no join — and the only exchange is the per-query top-k window.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    if _emb_count(emb, sf_dir) > PAIR_BRUTE_MAX_ROWS:
-        # fold-exact Arrow twin: same pairs, bitwise-same cosines, one
-        # narrow MapInPandas pass instead of the per-pair expression walk
-        scored = _cosine_pairs_fold_exact(spark, emb)
-    else:
-        queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qv"),
-            _norm(F.col("embedding")).alias("qn"),
-        )
-        corpus = _materialized(
-            emb.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("embedding").alias("cv"),
-                _norm(F.col("embedding")).alias("cn"),
-            )
-        )
-        scored = (
-            corpus.join(F.broadcast(queries), F.col("query_id") != F.col("neighbor_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6).alias("cosine"),
-            )
-        )
+    scored = _pair_scores(spark, emb, _collect_query_vectors(emb), ("cosine",))
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
     return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
         F.col("rank") <= TOP_K
@@ -408,44 +366,15 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     negatives" an embedding model trains against (easy negatives are
     random; hard ones are the near-misses that actually move the loss).
 
-    Same plan as the exact top-k (broadcast queries, one corpus pass,
-    per-query window) with the label inequality pushed into the pair
-    stage, so mismatched pairs are dropped before the window shuffle.
+    Same plan as the exact top-k (one corpus pass, per-query window)
+    with the label inequality applied in the pair stage, so mismatched
+    pairs are dropped before the window shuffle.
     At 100 TB the candidate stage swaps to the IVF/PQ tier exactly like
     retrieval does; mining is retrieval with a label filter."""
     emb = load_table(spark, sf_dir, "embeddings")
-    if _emb_count(emb, sf_dir) > PAIR_BRUTE_MAX_ROWS:
-        # fold-exact Arrow twin (same pair set incl. the label filter,
-        # bitwise-same cosines) — see _cosine_pairs_fold_exact
-        scored = _cosine_pairs_fold_exact(spark, emb, with_labels=True)
-    else:
-        queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("label").alias("query_label"),
-            F.col("embedding").alias("qv"),
-            _norm(F.col("embedding")).alias("qn"),
-        )
-        corpus = _materialized(
-            emb.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("label").alias("neg_label"),
-                F.col("embedding").alias("cv"),
-                _norm(F.col("embedding")).alias("cn"),
-            )
-        )
-        scored = corpus.join(
-            F.broadcast(queries),
-            (F.col("query_id") != F.col("neighbor_id"))
-            & (F.col("query_label") != F.col("neg_label")),
-        ).select(
-            "query_id",
-            "query_label",
-            "neighbor_id",
-            "neg_label",
-            F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6).alias(
-                "cosine"
-            ),
-        )
+    scored = _pair_scores(
+        spark, emb, _collect_query_vectors(emb, with_labels=True), ("cosine",)
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
@@ -575,61 +504,21 @@ def ivf_topk_results(
     measures better on this fixture — recall 0.80 (seed) vs 0.78
     (fitted) at sf0.1 — see ``fitted_centroids`` for the why.
 
-    Cell assignment (corpus AND queries) is one Arrow-batched matmul
-    against the collected centroid matrix (``_probe_cells_udf``) — a
-    narrow stage with no join and no row expansion; the only exchanges
-    in the whole plan are the broadcast of the ~q·nprobe query-cell rows
-    and the final per-query top-k window over the probed candidates."""
+    Cell assignment and scoring are one narrow Arrow pass
+    (`_pair_scores` with the probed-cell mask): the queries' probed
+    cells are computed driver-side, each corpus batch's top-1 cells by
+    one matmul against the collected centroid matrix — no join and no
+    row expansion; the only exchange is the final per-query top-k
+    window over the probed candidates.  Every corpus vector has exactly
+    ONE top-1 cell, so a (query, neighbor) pair occurs at most once
+    even with nprobe > 1."""
     emb = load_table(spark, sf_dir, "embeddings")
     cents = (
         fitted_centroids(spark, sf_dir) if fitted else collect_centroids(spark, sf_dir)
     )
-    if _emb_count(emb, sf_dir) > PAIR_BRUTE_MAX_ROWS:
-        # fold-exact Arrow twin of the probed-pair stage (r20
-        # optimization): same pair set, bitwise-same cosines, the cell
-        # join carried through one narrow MapInPandas pass — see
-        # _ivf_probed_pairs_fold_exact; the 500-row oracle smoke SFs
-        # keep the expression-join form below
-        scored = _ivf_probed_pairs_fold_exact(
-            spark, emb, cents, IVF_NPROBE, "cosine"
-        )
-    else:
-        top1 = _probe_cells_udf(cents, 1)
-        topn = _probe_cells_udf(cents, IVF_NPROBE)
-
-        # NO repartition spread here: the UDF stage is narrow and Arrow
-        # batch-sized, so extra splits just multiply Python-worker startups
-        # (32 simultaneous numpy imports cost ~12 s on the 2 k-row fixture);
-        # at scale the scan already has thousands of splits.
-        corpus_cells = emb.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("cv"),
-            _norm(F.col("embedding")).alias("cn"),
-        ).withColumn("cell", F.element_at(top1(F.col("cv")), 1))
-
-        # queries probe their IVF_NPROBE nearest cells (tiny: q·nprobe rows)
-        query_cells = (
-            emb.filter(F.col("vec_id") < N_QUERIES)
-            .select(
-                F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("qv"),
-                _norm(F.col("embedding")).alias("qn"),
-            )
-            .withColumn("cell", F.explode(topn(F.col("qv"))))
-        )
-        scored = (
-            corpus_cells.join(F.broadcast(query_cells), "cell")
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6).alias("cosine"),
-            )
-            # no distinct needed: every corpus vector is assigned to exactly ONE
-            # cell (top-1 above), so a (query, neighbor) pair occurs at most once
-            # even with nprobe > 1 — verified empirically; the distinct here was
-            # a full extra shuffle of the candidate set
-        )
+    scored = _pair_scores(
+        spark, emb, _collect_query_vectors(emb), ("cosine",), probe=(cents, IVF_NPROBE)
+    )
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
     return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
         F.col("rank") <= TOP_K
@@ -668,99 +557,26 @@ def dense_shortlist(
     spark: SparkSession, sf_dir: str, query_vec_id: int, k: int
 ) -> DataFrame:
     """Top-k corpus vectors by cosine to one query embedding —
-    ``(vec_id, cosine, cv, cn)``, ordered (cosine desc, vec_id).
+    ``(vec_id, cosine, cv, cn)``, ordered (cosine desc, vec_id); empty
+    when ``query_vec_id`` is absent.
 
-    Below ``DENSE_SHORTLIST_BRUTE_MAX_ROWS`` corpus rows the scoring is
-    EXACT: the 500-row oracle smoke SFs run the brute Catalyst scorer
-    (one broadcast query vector, narrow corpus pass, per-partition
-    TakeOrdered) — the form the DuckDB oracles mirror — and above
-    ``PAIR_BRUTE_MAX_ROWS`` the same scores come from the fold-exact
-    Arrow twin (bit-identical, one MapInPandas pass; r19 optimization).
-    Beyond the threshold the candidate set is restricted to the query's
-    ``IVF_NPROBE`` nearest inverted-file cells (the same seed quantizer
-    as ``ivf_topk_results``) before scoring: the per-query cost drops
-    from O(corpus) to O(corpus/cells·nprobe) and the corpus-wide
-    assignment is one narrow Arrow matmul stage, amortizable across
-    queries.  The row count is parquet metadata (no data scan) and is
-    memoized per fixture dir, so repeat callers pay zero jobs for the
-    threshold decision."""
+    Scoring is `_pair_scores` (one narrow Arrow pass, bit-identical to
+    the DuckDB oracle's cosine), with the top-k order/limit in Spark.
+    Below ``DENSE_SHORTLIST_BRUTE_MAX_ROWS`` corpus rows it is EXACT
+    over the whole corpus.  Beyond the threshold the candidates are the
+    rows in the query's ``IVF_NPROBE`` nearest inverted-file cells (the
+    same seed quantizer as ``ivf_topk_results``), so only ~nprobe/cells
+    of the corpus leaves the scan stage for the top-k.  The row count is parquet metadata (no data scan) and is memoized per
+    fixture dir, so repeat callers pay zero jobs for the threshold
+    decision."""
     emb = load_table(spark, sf_dir, "embeddings")
-    n_rows = _emb_count(emb, sf_dir)
-    q = emb.filter(F.col("vec_id") == query_vec_id).select(
-        F.col("embedding").alias("qv"), _norm(F.col("embedding")).alias("qn")
-    )
-    cand = emb.filter(F.col("vec_id") != query_vec_id).select(
-        "vec_id", F.col("embedding").alias("cv"), _norm(F.col("embedding")).alias("cn")
-    )
-    if n_rows > DENSE_SHORTLIST_BRUTE_MAX_ROWS:
-        cents = collect_centroids(spark, sf_dir)
-        top1 = _probe_cells_udf(cents, 1)
-        topn = _probe_cells_udf(cents, IVF_NPROBE)
-        probed = q.select(F.explode(topn(F.col("qv"))).alias("cell"))
-        cand = (
-            cand.withColumn("cell", F.element_at(top1(F.col("cv")), 1))
-            .join(F.broadcast(probed), "cell")
-            .drop("cell")
-        )
-    elif n_rows > PAIR_BRUTE_MAX_ROWS:
-        # fold-exact Arrow twin of the brute scorer (r19 optimization):
-        # bitwise-same cosines/norms, one narrow MapInPandas pass instead
-        # of 2-3 Catalyst expression walks per candidate row; the top-k
-        # order/limit stays in Spark
-        import numpy as np
-
-        qrow = (
-            emb.filter(F.col("vec_id") == query_vec_id).select("embedding").collect()
-        )
-        if not qrow:
-            # absent query vector: the brute tier's crossJoin against an
-            # empty q yields no rows — mirror that instead of IndexError
-            # (ADVICE r19)
-            return spark.createDataFrame(
-                [], "vec_id long, cosine double, cv array<float>, cn double"
-            )
-        qv = np.array(qrow[0][0], dtype=np.float64)[None, :]
-        qn = float(_fold_norms_np(qv)[0])
-        bc = spark.sparkContext.broadcast((qv, qn))
-
-        def score(batches):
-            import pandas as pd
-
-            qv, qn = bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                m = np.stack(pdf["cv"].to_numpy()).astype(np.float64)
-                cn = _fold_norms_np(m)
-                cos = _round6_np(_fold_dots_np(m, qv)[:, 0] / (qn * cn))
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"].to_numpy(),
-                        "cosine": cos,
-                        "cv": pdf["cv"],
-                        "cn": cn,
-                    }
-                )
-
-        return (
-            emb.filter(F.col("vec_id") != query_vec_id)
-            .select("vec_id", F.col("embedding").alias("cv"))
-            .mapInPandas(
-                score, "vec_id long, cosine double, cv array<float>, cn double"
-            )
-            .orderBy(F.desc("cosine"), F.asc("vec_id"))
-            .limit(k)
-        )
+    probe = None
+    if _emb_count(emb, sf_dir) > DENSE_SHORTLIST_BRUTE_MAX_ROWS:
+        probe = (collect_centroids(spark, sf_dir), IVF_NPROBE)
+    query = _collect_query_vectors(emb, vec_id=query_vec_id)
     return (
-        cand.crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(
-                _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
-            ).alias("cosine"),
-            "cv",
-            "cn",
-        )
+        _pair_scores(spark, emb, query, ("cosine", "cv", "cn"), probe=probe)
+        .select(F.col("neighbor_id").alias("vec_id"), "cosine", "cv", "cn")
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(k)
     )
@@ -1719,10 +1535,10 @@ def q_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax tiebreaks on vec_id.
 
     Scale shape: ONE corpus-scale stage — the relevance shortlist via
-    `dense_shortlist` (exact brute force below
-    DENSE_SHORTLIST_BRUTE_MAX_ROWS corpus rows — the form the oracle
-    mirrors — IVF cell probe beyond, so the O(corpus) scan physically
-    cannot run at scale).  Everything after is bounded by the
+    `dense_shortlist` (exact below DENSE_SHORTLIST_BRUTE_MAX_ROWS corpus
+    rows, bit-identical to the oracle's brute-force shortlist — IVF cell
+    probe beyond, so the O(corpus) top-k physically cannot run at
+    scale).  Everything after is bounded by the
     shortlist: the pairwise sim table is |shortlist|² rows computed once
     by the same Spark expressions, and the K-step greedy argmax runs
     DRIVER-SIDE over those ≤ 15 collected rows (bounded model state,
@@ -1827,41 +1643,24 @@ SEMDECON_TEST_RESIDUE = 3   # avoids the query ids (vec_id < N_QUERIES)
 # production embedding space with true near-copies would run ~0.95
 SEMDECON_COSINE = 0.4
 
-# Corpus size above which the decontamination sweep abandons the exact
-# broadcast-holdout scorer for the IVF cell restriction (the
-# DENSE_SHORTLIST_BRUTE_MAX_ROWS pattern).  The scale variable is the
-# PAIR count, not the row count: with the 10/90 split the brute scorer
-# evaluates ~0.09·n² dot products, so it goes quadratic long before any
-# row-count intuition bites — the r16 sf1 probe measured 13.7 s at 2k
-# rows (0.36M pairs) ballooning to ~1,030 s at 20k rows (36M pairs),
-# the exact 100× pair growth.  r19 optimization: the tier-2 scorer now
-# reproduces the judged left fold BIT-identically (see
-# `_semdecon_vectorized_exact` — explicit per-dim fold, not BLAS), so
-# the brute expression form is only kept where it costs nothing: the
-# 500-row oracle smoke SFs (sf0.001/sf0.01), where the DuckDB-mirrored
-# Catalyst form still executes on every suite run.  sf0.1 (2k rows,
-# 0.36M pairs) moves to tier 2 — measured 12.9 → 2.9 s warm with
-# collect-compared EQUAL output (and the opt-in sf0.1 DuckDB parity
-# sweep re-proves it against the oracle directly).  The threshold makes
-# the swap a code path, not a docstring promise (test-forced via
-# monkeypatch like dense_shortlist's).
-SEMDECON_BRUTE_MAX_ROWS = 500
-
-# Second tier: up to this corpus size the sweep stays EXACT — bit-exact
-# since r19: the unrolled fold-order expression is replaced by a
+# Corpus size up to which the decontamination sweep stays EXACT: a
 # vectorized per-dim LEFT FOLD over each train Arrow batch against the
 # collected holdout matrix (the eval suite is bounded model state, like
-# the IVF centroids) — same O(n·h) flops and the identical IEEE op
-# sequence, ~3 orders of magnitude cheaper per flop than the Catalyst
-# expression walk.  Beyond it (holdout no longer sensibly broadcastable
-# / flop budget real), the IVF cell restriction prices each train row
-# at a holdout subset instead.
+# the IVF centroids) — the oracle's IEEE op sequence bit for bit, ~3
+# orders of magnitude cheaper per flop than the unrolled Catalyst
+# expression walk.  The scale variable is the PAIR count, not the row
+# count: with the 10/90 split the exact sweep scores ~0.09·n² pairs
+# (the r16 sf1 probe measured the Catalyst crossJoin form at 13.7 s for
+# 2k rows → ~1,030 s for 20k, the exact 100× pair growth).  Beyond it
+# (holdout no longer sensibly broadcastable / flop budget real), the
+# IVF cell restriction prices each train row at a holdout subset
+# instead.
 SEMDECON_VECTORIZED_MAX_ROWS = 2_000_000
 
 # The audit probes HALF the cells per holdout vector (vs IVF_NPROBE=2 of
 # 8 for search): a decontamination sweep's cost of a missed flag is a
 # leaked eval item, so it errs toward recall.  MEASURED at sf0.001
-# (threshold-forced): flag recall vs brute 0.38 @ nprobe 2 → 0.69 @ 3 →
+# (threshold-forced): flag recall vs exact 0.38 @ nprobe 2 → 0.69 @ 3 →
 # 0.85 @ 4 on this isotropic fixture, whose "contaminated" pairs sit at
 # cosine ≈ 0.4 — true near-copies (≈0.95) bucket together far more often.
 SEMDECON_NPROBE = 4
@@ -1882,20 +1681,19 @@ def _round6_halfup(x: float) -> float:
 def _semdecon_vectorized_exact(
     spark: SparkSession, train: DataFrame, test: DataFrame
 ) -> DataFrame:
-    """The middle decontamination tier: BIT-EXACT max-cosine over the
-    full holdout, computed as a vectorized per-dim LEFT FOLD per train
-    Arrow batch against the collected holdout matrix (r19: was a BLAS
-    matmul, exact only up to summation ulp — the fold replays the
-    Catalyst/DuckDB op sequence term for term, so this tier now equals
-    the brute form bitwise and oracle-compared SFs may run it).  No
-    join, no row expansion, no shuffle — the plan is a narrow scan of
-    train through one ``mapInPandas`` stage; the holdout (an eval
-    suite: 10⁴–10⁵ × dim floats, up to ~50 MB) ships once per executor
-    via an explicit ``sparkContext.broadcast`` instead of riding in
-    every task binary.
+    """The exact decontamination scorer: BIT-EXACT max-cosine over the
+    full holdout, computed as a vectorized per-dim LEFT FOLD
+    (`_fold_norms_np` / `_fold_dots_np`) per train Arrow batch against
+    the collected holdout matrix — the DuckDB oracle's op sequence term
+    for term.  No join, no row expansion, no shuffle — the plan is a
+    narrow scan of train through one ``mapInPandas`` stage; the holdout
+    (an eval suite: 10⁴–10⁵ × dim floats, up to ~50 MB) ships once per
+    executor via an explicit ``sparkContext.broadcast`` instead of
+    riding in every task binary.  A zero train or holdout vector raises
+    ValueError naming its vec_id.
 
     The argmax reproduces the judged total order EXACTLY, including the
-    brute form's rounding semantics: Spark's ``F.round(x, 6)`` is
+    oracle's rounding semantics: Spark's ``F.round(x, 6)`` is
     BigDecimal-HALF-UP on the double's shortest decimal repr, which
     ``np.round`` (binary half-to-even) can flip on half-tie values — so
     the row max is snapped with the same ``Decimal(repr(x))`` HALF_UP
@@ -1915,51 +1713,33 @@ def _semdecon_vectorized_exact(
         ]
     )
     if not hold:
-        # empty holdout: every train row audits as unflagged (the brute
-        # form's left-join semantics)
+        # empty holdout: every train row audits as unflagged (the
+        # oracle's left-join semantics)
         return train.select(
             F.col("train_id"),
             F.lit(None).cast("long").alias("nearest_test_id"),
             F.lit(None).cast("double").alias("max_cosine"),
             F.lit(0).alias("is_contaminated"),
         ).orderBy("train_id")
-    bc = spark.sparkContext.broadcast(
-        (
-            np.array([r.test_id for r in hold], dtype=np.int64),
-            np.array([r.tv for r in hold], dtype=np.float64),  # h×dim
-        )
-    )
+    test_ids = np.array([r.test_id for r in hold], dtype=np.int64)
+    tmat = np.array([r.tv for r in hold], dtype=np.float64)  # h×dim
+    tnorm = _fold_norms_np(tmat)
+    _require_nonzero(test_ids, tnorm)
+    bc = spark.sparkContext.broadcast((test_ids, tmat, tnorm))
 
     def score(batches):
         import pandas as pd  # noqa: F811 — executor-side import
 
         r6 = _round6_halfup
-
-        def fold_norm(mat):
-            # sqrt of the LEFT-FOLDED self-dot — term-for-term the IEEE
-            # op sequence of `_norm` (one f64 multiply, one f64 add per
-            # dim; numpy ufuncs fuse nothing, so no FMA) — bit-identical
-            # to the Catalyst/DuckDB column, not just close
-            acc = mat[:, 0] * mat[:, 0]
-            for d in range(1, mat.shape[1]):
-                acc = acc + mat[:, d] * mat[:, d]
-            return np.sqrt(acc)  # IEEE-754 sqrt == java.lang.Math.sqrt
-
-        test_ids, tmat = bc.value
-        tnorm = fold_norm(tmat)
+        test_ids, tmat, tnorm = bc.value
         for pdf in batches:
             if pdf.empty:
                 continue
             m = np.stack(pdf["cv"].to_numpy()).astype(np.float64)  # b×dim
-            # LEFT-FOLDED pairwise dot (vectorized over the b×h pair
-            # plane, folded over dim): replaces the BLAS matmul, whose
-            # pairwise summation could drift an ulp from the judged fold
-            # — this tier is now BIT-identical to the brute form, which
-            # is what lets oracle-compared SFs run it (r19 optimization)
-            dots = m[:, 0, None] * tmat[None, :, 0]
-            for d in range(1, m.shape[1]):
-                dots = dots + m[:, d, None] * tmat[None, :, d]
-            sims = dots / (fold_norm(m)[:, None] * tnorm[None, :])
+            train_ids = pdf["train_id"].to_numpy()
+            cn = _fold_norms_np(m)
+            _require_nonzero(train_ids, cn)
+            sims = _fold_dots_np(m, tmat) / (cn[:, None] * tnorm[None, :])
             # exact-HALF_UP argmax: snap each row's max, then resolve the
             # smallest test_id among the few candidates whose rounded value
             # can tie it (anything below max - 1e-6 provably rounds lower)
@@ -1972,7 +1752,7 @@ def _semdecon_vectorized_exact(
                 best[i] = min(ties)  # test_ids sorted → smallest index = smallest id
             yield pd.DataFrame(
                 {
-                    "train_id": pdf["train_id"].to_numpy(),
+                    "train_id": train_ids,
                     "nearest_test_id": test_ids[best],
                     "max_cosine": mc,
                     "is_contaminated": (mc >= SEMDECON_COSINE).astype("int32"),
@@ -1998,84 +1778,62 @@ def q_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: cosines round to 6 (the `cosine_topk` rule); the
     per-train argmax is a total order (max cosine, then smallest
-    test_id — expressed as ``max(struct(cosine, -test_id))``, a
-    lexicographic struct max identical on both engines); the flag
-    compares the ROUNDED cosine so both engines threshold the same
-    value.  The split is arithmetic on the id (vec_id mod 10) — RNG-free.
+    test_id); the flag compares the ROUNDED cosine so both engines
+    threshold the same value.  The split is arithmetic on the id
+    (vec_id mod 10) — RNG-free.
 
-    Scale shape: the test holdout is bounded (an eval suite, not a
-    corpus) and broadcasts; the score pass is one narrow scan of train
-    with per-partition state, and the per-train argmax is a GROUPED MAX
-    — map-side combined to |train| rows before any exchange, unlike a
-    row_number window, which would shuffle and sort the full
-    |train|×|test| score stream (at fixture scale both read ~8 s
-    because the 64-term dot-product pass dominates — the exchange the
-    grouped max removes is what matters at 100 TB, where the score
-    stream is corpus×holdout).
+    Scale paths (WIRED, not prose; the scale variable is the train ×
+    holdout PAIR count, see ``SEMDECON_VECTORIZED_MAX_ROWS``):
 
-    Scale paths (WIRED, not prose — three tiers, r16-recalibrated after
-    the sf1 probe measured the fold-order crossJoin going quadratic in
-    PAIRS: 13.7 s at 2k rows → ~1,030 s at 20k):
-
-    - ≤ ``SEMDECON_BRUTE_MAX_ROWS`` (the 500-row oracle smoke SFs): the
-      exact fold-order broadcast scorer — the form the DuckDB oracle
-      mirrors bit-for-bit, kept executing where it costs nothing;
-    - ≤ ``SEMDECON_VECTORIZED_MAX_ROWS`` (sf0.1 up): BIT-identical
-      semantics, vectorized — the bounded holdout collects to a h×dim
-      float64 matrix (driver model state, the `collect_centroids`
-      pattern) and one ``mapInPandas`` pass scores each train Arrow
-      batch with a vectorized per-dim LEFT FOLD (r19: replaces the BLAS
-      matmul — the fold replays the judged IEEE op sequence, so the
-      answer is equal bitwise, proven by collect-compare at sf0.1 and
-      the opt-in sf0.1 DuckDB sweep); per-row argmax keeps the judged
-      total order (round 6, then max cosine, then smallest test_id);
-      ~1000× cheaper per pair than the expression walk (sf1: 1,030 s →
-      ~10 s measured; sf0.1: 12.9 → 2.9 s);
+    - ≤ ``SEMDECON_VECTORIZED_MAX_ROWS`` corpus rows: EXACT — the
+      bounded holdout collects to a h×dim float64 matrix (driver model
+      state, the `collect_centroids` pattern) and one ``mapInPandas``
+      pass scores each train Arrow batch with the oracle's left fold
+      (`_semdecon_vectorized_exact`), bit-identical to the DuckDB oracle
+      and ~1000× cheaper per pair than the Catalyst expression walk
+      (sf1: 1,030 s → ~10 s measured);
     - above it, the IVF cell restriction (`_probe_cells_udf`, the
       `dense_shortlist` swap pattern) — each train row scores against
-      test vectors probing its cell (~holdout·nprobe/cells).  The left
+      test vectors probing its cell (~holdout·nprobe/cells), and the
+      per-train argmax is a GROUPED MAX of ``struct(cosine, -test_id)``
+      — map-side combined to |train| rows before any exchange, unlike a
+      row_number window over the corpus×holdout score stream.  The left
       join keeps every train row in the audit; a row whose cell no test
       vector probes reports NULL max_cosine and flag 0.  The approx max
       is over a candidate SUBSET, so flags can only be missed, never
-      invented — recall vs brute pinned by
+      invented — recall vs the exact tier pinned by
       ``tests/test_round12_invariants.py``."""
     emb = load_table(spark, sf_dir, "embeddings")
     is_test = (F.col("vec_id") % SEMDECON_TEST_MOD) == SEMDECON_TEST_RESIDUE
     test = emb.filter(is_test).select(
-        F.col("vec_id").alias("test_id"),
-        F.col("embedding").alias("tv"),
-        _norm(F.col("embedding")).alias("tn"),
+        F.col("vec_id").alias("test_id"), F.col("embedding").alias("tv")
     )
     train = emb.filter(~is_test).select(
-        F.col("vec_id").alias("train_id"),
-        F.col("embedding").alias("cv"),
-        _norm(F.col("embedding")).alias("cn"),
+        F.col("vec_id").alias("train_id"), F.col("embedding").alias("cv")
+    )
+    if _emb_count(emb, sf_dir) <= SEMDECON_VECTORIZED_MAX_ROWS:
+        return _semdecon_vectorized_exact(spark, train, test)
+    cents = collect_centroids(spark, sf_dir)
+    top1 = _probe_cells_udf(cents, 1)
+    topn = _probe_cells_udf(cents, SEMDECON_NPROBE)
+    # the bounded holdout probes its SEMDECON_NPROBE nearest cells and
+    # still broadcasts (holdout × nprobe rows); each train row carries
+    # its single top-1 cell, so a (train, test) pair occurs at most once
+    # and fan-out is ~holdout/cells·nprobe per row
+    test_cells = test.select(
+        "test_id", "tv", _norm(F.col("tv")).alias("tn"),
+        F.explode(topn(F.col("tv"))).alias("cell"),
+    )
+    train_cells = train.select(
+        "train_id", "cv", _norm(F.col("cv")).alias("cn"),
+        F.element_at(top1(F.col("cv")), 1).alias("cell"),
     )
     cosine = F.round(
         _dot(F.col("cv"), F.col("tv")) / (F.col("cn") * F.col("tn")), 6
     ).alias("cosine")
-    n_rows = _emb_count(emb, sf_dir)
-    if SEMDECON_BRUTE_MAX_ROWS < n_rows <= SEMDECON_VECTORIZED_MAX_ROWS:
-        return _semdecon_vectorized_exact(spark, train, test)
-    if n_rows > SEMDECON_VECTORIZED_MAX_ROWS:
-        cents = collect_centroids(spark, sf_dir)
-        top1 = _probe_cells_udf(cents, 1)
-        topn = _probe_cells_udf(cents, SEMDECON_NPROBE)
-        # the bounded holdout probes its SEMDECON_NPROBE nearest cells and
-        # still broadcasts (holdout × nprobe rows); each train row
-        # carries its single top-1 cell, so a (train, test) pair occurs
-        # at most once and fan-out is ~holdout/cells·nprobe per row
-        test_cells = test.withColumn("cell", F.explode(topn(F.col("tv"))))
-        train_cells = train.withColumn(
-            "cell", F.element_at(top1(F.col("cv")), 1)
-        )
-        scored = train_cells.join(
-            F.broadcast(test_cells), "cell", "left"
-        ).select("train_id", "test_id", cosine)
-    else:
-        scored = train.crossJoin(F.broadcast(test)).select(
-            "train_id", "test_id", cosine
-        )
+    scored = train_cells.join(F.broadcast(test_cells), "cell", "left").select(
+        "train_id", "test_id", cosine
+    )
     best = scored.groupBy("train_id").agg(
         F.max(
             F.struct(F.col("cosine"), (-F.col("test_id")).alias("neg_id"))

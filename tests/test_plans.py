@@ -325,12 +325,14 @@ def test_label_outliers_broadcast_and_group_limit(spark):
 def test_ivf_cell_assignment_is_arrow_matmul(spark):
     """Corpus→cell assignment is one Arrow-batched vectorized stage
     (numpy matmul vs the collected centroid matrix — the FAISS coarse
-    quantizer): no crossJoin row expansion, no aggregate, no shuffle on
-    the corpus side; the only join is the query-cell broadcast."""
+    quantizer) inside the pair kernel's MapInPandas pass: no crossJoin
+    row expansion, no aggregate, no join, no shuffle on the corpus
+    side."""
     from local_llm_iceberg_cdw_spark.operators.similarity import ivf_topk_results
 
     plan = plan_of(ivf_topk_results(spark, SF_SMOKE))
-    assert "ArrowEvalPython" in plan, plan
+    assert "MapInPandas" in plan, plan
+    assert "Join" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "SortMergeJoin" not in plan, plan
     assert "max_by" not in plan, plan
@@ -486,13 +488,14 @@ def test_bpe_merge_single_shuffle(spark):
 
 
 def test_hard_negative_mining_broadcast_and_group_limit(spark):
-    """Same plan as the exact top-k: queries broadcast, one corpus pass,
-    one window shuffle with WindowGroupLimit."""
+    """Same plan as the exact top-k: queries broadcast (a driver-side
+    broadcast variable, so no join), one corpus MapInPandas pass, one
+    window shuffle with WindowGroupLimit."""
     from local_llm_iceberg_cdw_spark.operators.similarity import q_hard_negative_mining
 
     plan = plan_of(q_hard_negative_mining(spark, SF_SMOKE))
     assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert "BroadcastExchange" in plan, plan
+    assert plan.count("MapInPandas") == 1 and "Join" not in plan, plan
     assert "WindowGroupLimit" in plan, plan
 
 
@@ -1015,17 +1018,18 @@ def test_nb_classifier_broadcasts_the_model_grid(spark):
 
 
 def test_semantic_decontamination_broadcasts_the_holdout(spark):
-    """The test holdout attaches as a broadcast (BNLJ for the
-    crossJoin of the bounded holdout) and the per-train argmax window
-    partitions on train_id — never a CartesianProduct, never Python."""
+    """The bounded test holdout ships as a broadcast variable and train
+    is scored in one narrow MapInPandas pass — no join of any kind
+    (never a CartesianProduct), no hash exchange; the only exchange is
+    the final train_id ordering."""
     from local_llm_iceberg_cdw_spark.operators.similarity import (
         q_semantic_decontamination,
     )
 
     plan = plan_of(q_semantic_decontamination(spark, SF_SMOKE))
-    assert "BroadcastNestedLoopJoin" in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "Python" not in plan, plan
+    assert plan.count("MapInPandas") == 1, plan
+    assert "Join" not in plan and "CartesianProduct" not in plan, plan
+    assert "Exchange hashpartitioning" not in plan, plan
 
 
 def test_record_linkage_blocking_is_an_equi_join(spark):

@@ -106,22 +106,22 @@ def test_files_metadata_lists_equality_delete_files(spark, tmp_path):
 
 
 def test_semantic_decontamination_ivf_path_engages_and_recalls(spark, monkeypatch):
-    """The brute→IVF candidate swap in semantic_decontamination is a
+    """The exact→IVF candidate swap in semantic_decontamination is a
     real code path (VERDICT r11 'what's wrong' #1): forcing the
     threshold to 0 must (a) keep every train row in the audit, (b)
     never invent a contamination flag (approx max is over a candidate
-    subset, so approx flags ⊆ brute flags), and (c) recall enough of
-    the brute flags on this isotropic fixture — whose flagged pairs sit
+    subset, so approx flags ⊆ exact flags), and (c) recall enough of
+    the exact flags on this isotropic fixture — whose flagged pairs sit
     at cosine ≈ 0.4, far from the near-copy geometry (≈ 0.95) the audit
-    targets, so this is the recall floor, not the expected rate."""
+    targets, so this is the recall floor, not the expected rate.  The
+    reference is the exact tier the DuckDB oracle checks."""
     from local_llm_iceberg_cdw_spark.operators import similarity as sim
 
     brute = {
         r.train_id: (r.max_cosine, r.is_contaminated)
         for r in sim.q_semantic_decontamination(spark, SF_SMOKE).collect()
     }
-    monkeypatch.setattr(sim, "SEMDECON_BRUTE_MAX_ROWS", 0)
-    monkeypatch.setattr(sim, "SEMDECON_VECTORIZED_MAX_ROWS", 0)  # r16 middle tier
+    monkeypatch.setattr(sim, "SEMDECON_VECTORIZED_MAX_ROWS", 0)
     approx = {
         r.train_id: (r.max_cosine, r.is_contaminated)
         for r in sim.q_semantic_decontamination(spark, SF_SMOKE).collect()
