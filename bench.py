@@ -655,7 +655,7 @@ def _bench_facade_drain(spark, sf_dir):
 def _bench_facade_pipe(spark, sf_dir):
     # PRODUCTION table→table path: one availableNow readStream →
     # writeStream.format("snapshot_table") run (executor-staged parquet +
-    # sessionless epoch commit)
+    # an epoch commit through SnapshotParquetTable.commit_staged)
     import uuid
 
     if _FACADE_STATE["src"] is None:

@@ -346,6 +346,15 @@ class SnapshotParquetTable:
         with open(self._refs_path()) as f:
             return json.load(f)
 
+    def _refs_bytes(self) -> bytes | None:
+        """Raw refs-file content, or None when absent — what a staged
+        commit compares before publishing to catch a refs-only mover."""
+        try:
+            with open(self._refs_path(), "rb") as f:
+                return f.read()
+        except FileNotFoundError:
+            return None
+
     def _commit_refs(self, refs: dict) -> None:
         tmp = self._refs_path() + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
@@ -722,39 +731,19 @@ class SnapshotParquetTable:
             df = df.sortWithinPartitions(*sort_order)
         sid = (snaps[-1].snapshot_id + 1) if snaps else 1
         data_dir = os.path.join(self.path, f"data-snap-{sid:06d}")
-        prev_dirs = parent.data_dirs if parent else []
-        # Iceberg-style manifest statistics: per-file column bounds from
-        # the parquet footers just written.  Parent stats carry forward —
-        # an append never invalidates existing files' bounds.  (Here the
-        # footers are read driver-side; at scale the writer tasks report
-        # bounds with their commit message, same as Iceberg's writers.)
-        file_stats = dict(parent.file_stats) if parent and parent.file_stats else {}
-        file_stats[data_dir] = self._write_data_dir(
-            df, data_dir, partition_by, cluster=cluster
-        )
+        dir_stats = self._write_data_dir(df, data_dir, partition_by, cluster=cluster)
         snaps.append(
-            Snapshot(
-                snapshot_id=sid,
-                timestamp_ms=timestamp_ms if timestamp_ms is not None else int(time.time() * 1000),
-                operation="append",
-                data_dirs=[*prev_dirs, data_dir],
+            self._append_snapshot(
+                parent,
+                sid,
+                data_dir,
+                dir_stats,
                 partition_by=partition_by,
                 schema_json=schema_json,
-                parent_snapshot_id=parent.snapshot_id if parent else None,
-                # pending equality deletes keep masking the OLD files; the
-                # new file postdates them and is never anti-joined
-                delete_files=parent.delete_files if parent else None,
-                # a spec change (or inherited mix) forces per-dir reads
-                mixed_layout=bool(
-                    parent is not None
-                    and (
-                        parent.mixed_layout
-                        or (evolve_partition_spec and partition_by != parent.partition_by)
-                    )
-                ),
                 sort_order=sort_order,
-                file_stats=file_stats,
-                commit_props=dict(commit_props) if commit_props else None,
+                commit_props=commit_props,
+                timestamp_ms=timestamp_ms,
+                evolve_partition_spec=evolve_partition_spec,
             )
         )
         self._commit(snaps)
@@ -764,6 +753,185 @@ class SnapshotParquetTable:
             self._commit_refs(refs)
         else:
             self._advance_main(sid)
+        return sid
+
+    @staticmethod
+    def _append_snapshot(
+        parent: Snapshot | None,
+        sid: int,
+        data_dir: str,
+        dir_stats: list[dict],
+        *,
+        partition_by: list[str] | None,
+        schema_json: str,
+        sort_order: list[str] | None,
+        commit_props: dict | None,
+        timestamp_ms: int | None = None,
+        evolve_partition_spec: bool = False,
+    ) -> Snapshot:
+        """The manifest entry of one append: the parent's data dirs plus
+        ``data_dir`` — shared by ``append`` (Spark-written dir) and
+        ``commit_staged`` (task-staged files)."""
+        # Iceberg-style manifest statistics: per-file column bounds from
+        # the parquet footers just written.  Parent stats carry forward —
+        # an append never invalidates existing files' bounds.  (Here the
+        # footers are read driver-side; at scale the writer tasks report
+        # bounds with their commit message, same as Iceberg's writers.)
+        file_stats = dict(parent.file_stats) if parent and parent.file_stats else {}
+        file_stats[data_dir] = dir_stats
+        return Snapshot(
+            snapshot_id=sid,
+            timestamp_ms=timestamp_ms if timestamp_ms is not None else int(time.time() * 1000),
+            operation="append",
+            data_dirs=[*(parent.data_dirs if parent else []), data_dir],
+            partition_by=partition_by,
+            schema_json=schema_json,
+            parent_snapshot_id=parent.snapshot_id if parent else None,
+            # pending equality deletes keep masking the OLD files; the
+            # new file postdates them and is never anti-joined
+            delete_files=parent.delete_files if parent else None,
+            # a spec change (or inherited mix) forces per-dir reads
+            mixed_layout=bool(
+                parent is not None
+                and (
+                    parent.mixed_layout
+                    or (evolve_partition_spec and partition_by != parent.partition_by)
+                )
+            ),
+            sort_order=sort_order,
+            file_stats=file_stats,
+            commit_props=dict(commit_props) if commit_props else None,
+        )
+
+    def commit_staged(
+        self,
+        files: list[tuple[str, str]],
+        schema_json: str,
+        commit_props: dict | None = None,
+        partition_by: list[str] | None = None,
+    ) -> int:
+        """Publish parquet files that writer tasks already staged as ONE
+        append snapshot; returns its id.  This is the commit half of
+        ``writeStream.format("snapshot_table")`` (streaming/
+        table_source.py), which Spark runs in a Python DataSource worker
+        where no SparkSession exists — so it touches no ``self.spark``:
+        footer bounds (``_collect_file_stats`` is pure pyarrow), the
+        manifest and the refs file only.  Exactly the Iceberg writer
+        split — tasks write files, the committer writes metadata.
+
+        ``files`` pairs each staged file with the path it keeps under the
+        snapshot's data dir (its hive layout path).  ``partition_by``
+        names the layout the files were staged under: identity and
+        arithmetic transforms (the sink derives ``days()``/``truncate()``
+        etc. per Arrow batch); it must equal the table's spec — no spec
+        or schema evolution on this path.  ``bucket()`` specs and evolving
+        ingestion go through the foreachBatch sinks, which have the full
+        verb surface.  A table created empty takes its schema and spec
+        from this commit."""
+        import shutil
+
+        from pyspark.sql.types import StructType
+
+        partition_by = list(partition_by) if partition_by else None
+        for fld in partition_by or []:
+            # arithmetic transforms (days/months/years/hours/truncate) are
+            # derivable in the Arrow writer and pinned ≡ the Spark-side dir
+            # names; bucket() stays gated — Spark's murmur3_x86_32 has no
+            # exact pyarrow cross-check, and a wrong dir name silently
+            # mis-prunes (use a foreachBatch sink for bucket layouts)
+            if parse_partition_field(fld)["transform"] == "bucket":
+                raise ValueError(f"staged commit cannot take bucket() layouts, got {fld!r}")
+        snaps = self._load()
+        staged_refs = self._refs_bytes()  # what _head resolves main from
+        parent = self._head(snaps) if snaps else None
+        if parent is not None and parent.partition_by != partition_by:
+            raise ValueError(
+                f"staged layout {partition_by} does not match the table's spec "
+                f"{parent.partition_by} (no spec evolution on this path)"
+            )
+        if parent is not None and parent.schema_json:
+
+            def cols(js: str) -> list[tuple[str, str]]:
+                fields = StructType.fromJson(json.loads(js)).fields
+                return [(f.name, f.dataType.simpleString()) for f in fields]
+
+            want, got = cols(parent.schema_json), cols(schema_json)
+            if want != got:
+                raise ValueError(
+                    f"schema mismatch appending to {self.path}: table has "
+                    f"{want}, stream writes {got} (no evolution on this path)"
+                )
+            schema_json = parent.schema_json  # keep nullability flags stable
+        expected_tail = snaps[-1].snapshot_id if snaps else None
+        sid = expected_tail + 1 if snaps else 1
+        data_dir = os.path.join(self.path, f"data-snap-{sid:06d}")
+        # NO exist_ok: a crash between the moves below and the manifest
+        # commit leaks the dir, and the replayed epoch picks the SAME sid
+        # — merging into the leaked dir would silently double every row
+        # of the crashed attempt inside one snapshot.  Failing loudly
+        # matches the format's mode("errorifexists") write contract;
+        # recovery is remove_orphan_files, then the replay commits clean.
+        try:
+            os.makedirs(data_dir)
+        except FileExistsError:
+            raise RuntimeError(
+                f"data dir {data_dir} already exists — a previous epoch "
+                "crashed between staging and its manifest commit; run "
+                "remove_orphan_files() on the table, then restart the stream"
+            ) from None
+        for f, rel in files:
+            dest = os.path.join(data_dir, rel)
+            os.makedirs(os.path.dirname(dest), exist_ok=True)
+            shutil.move(f, dest)
+        snaps.append(
+            self._append_snapshot(
+                parent,
+                sid,
+                data_dir,
+                self._collect_file_stats(data_dir),
+                partition_by=partition_by,
+                schema_json=schema_json,
+                sort_order=parent.sort_order if parent else None,
+                commit_props=commit_props,
+            )
+        )
+        # optimistic-concurrency recheck: the committer runs in its own
+        # DataSource worker process, so a table verb can commit between
+        # the load above (the moves and footer scan take real time) and
+        # the rename below — os.replace would then silently clobber that
+        # snapshot (lost update).  A verb that writes data-snap-{sid}
+        # fails on the dir claimed above instead; the others (MOR delete,
+        # rename, ref moves) are caught here.  Iceberg's
+        # commit path does the same CAS-and-retry against the catalog.
+        # The tail compare misses refs-only movers: a rollback_to /
+        # fast_forward repoints refs['main'] WITHOUT a manifest entry, and
+        # publishing on the pre-rollback head would resurrect the
+        # rolled-back-over lineage — so the refs file is compared too.
+        # The remaining microsecond window is the documented
+        # single-writer residue.
+        current = self._load()
+        current_tail = current[-1].snapshot_id if current else None
+        conflict = None
+        if current_tail != expected_tail:
+            conflict = (
+                f"concurrent commit detected on {self.path}: manifest tail moved "
+                f"from {expected_tail} to {current_tail} while this append was "
+                "staged — rerun the commit (the replayed epoch will re-plan "
+                "against the new head)"
+            )
+        elif self._refs_bytes() != staged_refs:
+            conflict = (
+                f"concurrent ref update detected on {self.path}: _refs.json "
+                "changed while this append was staged (a rollback_to or "
+                "fast_forward moved main) — rerun the commit against the new head"
+            )
+        if conflict is not None:
+            # unpublished and created above without exist_ok, so no one
+            # else wrote into it: free the sid for the replayed epoch
+            shutil.rmtree(data_dir)
+            raise RuntimeError(conflict)
+        self._commit(snaps)
+        self._advance_main(sid)
         return sid
 
     @staticmethod
@@ -1944,6 +2112,15 @@ class SnapshotParquetTable:
             )
         )
 
+    def _main_ancestry(self) -> list[Snapshot]:
+        """Oldest-first snapshots along main's ancestry — the one walk
+        behind ``main_lineage`` and ``sessionless_main_lineage``."""
+        snaps = self._load()
+        if not snaps:
+            return []
+        by_id = {s.snapshot_id: s for s in snaps}
+        return self._ancestry(self._head(snaps), by_id)[::-1]
+
     def main_lineage(self) -> list[tuple[int, str]]:
         """``(snapshot_id, operation)`` along the CURRENT main ancestry,
         oldest first — the offset axis a table-as-stream subscription
@@ -1951,15 +2128,7 @@ class SnapshotParquetTable:
         Manifest-only: O(snapshots), no data IO.  Branch commits off the
         main chain are not part of this lineage (same contract as
         ``read_changes``)."""
-        snaps = self._load()
-        if not snaps:
-            return []
-        by_id = {s.snapshot_id: s for s in snaps}
-        head = self._head(snaps)
-        return [
-            (s.snapshot_id, s.operation)
-            for s in reversed(self._ancestry(head, by_id))
-        ]
+        return [(s.snapshot_id, s.operation) for s in self._main_ancestry()]
 
     def read_incremental(self, from_version: int, to_version: int) -> DataFrame:
         """Rows added AFTER ``from_version``, up to ``to_version`` —
@@ -2828,220 +2997,20 @@ class SnapshotParquetTable:
         return df.filter(residual), len(kept), len(total)
 
 
-def _sessionless_load(table_path: str) -> list[dict]:
-    mf = os.path.join(table_path, MANIFEST)
-    if not os.path.exists(mf):
-        raise FileNotFoundError(f"not a snapshot table (no {MANIFEST}): {table_path}")
-    with open(mf) as f:
-        return json.load(f)
-
-
-def _read_refs_bytes(table_path: str) -> bytes | None:
-    """Raw ``_refs.json`` content, or None when absent — the sessionless
-    commit's staging snapshot for its refs-aware concurrency recheck."""
-    refs_path = os.path.join(table_path, REFS)
-    try:
-        with open(refs_path, "rb") as f:
-            return f.read()
-    except FileNotFoundError:
-        return None
-
-
-def _sessionless_head(table_path: str, raw: list[dict]) -> dict | None:
-    """Main head without a table instance: the refs pointer when refs
-    exist, else the manifest tail — mirrors ``SnapshotParquetTable._head``."""
-    if not raw:
-        return None
-    refs_path = os.path.join(table_path, REFS)
-    if os.path.exists(refs_path):
-        with open(refs_path) as f:
-            refs = json.load(f)
-        if "main" in refs:
-            by_id = {s["snapshot_id"]: s for s in raw}
-            return by_id[refs["main"]["snapshot_id"]]
-    return raw[-1]
-
-
 def sessionless_main_lineage(table_path: str) -> list[dict]:
-    """Oldest-first RAW snapshot dicts along main's ancestry, with no
+    """Oldest-first snapshot dicts along main's ancestry, with no
     SparkSession — the driver-side planner primitive behind the
     ``readStream.format("snapshot_table")`` facade (streaming/
     table_source.py), which must follow the SAME lineage as the table
     class or a WAP branch append / ``rollback_to`` makes the stream and
     the driver loop diverge (streaming unpublished branch rows, or a
-    rolled-back-over snapshot's files).  Reuses the table class's exact
-    walk — ``_load``'s parent backfill, ``_head``'s refs resolution,
-    ``_ancestry`` — via an instance bound to no session; none of those
-    paths touch ``self.spark``."""
+    rolled-back-over snapshot's files).  It is the table class's own
+    walk (``_main_ancestry``) on an instance bound to no session; none
+    of those paths touch ``self.spark``."""
     t = SnapshotParquetTable(None, table_path)
-    snaps = t._load()
-    if not snaps:
-        return []
-    by_id = {s.snapshot_id: s for s in snaps}
-    head = t._head(snaps)
-    return [dict(s.__dict__) for s in reversed(t._ancestry(head, by_id))]
-
-
-def prewritten_batch_committed(
-    table_path: str, query_id: str, batch_id: int, run_id: str | None = None
-) -> bool:
-    """Sessionless twin of ``SnapshotParquetTable.batch_committed`` (same
-    scope semantics, including the folded ``retained_ledger``) — for
-    callers with no SparkSession, i.e. the streaming-sink facade's
-    ``commit()``, which Spark runs in a Python DataSource worker."""
-    def scope_ok(stored_run) -> bool:
-        return stored_run == run_id if run_id is not None else True
-
-    for s in _sessionless_load(table_path):
-        p = s.get("commit_props") or {}
-        if (
-            p.get("streaming_query_id") == query_id
-            and p.get("batch_id") == batch_id
-            and scope_ok(p.get("streaming_run_id"))
-        ):
-            return True
-        for e in p.get("retained_ledger") or []:
-            if (
-                e.get("streaming_query_id") == query_id
-                and batch_id <= e.get("max_batch_id", -1)
-                and scope_ok(e.get("streaming_run_id"))
-            ):
-                return True
-    return False
-
-
-def commit_prewritten_append(
-    table_path: str,
-    data_dir: str,
-    schema_json: str,
-    commit_props: dict | None = None,
-    partition_by: list[str] | None = None,
-) -> int:
-    """SESSIONLESS append: register an already-written parquet dir as one
-    snapshot — the manifest-level primitive behind
-    ``writeStream.format("snapshot_table")`` (streaming/table_source.py),
-    whose ``commit()`` Spark invokes in a Python DataSource worker where
-    no SparkSession exists.  Executors have already written the data
-    files (Arrow-batched); this is the atomic metadata commit: per-file
-    bounds from the parquet footers (``_collect_file_stats`` is pure
-    pyarrow), parent stats carried forward, write-temp-then-rename, main
-    ref advanced.  Exactly the Iceberg writer split — tasks write files,
-    the committer writes metadata.
-
-    Scope: identity and arithmetic-transform partition specs
-    (``partition_by`` names the hive layout the staged files already sit
-    under — the sink's tasks fanned them out with
-    ``pyarrow.dataset.write_dataset``, deriving ``days()``/``truncate()``
-    etc. per Arrow batch; this commit only verifies spec agreement and
-    records it) and no schema evolution; ``bucket()`` specs and evolving
-    ingestion go through the foreachBatch sinks, which have the full
-    verb surface.  An empty
-    manifest (a table ``create()`` is mid-flight elsewhere) cannot be a
-    target — the table must exist with its schema fixed, or this call
-    fixes schema AND spec on a table created empty."""
-    from pyspark.sql.types import StructType
-
-    partition_by = list(partition_by) if partition_by else None
-    raw = _sessionless_load(table_path)
-    staged_refs = _read_refs_bytes(table_path)  # what _sessionless_head resolves
-    head = _sessionless_head(table_path, raw)
-    head_spec = head.get("partition_by") if head else None
-    if head is not None and head_spec != partition_by:
-        raise ValueError(
-            f"prewritten append staged layout {partition_by} does not match "
-            f"the table's spec {head_spec} (no spec evolution on this path)"
-        )
-    for fld in partition_by or []:
-        # arithmetic transforms (days/months/years/hours/truncate) are
-        # derivable in the Arrow writer and pinned ≡ the Spark-side dir
-        # names; bucket() stays gated — Spark's murmur3_x86_32 has no
-        # exact pyarrow cross-check, and a wrong dir name silently
-        # mis-prunes (use a foreachBatch sink for bucket layouts)
-        if parse_partition_field(fld)["transform"] == "bucket":
-            raise ValueError(
-                f"prewritten append cannot take bucket() layouts, got {fld!r}"
-            )
-    if head is not None and head.get("schema_json"):
-        want = [
-            (f.name, f.dataType.simpleString())
-            for f in StructType.fromJson(json.loads(head["schema_json"])).fields
-        ]
-        got = [
-            (f.name, f.dataType.simpleString())
-            for f in StructType.fromJson(json.loads(schema_json)).fields
-        ]
-        if want != got:
-            raise ValueError(
-                f"schema mismatch appending to {table_path}: table has "
-                f"{want}, stream writes {got} (no evolution on this path)"
-            )
-        schema_json = head["schema_json"]  # keep nullability flags stable
-    sid = (raw[-1]["snapshot_id"] + 1) if raw else 1
-    file_stats = dict(head.get("file_stats") or {}) if head else {}
-    file_stats[data_dir] = SnapshotParquetTable._collect_file_stats(data_dir)
-    raw.append(
-        {
-            "snapshot_id": sid,
-            "timestamp_ms": int(time.time() * 1000),
-            "operation": "append",
-            "data_dirs": [*(head["data_dirs"] if head else []), data_dir],
-            "partition_by": partition_by,
-            "schema_json": schema_json,
-            "parent_snapshot_id": head["snapshot_id"] if head else None,
-            "delete_files": head.get("delete_files") if head else None,
-            "mixed_layout": bool(head.get("mixed_layout")) if head else False,
-            "sort_order": None,
-            "file_stats": file_stats,
-            "commit_props": dict(commit_props) if commit_props else None,
-        }
-    )
-    mf = os.path.join(table_path, MANIFEST)
-    # optimistic-concurrency recheck: this verb runs in a separate
-    # DataSource worker process, so a foreachBatch sink or table-class
-    # verb can commit between our load above (the footer scan between
-    # them takes real time) and the rename below — os.replace would then
-    # silently clobber that snapshot (lost update).  Re-read immediately
-    # before publishing and fail loudly if the tail moved; Iceberg's
-    # commit path does the same CAS-and-retry against the catalog.  The
-    # remaining microsecond window is the documented single-writer
-    # residue — concurrent writers to ONE table should serialize on the
-    # stream sink or the foreachBatch path, not both.
-    current_tail = (_sessionless_load(table_path) or [{}])[-1].get("snapshot_id")
-    expected_tail = raw[-2]["snapshot_id"] if len(raw) > 1 else None
-    if current_tail != expected_tail:
-        raise RuntimeError(
-            f"concurrent commit detected on {table_path}: manifest tail moved "
-            f"from {expected_tail} to {current_tail} while this append was "
-            "staged — rerun the commit (the replayed epoch will re-plan "
-            "against the new head)"
-        )
-    # the tail compare alone misses refs-only movers: a concurrent
-    # rollback_to / fast_forward repoints refs['main'] WITHOUT appending
-    # a manifest entry, and publishing this epoch parented on the
-    # pre-rollback head would resurrect the rolled-back-over lineage.
-    # Byte-compare the refs file against what _sessionless_head resolved
-    # at staging (VERDICT r18 What's-wrong #2)
-    if _read_refs_bytes(table_path) != staged_refs:
-        raise RuntimeError(
-            f"concurrent ref update detected on {table_path}: _refs.json "
-            "changed while this append was staged (a rollback_to or "
-            "fast_forward moved main) — rerun the commit against the new head"
-        )
-    tmp = mf + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(raw, f, indent=2)
-    os.replace(tmp, mf)
-    refs_path = os.path.join(table_path, REFS)
-    if os.path.exists(refs_path):
-        with open(refs_path) as f:
-            refs = json.load(f)
-        if refs:
-            refs["main"] = {"snapshot_id": sid, "type": "branch"}
-            rtmp = refs_path + f".tmp-{uuid.uuid4().hex}"
-            with open(rtmp, "w") as f:
-                json.dump(refs, f, indent=2)
-            os.replace(rtmp, refs_path)
-    return sid
+    if not t.exists():
+        raise FileNotFoundError(f"not a snapshot table (no {MANIFEST}): {table_path}")
+    return [dict(s.__dict__) for s in t._main_ancestry()]
 
 
 class Namespace:

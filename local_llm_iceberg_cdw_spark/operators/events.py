@@ -1170,7 +1170,7 @@ def q_stream_table_pipe_drained(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python DataSource worker with NO SparkSession — performs the pure-
     metadata snapshot append (footer bounds, parent-stats carry, atomic
     manifest rename) stamped with the ``(queryName, batchId)`` ledger
-    entry (``commit_prewritten_append``).
+    entry (``SnapshotParquetTable.commit_staged``).
 
     Judged in-hash: source = create + 2 appends (event_id % 4 slices
     0–2); pipe drain #1, late slice (% 4 == 3) lands, pipe drain #2 —

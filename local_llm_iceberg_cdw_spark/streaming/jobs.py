@@ -352,6 +352,34 @@ def _resolve_run_id(state: dict, checkpoint_dir: str | None) -> str | None:
     )
 
 
+def _ledgered_sink(table, query_id: str, checkpoint_dir: str | None, commit, create_kwargs=None):
+    """The run-scoped batch-id ledger both idempotent sinks share: a
+    batch the same run already committed is skipped; any other batch is
+    committed by ``commit(batch_df, props)`` with its ledger entry in
+    ``props``, or creates the table when it does not exist yet."""
+    if not hasattr(table, "batch_committed"):
+        raise TypeError(
+            "table lacks the batch-id ledger surface (batch_committed/"
+            "commit_props) — wrap it or write directly via your own "
+            "foreachBatch if at-least-once is acceptable"
+        )
+    state = {"run_id": None if checkpoint_dir else uuid.uuid4().hex}
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        rid = _resolve_run_id(state, checkpoint_dir)
+        props = {"streaming_query_id": query_id, "batch_id": batch_id}
+        if rid is not None:
+            props["streaming_run_id"] = rid
+        if table.exists():
+            if table.batch_committed(query_id, batch_id, run_id=rid):
+                return  # replayed micro-batch: already committed
+            commit(batch_df, props)
+        else:
+            table.create(batch_df, commit_props=props, **(create_kwargs or {}))
+
+    return sink
+
+
 def make_idempotent_snapshot_sink(
     table,
     query_id: str,
@@ -391,33 +419,16 @@ def make_idempotent_snapshot_sink(
     match a scoped check — the ambiguous legacy case degrades to
     at-most-duplicate, never to a skipped batch."""
 
-    if not hasattr(table, "batch_committed"):
-        raise TypeError(
-            "table lacks the batch-id ledger surface (batch_committed/"
-            "commit_props) — wrap it or append directly via your own "
-            "foreachBatch if at-least-once is acceptable"
-        )
-    state = {"run_id": None if checkpoint_dir else uuid.uuid4().hex}
-
-    def run_id() -> str | None:
-        return _resolve_run_id(state, checkpoint_dir)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        rid = run_id()
-        props = {"streaming_query_id": query_id, "batch_id": batch_id}
-        if rid is not None:
-            props["streaming_run_id"] = rid
-        if table.exists():
-            if table.batch_committed(query_id, batch_id, run_id=rid):
-                return  # replayed micro-batch: already committed
-            table.append(batch_df, commit_props=props)
-        else:
-            # create_kwargs lets the FIRST batch fix table-level layout
-            # metadata (e.g. partition_by=["cell"] for a streamed ANN
-            # index) — later appends inherit the spec as usual
-            table.create(batch_df, commit_props=props, **(create_kwargs or {}))
-
-    return sink
+    # create_kwargs lets the FIRST batch fix table-level layout metadata
+    # (e.g. partition_by=["cell"] for a streamed ANN index) — later
+    # appends inherit the spec as usual
+    return _ledgered_sink(
+        table,
+        query_id,
+        checkpoint_dir,
+        lambda df, props: table.append(df, commit_props=props),
+        create_kwargs,
+    )
 
 
 def make_idempotent_merge_sink(
@@ -425,16 +436,14 @@ def make_idempotent_merge_sink(
     key_cols: list[str],
     query_id: str,
     checkpoint_dir: str | None = None,
-    mor: bool = True,
 ):
     """``foreachBatch`` MERGE-upsert sink — the CDC ingestion loop for
     keyed change feeds (the Debezium → lakehouse pattern; Iceberg/Delta
     document it as foreachBatch + MERGE INTO): each micro-batch upserts
     by ``key_cols`` instead of appending, so the table holds the LATEST
-    row per key, not an event log.  ``mor=True`` (default) commits one
-    equality-delete file + one data file per batch (O(batch) write —
-    the only viable shape on a continuous feed); ``mor=False`` uses the
-    copy-on-write twin.
+    row per key, not an event log.  Each batch commits merge-on-read:
+    one equality-delete file + one data file (O(batch) write — the only
+    viable shape on a continuous feed).
 
     Replay safety is the same run-scoped batch-id ledger as the append
     sink: a MERGE re-applied to its own result is value-idempotent, but
@@ -442,31 +451,24 @@ def make_idempotent_merge_sink(
     ledger no-op keeps exactly-once TABLE STATE and exactly-one-commit
     per batch.  The batch itself must be key-unique (the MERGE contract);
     compact a multi-event batch to its latest row per key upstream."""
-    if not hasattr(table, "batch_committed"):
-        raise TypeError(
-            "table lacks the batch-id ledger surface (batch_committed/"
-            "commit_props) — wrap it or merge directly via your own "
-            "foreachBatch if at-least-once is acceptable"
-        )
-    state = {"run_id": None if checkpoint_dir else uuid.uuid4().hex}
+    return _ledgered_sink(
+        table,
+        query_id,
+        checkpoint_dir,
+        lambda df, props: table.merge_mor(df, key_cols, commit_props=props),
+    )
 
-    def run_id() -> str | None:
-        return _resolve_run_id(state, checkpoint_dir)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        rid = run_id()
-        props = {"streaming_query_id": query_id, "batch_id": batch_id}
-        if rid is not None:
-            props["streaming_run_id"] = rid
-        if table.exists():
-            if table.batch_committed(query_id, batch_id, run_id=rid):
-                return  # replayed micro-batch: already committed
-            verb = table.merge_mor if mor else table.merge
-            verb(batch_df, key_cols, commit_props=props)
-        else:
-            table.create(batch_df, commit_props=props)
-
-    return sink
+def _start_foreach_batch(stream_df: DataFrame, sink, query_name: str, checkpoint_dir: str | None):
+    """The availableNow ``foreachBatch`` wiring both ingestion jobs use."""
+    writer = (
+        stream_df.writeStream.foreachBatch(sink)
+        .queryName(query_name)
+        .trigger(availableNow=True)
+    )
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    return writer.start()
 
 
 def stream_merge_to_snapshot_table(
@@ -475,22 +477,86 @@ def stream_merge_to_snapshot_table(
     key_cols: list[str],
     query_name: str = "snapshot_merge",
     checkpoint_dir: str | None = None,
-    mor: bool = True,
 ):
     """Streaming MERGE-upsert ingestion: the keyed-change-feed twin of
     ``stream_append_to_snapshot_table`` — every micro-batch becomes one
     MERGE commit, so downstream readers always see latest-row-per-key
     state with full time travel across batches."""
-    writer = (
-        stream_df.writeStream.foreachBatch(
-            make_idempotent_merge_sink(table, key_cols, query_name, checkpoint_dir, mor)
-        )
-        .queryName(query_name)
-        .trigger(availableNow=True)
+    return _start_foreach_batch(
+        stream_df,
+        make_idempotent_merge_sink(table, key_cols, query_name, checkpoint_dir),
+        query_name,
+        checkpoint_dir,
     )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+
+
+def _drain_subscription(checkpoint_dir: str, sink, read_batch, groups, start_at=None) -> list[int]:
+    """The two-phase offset log both table subscriptions drain through
+    (``stream_table_changes``, ``stream_table_cdc``; see the former for
+    the contract): mint ``<checkpoint>/metadata``, read ``offsets``,
+    replay a pinned group verbatim, then for each planned group pin its
+    ``(start, end]`` extent BEFORE the sink runs and commit
+    ``last_snapshot_id = end`` after it returns.
+
+    ``groups(last)`` yields ``(end, emit)`` in lineage order — ``emit``
+    False advances the offset past a skipped commit with no batch;
+    ``read_batch(start, end)`` builds a batch's DataFrame; ``start_at``
+    bounds a FRESH checkpoint's catch-up.  Returns the batch ids (group
+    END snapshot ids) processed this drain."""
+    import json as _json
+
+    os.makedirs(checkpoint_dir, exist_ok=True)
+    meta_path = os.path.join(checkpoint_dir, "metadata")
+    if not os.path.exists(meta_path):
+        tmp = meta_path + ".tmp"
+        with open(tmp, "w") as f:
+            _json.dump({"id": uuid.uuid4().hex}, f)
+        os.replace(tmp, meta_path)
+    off_path = os.path.join(checkpoint_dir, "offsets")
+
+    def write_state(state: dict) -> None:
+        tmp = off_path + ".tmp"
+        with open(tmp, "w") as f:
+            _json.dump(state, f)
+        os.replace(tmp, off_path)
+
+    processed: list[int] = []
+
+    def run_batch(start: int, end: int) -> None:
+        sink(read_batch(start, end), end)
+        write_state({"last_snapshot_id": end})
+        processed.append(end)
+
+    state = {"last_snapshot_id": 0}
+    if os.path.exists(off_path):
+        with open(off_path) as f:
+            state = _json.load(f)
+    elif start_at:
+        # bounded catch-up applies to fresh checkpoints only; 0 keeps the
+        # unbounded start.  Persist immediately — the lineage start is
+        # pinned even if this drain delivers nothing, exactly as Spark
+        # persists a source's initialOffset
+        state = {"last_snapshot_id": start_at}
+        write_state(state)
+    last = int(state.get("last_snapshot_id", 0))
+    pinned = state.get("pending")
+    if pinned is not None:
+        # phase-2 recovery: a prior drain planned this group and may have
+        # crashed anywhere between the plan write and the offset commit.
+        # Honor the pinned extent verbatim — regrouping against today's
+        # lineage could fold a late commit into the replay and mint a new
+        # batch id, double-committing the original rows past the ledger.
+        run_batch(int(pinned["start"]), int(pinned["end"]))
+        last = int(pinned["end"])
+    for end, emit in groups(last):
+        if emit:
+            # phase 1: pin the planned (start, end] extent BEFORE the sink
+            write_state({"last_snapshot_id": last, "pending": {"start": last, "end": end}})
+            run_batch(last, end)
+        else:
+            write_state({"last_snapshot_id": end})
+        last = end
+    return processed
 
 
 def stream_table_changes(
@@ -543,84 +609,40 @@ def stream_table_changes(
     Scale: the drain's driver work is O(snapshots) manifest reads; each
     batch's data flows through Spark's native parquet scan of exactly
     the commit's new files (zero diffing IO) — never through Python."""
-    import json as _json
-
     if on_non_append not in ("error", "skip"):
         raise ValueError(f"on_non_append must be 'error' or 'skip', got {on_non_append!r}")
-    os.makedirs(checkpoint_dir, exist_ok=True)
-    meta_path = os.path.join(checkpoint_dir, "metadata")
-    if not os.path.exists(meta_path):
-        tmp = meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump({"id": uuid.uuid4().hex}, f)
-        os.replace(tmp, meta_path)
-    off_path = os.path.join(checkpoint_dir, "offsets")
 
-    def read_state() -> dict:
-        if not os.path.exists(off_path):
-            return {"last_snapshot_id": 0}
-        with open(off_path) as f:
-            return _json.load(f)
-
-    def write_state(state: dict) -> None:
-        tmp = off_path + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump(state, f)
-        os.replace(tmp, off_path)
-
-    processed: list[int] = []
-
-    def run_batch(start: int, end: int) -> None:
+    def read_batch(start: int, end: int) -> DataFrame:
         if start == 0:
             # nothing consumed yet: the first batch IS the table state at
             # `end` (read_incremental needs an anchor snapshot to diff from)
-            batch_df = source_table.read(version=end)
-        else:
-            batch_df = source_table.read_incremental(start, end)
-        sink(batch_df, end)
-        write_state({"last_snapshot_id": end})
-        processed.append(end)
+            return source_table.read(version=end)
+        return source_table.read_incremental(start, end)
 
-    state = read_state()
-    last = int(state.get("last_snapshot_id", 0))
-    pinned = state.get("pending")
-    if pinned is not None:
-        # phase-2 recovery: a prior drain planned this group and may have
-        # crashed anywhere between the plan write and the offset commit.
-        # Honor the pinned extent verbatim — regrouping against today's
-        # lineage could fold a late append into the replay and mint a new
-        # batch id, double-committing the original rows past the ledger.
-        run_batch(int(pinned["start"]), int(pinned["end"]))
-        last = int(pinned["end"])
-    pending = [(sid, op) for sid, op in source_table.main_lineage() if sid > last]
-    i = 0
-    while i < len(pending):
-        sid, op = pending[i]
-        if op != "append":
-            if on_non_append == "error":
-                raise ValueError(
-                    f"snapshot {sid} is {op!r}, not append — a table stream "
-                    "only spans appends (pass on_non_append='skip' for "
-                    "content-neutral rewrites like compaction)"
-                )
-            write_state({"last_snapshot_id": sid})
-            last, i = sid, i + 1
-            continue
-        group = [sid]
-        while (
-            len(group) < batch_snapshots
-            and i + len(group) < len(pending)
-            and pending[i + len(group)][1] == "append"
-        ):
-            group.append(pending[i + len(group)][0])
-        end = group[-1]
-        # phase 1: pin the planned (start, end] extent BEFORE the sink runs
-        write_state(
-            {"last_snapshot_id": last, "pending": {"start": last, "end": end}}
-        )
-        run_batch(last, end)
-        last, i = end, i + len(group)
-    return processed
+    def groups(last: int):
+        # up to batch_snapshots consecutive appends per batch; the lineage
+        # is read after any pinned replay
+        pending = [(sid, op) for sid, op in source_table.main_lineage() if sid > last]
+        i = 0
+        while i < len(pending):
+            sid, op = pending[i]
+            if op != "append":
+                if on_non_append == "error":
+                    raise ValueError(
+                        f"snapshot {sid} is {op!r}, not append — a table stream "
+                        "only spans appends (pass on_non_append='skip' for "
+                        "content-neutral rewrites like compaction)"
+                    )
+                yield sid, False
+                i += 1
+                continue
+            n = 1
+            while n < batch_snapshots and i + n < len(pending) and pending[i + n][1] == "append":
+                n += 1
+            yield pending[i + n - 1][0], True
+            i += n
+
+    return _drain_subscription(checkpoint_dir, sink, read_batch, groups)
 
 
 def stream_table_cdc(
@@ -668,30 +690,6 @@ def stream_table_cdc(
     commit's new files only); rewrite commits pay one ``exceptAll``
     diff of the two adjacent table states — the price of exact
     row-level semantics, same as Iceberg's changelog procedure."""
-    import json as _json
-
-    os.makedirs(checkpoint_dir, exist_ok=True)
-    meta_path = os.path.join(checkpoint_dir, "metadata")
-    if not os.path.exists(meta_path):
-        tmp = meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump({"id": uuid.uuid4().hex}, f)
-        os.replace(tmp, meta_path)
-    off_path = os.path.join(checkpoint_dir, "offsets")
-
-    def read_state() -> dict:
-        if not os.path.exists(off_path):
-            return {"last_snapshot_id": 0}
-        with open(off_path) as f:
-            return _json.load(f)
-
-    def write_state(state: dict) -> None:
-        tmp = off_path + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump(state, f)
-        os.replace(tmp, off_path)
-
-    processed: list[int] = []
     lineage = source_table.main_lineage()
     root = lineage[0][0] if lineage else 0
 
@@ -708,56 +706,25 @@ def stream_table_cdc(
                 f"got {starting_version!r}"
             ) from None
 
-    def run_batch(start: int, end: int) -> None:
-        if start == 0:
-            base = (
-                source_table.read(version=root)
-                .withColumn("_change_type", F.lit("insert"))
-                .withColumn("_commit_version", F.lit(root).cast("long"))
-            )
-            batch_df = (
-                base
-                if end == root
-                else base.unionByName(
-                    source_table.read_changes(root, end), allowMissingColumns=True
-                )
-            )
-        else:
-            batch_df = source_table.read_changes(start, end)
-        sink(batch_df, end)
-        write_state({"last_snapshot_id": end})
-        processed.append(end)
-
-    fresh = not os.path.exists(off_path)
-    state = read_state()
-    last = int(state.get("last_snapshot_id", 0))
-    if fresh and start_at:
-        # bounded catch-up applies to fresh checkpoints only; 0 keeps
-        # the full initial-snapshot semantics (parity with the facade,
-        # where offset 0 IS the unbounded start).  Persist immediately —
-        # the lineage start is pinned even if this drain delivers
-        # nothing, exactly as Spark persists a source's initialOffset
-        last = start_at
-        write_state({"last_snapshot_id": last})
-    pinned = state.get("pending")
-    if pinned is not None:
-        # phase-2 recovery: honor the pinned extent verbatim (regrouping
-        # against today's lineage could fold a late commit into the
-        # replay and mint a new batch id past the ledger)
-        run_batch(int(pinned["start"]), int(pinned["end"]))
-        last = int(pinned["end"])
-    pending = [sid for sid, _op in lineage if sid > last]
-    i = 0
-    while i < len(pending):
-        group = pending[i : i + batch_snapshots]
-        end = group[-1]
-        # phase 1: pin the planned (start, end] extent BEFORE the sink
-        write_state(
-            {"last_snapshot_id": last, "pending": {"start": last, "end": end}}
+    def read_batch(start: int, end: int) -> DataFrame:
+        if start != 0:
+            return source_table.read_changes(start, end)
+        base = (
+            source_table.read(version=root)
+            .withColumn("_change_type", F.lit("insert"))
+            .withColumn("_commit_version", F.lit(root).cast("long"))
         )
-        run_batch(last, end)
-        last, i = end, i + len(group)
-    return processed
+        if end == root:
+            return base
+        return base.unionByName(source_table.read_changes(root, end), allowMissingColumns=True)
+
+    def groups(last: int):
+        # every commit flows: fixed runs of batch_snapshots commits
+        pending = [sid for sid, _op in lineage if sid > last]
+        for i in range(0, len(pending), batch_snapshots):
+            yield pending[i : i + batch_snapshots][-1], True
+
+    return _drain_subscription(checkpoint_dir, sink, read_batch, groups, start_at)
 
 
 def stream_append_to_snapshot_table(
@@ -788,16 +755,12 @@ def stream_append_to_snapshot_table(
     query id when one is given (see ``make_idempotent_snapshot_sink``) —
     two independent runs under the same ``query_name`` never collide on
     restarted batch ids."""
-    writer = (
-        stream_df.writeStream.foreachBatch(
-            make_idempotent_snapshot_sink(table, query_name, checkpoint_dir)
-        )
-        .queryName(query_name)
-        .trigger(availableNow=True)
+    return _start_foreach_batch(
+        stream_df,
+        make_idempotent_snapshot_sink(table, query_name, checkpoint_dir),
+        query_name,
+        checkpoint_dir,
     )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
 
 
 DOCUMENTS_STREAM_SCHEMA = T.StructType(

@@ -40,7 +40,8 @@ manifest file stats, Iceberg's streaming-max-files/rows analogs); the
 sink supports PARTITIONED targets — identity fields (r18) and, since
 r19, arithmetic hidden transforms (``days``/``months``/``years``/
 ``hours``/``truncate``; ``bucket`` stays foreachBatch-only) — via
-per-task hive fanout and a layout-preserving sessionless epoch commit,
+per-task hive fanout and a layout-preserving epoch commit
+(``SnapshotParquetTable.commit_staged``, run with no SparkSession),
 and detects concurrent commits instead of clobbering them (r19: the
 recheck also compares the refs file, catching a concurrent
 ``rollback_to``).  The CDC twin — every verb class
@@ -66,16 +67,17 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-MANIFEST = "_snapshots.json"  # formats.snapshot_parquet.MANIFEST (no import:
-# this module must stay executor-picklable without pulling the format stack)
 
+def _table(path: str):
+    """The format's table class bound to no SparkSession — the driver-side
+    DataSource worker (``schema``/``latestOffset``/``partitions``, the
+    sink's constructor and ``commit()``) has none, and none of the
+    class's manifest paths touch ``self.spark``.  Lazy import: the
+    executor-side ``read()`` must stay picklable without the format
+    stack."""
+    from ..formats.snapshot_parquet import SnapshotParquetTable
 
-def _load_manifest(path: str) -> list[dict]:
-    mf = os.path.join(path, MANIFEST)
-    if not os.path.exists(mf):
-        raise FileNotFoundError(f"not a snapshot table (no {MANIFEST}): {path}")
-    with open(mf) as f:
-        return json.load(f)
+    return SnapshotParquetTable(None, path)
 
 
 def _main_lineage(path: str) -> list[dict]:
@@ -83,17 +85,13 @@ def _main_lineage(path: str) -> list[dict]:
     format's own refs-aware walk (``sessionless_main_lineage``:
     ``refs['main']`` from ``_refs.json`` when present, manifest tail
     otherwise; exact ``_backfill_parents`` recovery for pre-lineage
-    entries).  Lazy format import: this function runs only on the
-    driver-side DataSource worker (``latestOffset``/``partitions``/
-    ``schema``) — the same place the sink's ``commit()`` already imports
-    the format — so the module's no-format-imports constraint, which
-    binds the executor-side ``read()``, still holds.  Without the refs
+    entries; ``FileNotFoundError`` when ``path`` is not a snapshot
+    table).  Driver side only, like ``_table``.  Without the refs
     resolution a WAP branch append after main's head would stream
     UNPUBLISHED branch rows, and a ``rollback_to`` would keep streaming
     the undone lineage — the exact divergences from the driver loop
     (``stream_table_changes`` → ``main_lineage``) this facade must not
     have."""
-    _load_manifest(path)  # keep the not-a-snapshot-table error contract
     from ..formats.snapshot_parquet import sessionless_main_lineage
 
     return sessionless_main_lineage(path)
@@ -524,11 +522,12 @@ class SnapshotTableStreamWriter(DataSourceStreamArrowWriter):
     (the task side of Iceberg's writer split), and ``commit(messages,
     batchId)`` — which Spark runs once per epoch on the driver-side
     DataSource worker, where no SparkSession exists — performs the pure-
-    metadata append (``commit_prewritten_append``: footer bounds, parent
-    stats carry-forward, atomic manifest rename) stamped with the
-    ``(query, batch)`` ledger entry, so a replayed epoch no-ops against
-    ``prewritten_batch_committed`` — the same idempotent-writer contract
-    as the foreachBatch sinks.  ``abort()`` deletes the staged files.
+    metadata append (``SnapshotParquetTable.commit_staged``: footer
+    bounds, parent stats carry-forward, atomic manifest rename) stamped
+    with the ``(query, batch)`` ledger entry, so a replayed epoch no-ops
+    against the table's ``batch_committed`` — the same idempotent-writer
+    contract as the foreachBatch sinks.  ``abort()`` deletes the staged
+    files.
 
     Options: ``path`` (target table root; must exist — ``create()`` it,
     possibly empty-schema'd, before starting the stream), ``queryName``
@@ -578,16 +577,9 @@ class SnapshotTableStreamWriter(DataSourceStreamArrowWriter):
         # yet-to-be-created table takes .option("partitionBy", "c1,c2").
         from ..formats.snapshot_parquet import parse_partition_field
 
-        spec: list[str] | None = None
-        head = None
-        if os.path.exists(os.path.join(self.path, MANIFEST)):
-            from ..formats.snapshot_parquet import (
-                _sessionless_head,
-                _sessionless_load,
-            )
-
-            head = _sessionless_head(self.path, _sessionless_load(self.path))
-            spec = (head or {}).get("partition_by")
+        lineage = _main_lineage(self.path) if _table(self.path).exists() else []
+        head = lineage[-1] if lineage else None
+        spec = (head or {}).get("partition_by")
         opt_spec = [
             c.strip() for c in (options.get("partitionby") or "").split(",") if c.strip()
         ]
@@ -690,14 +682,6 @@ class SnapshotTableStreamWriter(DataSourceStreamArrowWriter):
     # -- driver-side (DataSource worker: NO SparkSession) --------------------
 
     def commit(self, messages, batchId: int) -> None:
-        import shutil
-        import uuid
-
-        from ..formats.snapshot_parquet import (
-            commit_prewritten_append,
-            prewritten_batch_committed,
-        )
-
         # (abs file, path it keeps under the snapshot's data dir): tasks
         # stage hive trees, so each file's layout path is its path
         # relative to the task's staging root
@@ -707,14 +691,11 @@ class SnapshotTableStreamWriter(DataSourceStreamArrowWriter):
             if m is not None
             for f in m.files
         ]
-        mf = os.path.join(self.path, MANIFEST)
-        if not os.path.exists(mf):  # CREATE-on-first-commit (standard sink UX)
+        table = _table(self.path)
+        if not table.exists():  # CREATE-on-first-commit (standard sink UX)
             os.makedirs(self.path, exist_ok=True)
-            tmp = mf + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as fh:
-                fh.write("[]")
-            os.replace(tmp, mf)
-        if prewritten_batch_committed(self.path, self.query_name, batchId, self.run_id):
+            table._commit([])
+        if table.batch_committed(self.query_name, batchId, self.run_id):
             for f, _rel in files:  # replayed epoch: drop the re-staged files
                 if os.path.exists(f):
                     os.remove(f)
@@ -722,30 +703,6 @@ class SnapshotTableStreamWriter(DataSourceStreamArrowWriter):
             return
         if not files:
             return  # nothing to commit for an empty batch
-        # promote the staged files into this snapshot's data dir.
-        # NO exist_ok: a crash between these moves and the manifest append
-        # leaks the dir, and the replayed epoch recomputes the SAME sid —
-        # merging into the leaked dir would silently double every row of
-        # the crashed attempt inside one snapshot.  Failing loudly matches
-        # the format's mode("errorifexists") write contract; recovery is
-        # remove_orphan_files (which reclaims unreferenced data-snap-*
-        # dirs), then the replay commits clean.
-        raw_tail = _load_manifest(self.path)
-        sid = (raw_tail[-1]["snapshot_id"] + 1) if raw_tail else 1
-        data_dir = os.path.join(self.path, f"data-snap-{sid:06d}")
-        try:
-            os.makedirs(data_dir)
-        except FileExistsError:
-            raise RuntimeError(
-                f"data dir {data_dir} already exists — a previous epoch "
-                "crashed between staging and its manifest commit; run "
-                "remove_orphan_files() on the table, then restart the stream"
-            ) from None
-        for f, rel in files:
-            dest = os.path.join(data_dir, rel)
-            os.makedirs(os.path.dirname(dest), exist_ok=True)
-            shutil.move(f, dest)
-        self._drop_task_dirs(messages)
         props = {
             "streaming_query_id": self.query_name,
             "batch_id": batchId,
@@ -753,13 +710,15 @@ class SnapshotTableStreamWriter(DataSourceStreamArrowWriter):
         }
         if self.run_id is not None:
             props["streaming_run_id"] = self.run_id
-        commit_prewritten_append(
-            self.path,
-            data_dir,
-            self._schema.json(),
-            commit_props=props,
-            partition_by=self.partition_by,
-        )
+        try:
+            table.commit_staged(
+                files,
+                self._schema.json(),
+                commit_props=props,
+                partition_by=self.partition_by,
+            )
+        finally:
+            self._drop_task_dirs(messages)
 
     def abort(self, messages, batchId: int) -> None:
         for m in messages:

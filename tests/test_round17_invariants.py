@@ -376,55 +376,100 @@ def test_readstream_facade_rate_cap_bounds_steady_state_batches(spark, tmp_path)
     assert steady and max(steady) <= 2, f"cap violated: {batches}"
 
 
-# --- sessionless prewritten append (the writeStream sink's commit half) ------
+# --- staged commit (the writeStream sink's commit half) -----------------------
 
 
-def test_commit_prewritten_append_primitives(spark, tmp_path):
-    """commit_prewritten_append: schema check, bounds collection, stats
-    carry-forward, ledger visibility — all without a SparkSession in the
-    commit path (it runs in Spark's Python DataSource worker)."""
+def _stage(tmp_path, name: str, table) -> str:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from local_llm_iceberg_cdw_spark.formats.snapshot_parquet import (
-        commit_prewritten_append,
-        prewritten_batch_committed,
-    )
+    d = tmp_path / "staging"
+    d.mkdir(exist_ok=True)
+    f = str(d / f"{name}.parquet")
+    pq.write_table(table if isinstance(table, pa.Table) else pa.table(table), f)
+    return f
 
-    t = SnapshotParquetTable(spark, str(tmp_path / "t"))
-    t.create(spark.createDataFrame([(1, 1.0)], "id long, v double"))
+
+def test_commit_staged_primitives(spark, tmp_path):
+    """SnapshotParquetTable.commit_staged: schema check, bounds
+    collection, stats carry-forward, ledger visibility — all on an
+    instance bound to no SparkSession (the commit runs in Spark's Python
+    DataSource worker)."""
+    root = str(tmp_path / "t")
+    t = SnapshotParquetTable(spark, root)
+    t.create(spark.createDataFrame([(1, 1.0)], "id long, v double"), sort_order=["id"])
     schema_json = t._load()[-1].schema_json
+    bare = SnapshotParquetTable(None, root)
 
-    d1 = str(tmp_path / "t" / "data-snap-000002")
-    os.makedirs(d1)
-    pq.write_table(pa.table({"id": [5, 6], "v": [5.0, 6.0]}), f"{d1}/f.parquet")
-    sid = commit_prewritten_append(
-        str(tmp_path / "t"), d1, schema_json,
+    f = _stage(tmp_path, "a", {"id": [5, 6], "v": [5.0, 6.0]})
+    sid = bare.commit_staged(
+        [(f, "f.parquet")], schema_json,
         commit_props={"streaming_query_id": "q1", "batch_id": 0},
     )
     assert sid == 2
+    d2 = os.path.join(root, "data-snap-000002")
+    assert not os.path.exists(f) and os.path.exists(os.path.join(d2, "f.parquet"))
     assert sorted(r.id for r in t.read().collect()) == [1, 5, 6]
-    # ledger: visible both sessionless and through the table class
-    assert prewritten_batch_committed(str(tmp_path / "t"), "q1", 0)
+    assert t._load()[-1].sort_order == ["id"]  # inherited, as append does
+    # ledger: visible both sessionless and through the session-bound class
+    assert bare.batch_committed("q1", 0)
     assert t.batch_committed("q1", 0)
-    assert not prewritten_batch_committed(str(tmp_path / "t"), "q1", 1)
+    assert not bare.batch_committed("q1", 1)
     # footer bounds recorded: the stats planner prunes sink-written files
     kept, total = t.plan_files([("id", "=", 5)])
-    assert len(kept) == 1 and len(total) >= 2 and kept[0].startswith(d1)
-    # schema mismatch refuses
-    bad = str(tmp_path / "t" / "data-snap-000003")
-    os.makedirs(bad)
-    pq.write_table(pa.table({"id": [9]}), f"{bad}/f.parquet")
+    assert len(kept) == 1 and len(total) >= 2 and kept[0].startswith(d2)
+    # schema mismatch refuses, before any data dir is claimed
+    bad = _stage(tmp_path, "bad", {"id": [9]})
     wrong = spark.createDataFrame([(1,)], "id long").schema.json()
     with pytest.raises(ValueError, match="schema mismatch"):
-        commit_prewritten_append(str(tmp_path / "t"), bad, wrong)
+        bare.commit_staged([(bad, "f.parquet")], wrong)
+    assert os.path.exists(bad) and not os.path.exists(os.path.join(root, "data-snap-000003"))
+    # a leaked dir at the next sid (crash between moves and publish) is
+    # never merged into
+    os.makedirs(os.path.join(root, "data-snap-000003"))
+    with pytest.raises(RuntimeError, match="remove_orphan_files"):
+        bare.commit_staged([(bad, "f.parquet")], schema_json)
+    assert os.path.exists(bad)
     # a staged layout that disagrees with the table's spec refuses
     # (r18 lifted the v1 unpartitioned-only scope to identity specs —
-    # spec AGREEMENT is now the guarded invariant)
+    # spec AGREEMENT is now the guarded invariant), and bucket() layouts
+    # never commit on this path
     p = SnapshotParquetTable(spark, str(tmp_path / "p"))
     p.create(spark.createDataFrame([(1, "a")], "id long, k string"), partition_by=["k"])
     with pytest.raises(ValueError, match="does not match the table's spec"):
-        commit_prewritten_append(str(tmp_path / "p"), d1, schema_json)
+        p.commit_staged([(bad, "f.parquet")], schema_json)
+    with pytest.raises(ValueError, match="bucket"):
+        p.commit_staged([(bad, "f.parquet")], schema_json, partition_by=["bucket(4, id)"])
+
+
+def test_commit_staged_persists_recovered_lineage(spark, tmp_path):
+    """A staged commit onto a manifest written before lineage existed
+    persists the parent ids ``_load`` recovers for the old entries —
+    the same as every table-class commit (``_backfill_parents``)."""
+    root = str(tmp_path / "t")
+    t = SnapshotParquetTable(spark, root)
+    t.create(spark.createDataFrame([(1,)], "id long"))
+    t.append(spark.createDataFrame([(2,)], "id long"))
+    recovered = [(s.snapshot_id, s.parent_snapshot_id) for s in t._load()]
+    assert recovered == [(1, None), (2, 1)]
+    mf = os.path.join(root, "_snapshots.json")
+    with open(mf) as fh:
+        raw = json.load(fh)
+    for e in raw:  # hand-write the pre-lineage form
+        del e["parent_snapshot_id"]
+    with open(mf, "w") as fh:
+        json.dump(raw, fh)
+
+    f = _stage(tmp_path, "a", {"id": [3]})
+    schema_json = raw[-1]["schema_json"]
+    assert SnapshotParquetTable(None, root).commit_staged([(f, "f.parquet")], schema_json) == 3
+    with open(mf) as fh:
+        entries = json.load(fh)
+    assert [(e["snapshot_id"], e.get("parent_snapshot_id", "absent")) for e in entries] == [
+        (1, None),
+        (2, 1),
+        (3, 2),
+    ]
 
 
 def test_stream_writer_epoch_replay_noops(spark, tmp_path):

@@ -2,7 +2,7 @@
 lineage (VERDICT r17 What's-wrong #1 — a WAP branch append or a
 ``rollback_to`` must not leak the wrong lineage into the stream), the
 hive NULL-partition sentinel maps back to nulls, ``startingSnapshotId``
-bounds a fresh checkpoint's catch-up, and ``commit_prewritten_append``
+bounds a fresh checkpoint's catch-up, and ``SnapshotParquetTable.commit_staged``
 detects a concurrent commit instead of silently clobbering it.
 """
 
@@ -203,43 +203,45 @@ def test_readstream_facade_starting_snapshot_id(spark, tmp_path):
 # --- concurrent-commit detection (ADVICE r17 low) -----------------------------
 
 
-def test_commit_prewritten_append_detects_concurrent_commit(spark, tmp_path, monkeypatch):
-    """A table-class commit landing between the sessionless append's
-    manifest load and its publish must fail the publish loudly (lost
-    update), not be clobbered by os.replace."""
+def test_commit_staged_detects_concurrent_commit(spark, tmp_path, monkeypatch):
+    """A table-class commit landing between the staged commit's manifest
+    load and its publish must fail the publish loudly (lost update), not
+    be clobbered by os.replace.  The racer is a MOR delete: a racing
+    append would allocate the staged commit's own data dir and fail on
+    its errorifexists write instead."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from local_llm_iceberg_cdw_spark.formats import snapshot_parquet as sp
-
     t = SnapshotParquetTable(spark, str(tmp_path / "t"))
-    t.create(spark.createDataFrame([(1,)], "id long"))
+    t.create(spark.createDataFrame([(1,), (2,)], "id long"))
     schema_json = t._load()[-1].schema_json
 
-    d = str(tmp_path / "t" / "data-snap-900001")
-    os.makedirs(d)
-    pq.write_table(pa.table({"id": pa.array([7], pa.int64())}), f"{d}/f.parquet")
+    def stage() -> list[tuple[str, str]]:
+        f = str(tmp_path / f"staged-{len(os.listdir(tmp_path))}.parquet")
+        pq.write_table(pa.table({"id": pa.array([7], pa.int64())}), f)
+        return [(f, "f.parquet")]
 
     real_stats = SnapshotParquetTable._collect_file_stats
     raced = []
 
     def racing_stats(data_dir):
-        # the concurrent writer lands mid-footer-scan (once — the racing
-        # append runs this hook too)
+        # the concurrent writer lands mid-footer-scan (once)
         if not raced:
             raced.append(True)
-            t.append(spark.createDataFrame([(2,)], "id long"))
+            t.delete_where_mor("id = 1", ["id"])
         return real_stats(data_dir)
 
     monkeypatch.setattr(SnapshotParquetTable, "_collect_file_stats", staticmethod(racing_stats))
     with pytest.raises(RuntimeError, match="concurrent commit"):
-        sp.commit_prewritten_append(t.path, d, schema_json)
+        SnapshotParquetTable(None, t.path).commit_staged(stage(), schema_json)
     monkeypatch.undo()
 
-    # the table's snapshot survived intact and a clean retry commits
-    assert [r.id for r in t.read().orderBy("id").collect()] == [1, 2]
-    sp.commit_prewritten_append(t.path, d, schema_json)
-    assert [r.id for r in t.read().orderBy("id").collect()] == [1, 2, 7]
+    # the table's snapshot survived intact, the unpublished dir is gone,
+    # and a replayed (re-staged) commit lands on the new head
+    assert [r.id for r in t.read().orderBy("id").collect()] == [2]
+    assert not os.path.exists(os.path.join(t.path, "data-snap-000002"))
+    assert SnapshotParquetTable(None, t.path).commit_staged(stage(), schema_json) == 3
+    assert [r.id for r in t.read().orderBy("id").collect()] == [2, 7]
 
 
 # --- partitioned targets for writeStream.format("snapshot_table") ------------
