@@ -346,11 +346,13 @@ class SnapshotParquetTable:
         with open(self._refs_path()) as f:
             return json.load(f)
 
-    def _refs_bytes(self) -> bytes | None:
-        """Raw refs-file content, or None when absent — what a staged
-        commit compares before publishing to catch a refs-only mover."""
+    @staticmethod
+    def _file_bytes(path: str) -> bytes | None:
+        """Raw manifest or refs-file content, or None when absent — what a
+        staged commit compares before publishing to catch a concurrent
+        mover."""
         try:
-            with open(self._refs_path(), "rb") as f:
+            with open(path, "rb") as f:
                 return f.read()
         except FileNotFoundError:
             return None
@@ -841,8 +843,10 @@ class SnapshotParquetTable:
             # mis-prunes (use a foreachBatch sink for bucket layouts)
             if parse_partition_field(fld)["transform"] == "bucket":
                 raise ValueError(f"staged commit cannot take bucket() layouts, got {fld!r}")
+        # raw bytes, read BEFORE _load: the publish recheck compares them
+        staged_manifest = self._file_bytes(self._manifest_path())
         snaps = self._load()
-        staged_refs = self._refs_bytes()  # what _head resolves main from
+        staged_refs = self._file_bytes(self._refs_path())  # what _head resolves main from
         parent = self._head(snaps) if snaps else None
         if parent is not None and parent.partition_by != partition_by:
             raise ValueError(
@@ -862,8 +866,7 @@ class SnapshotParquetTable:
                     f"{want}, stream writes {got} (no evolution on this path)"
                 )
             schema_json = parent.schema_json  # keep nullability flags stable
-        expected_tail = snaps[-1].snapshot_id if snaps else None
-        sid = expected_tail + 1 if snaps else 1
+        sid = snaps[-1].snapshot_id + 1 if snaps else 1
         data_dir = os.path.join(self.path, f"data-snap-{sid:06d}")
         # NO exist_ok: a crash between the moves below and the manifest
         # commit leaks the dir, and the replayed epoch picks the SAME sid
@@ -900,26 +903,24 @@ class SnapshotParquetTable:
         # the load above (the moves and footer scan take real time) and
         # the rename below — os.replace would then silently clobber that
         # snapshot (lost update).  A verb that writes data-snap-{sid}
-        # fails on the dir claimed above instead; the others (MOR delete,
-        # rename, ref moves) are caught here.  Iceberg's
-        # commit path does the same CAS-and-retry against the catalog.
-        # The tail compare misses refs-only movers: a rollback_to /
-        # fast_forward repoints refs['main'] WITHOUT a manifest entry, and
-        # publishing on the pre-rollback head would resurrect the
-        # rolled-back-over lineage — so the refs file is compared too.
-        # The remaining microsecond window is the documented
+        # fails on the dir claimed above instead; the others are caught
+        # here.  The whole manifest is compared, not its tail: an
+        # expire_snapshots keeps the tail, and publishing the list loaded
+        # above would bring back expired entries whose data dirs are
+        # deleted.  Refs-only movers (rollback_to / fast_forward repoint
+        # refs['main'] without a manifest entry) would resurrect the
+        # rolled-back-over lineage, so the refs file is compared too.
+        # Iceberg's commit path does the same CAS-and-retry against the
+        # catalog.  The remaining microsecond window is the documented
         # single-writer residue.
-        current = self._load()
-        current_tail = current[-1].snapshot_id if current else None
         conflict = None
-        if current_tail != expected_tail:
+        if self._file_bytes(self._manifest_path()) != staged_manifest:
             conflict = (
-                f"concurrent commit detected on {self.path}: manifest tail moved "
-                f"from {expected_tail} to {current_tail} while this append was "
-                "staged — rerun the commit (the replayed epoch will re-plan "
-                "against the new head)"
+                f"concurrent commit detected on {self.path}: the manifest changed "
+                "while this append was staged — rerun the commit (the replayed "
+                "epoch will re-plan against the new head)"
             )
-        elif self._refs_bytes() != staged_refs:
+        elif self._file_bytes(self._refs_path()) != staged_refs:
             conflict = (
                 f"concurrent ref update detected on {self.path}: _refs.json "
                 "changed while this append was staged (a rollback_to or "

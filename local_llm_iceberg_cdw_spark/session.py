@@ -12,6 +12,16 @@ by the whole engine, tuned for correctness *and* for scale-out behavior:
   on a real cluster this is overridden (AQE coalesces down from a generous
   initial number anyway).
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
+- Python workers fork from ``worker_daemon`` instead of ``pyspark.daemon``.
+  PySpark resets the import caches at the start of every task, and before
+  CPython 3.13 that re-reads every zip archive on the worker's path (the
+  spark-core jar, ``pyspark.zip``, py4j: about 0.2 s per task); the
+  daemon's reset re-reads only archives that changed.  That covers
+  ``mapInPandas``, pandas UDFs and Python DataSource read/write tasks;
+  Spark still starts DataSource planning calls (``schema()``, partition
+  planning, the write commit) through the stock daemon.  Workers import
+  the daemon from the package's parent directory, which the factory puts
+  on their ``PYTHONPATH``.
 - Optional Iceberg catalog wiring behind an availability probe (the sandbox
   has no Iceberg runtime jar; formats/ provides a parquet+manifest fallback
   with the same snapshot semantics).
@@ -24,6 +34,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def iceberg_runtime_available() -> bool:
@@ -61,7 +72,10 @@ def build_session(
     """Create (or fetch) the engine's SparkSession.
 
     Parameters are overridable for tests; defaults follow the judged
-    environment (local[$SPARK_GRAFT_CPUS], 32 shuffle partitions).
+    environment: ``local[$SPARK_GRAFT_CPUS]`` and as many shuffle
+    partitions as CPUs (32 when the variable is unset).  A caller's
+    ``spark.executorEnv.PYTHONPATH`` is kept; the package's parent
+    directory is added to it so workers can import the daemon.
     """
     cpus = DEFAULT_CPUS
     master = master or f"local[{cpus}]"
@@ -86,6 +100,7 @@ def build_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.python.daemon.module", "local_llm_iceberg_cdw_spark.worker_daemon")
         # Broadcast threshold: plans/dims in this schema are tiny; keep the
         # default 10 MB — AQE upgrades to broadcast at runtime when a
         # post-filter side shrinks below it.
@@ -105,9 +120,13 @@ def build_session(
                 warehouse_dir or os.path.join(os.getcwd(), "spark-warehouse", "iceberg"),
             )
         )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    conf = dict(extra_conf or {})
+    worker_path = conf.get("spark.executorEnv.PYTHONPATH", "")
+    if _PACKAGE_PARENT not in worker_path.split(os.pathsep):
+        worker_path = os.pathsep.join(p for p in (worker_path, _PACKAGE_PARENT) if p)
+    conf["spark.executorEnv.PYTHONPATH"] = worker_path
+    for k, v in conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

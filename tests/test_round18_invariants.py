@@ -203,45 +203,74 @@ def test_readstream_facade_starting_snapshot_id(spark, tmp_path):
 # --- concurrent-commit detection (ADVICE r17 low) -----------------------------
 
 
+def _stage(tmp_path) -> list[tuple[str, str]]:
+    """One staged parquet file holding id 7, as a sink task leaves it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    f = str(tmp_path / f"staged-{len(os.listdir(tmp_path))}.parquet")
+    pq.write_table(pa.table({"id": pa.array([7], pa.int64())}), f)
+    return [(f, "f.parquet")]
+
+
+def _race_footer_scan(monkeypatch, racer) -> None:
+    """Run ``racer`` once, mid-footer-scan of the next staged commit."""
+    real_stats = SnapshotParquetTable._collect_file_stats
+    raced = []
+
+    def racing_stats(data_dir):
+        if not raced:
+            raced.append(True)
+            racer()
+        return real_stats(data_dir)
+
+    monkeypatch.setattr(SnapshotParquetTable, "_collect_file_stats", staticmethod(racing_stats))
+
+
 def test_commit_staged_detects_concurrent_commit(spark, tmp_path, monkeypatch):
     """A table-class commit landing between the staged commit's manifest
     load and its publish must fail the publish loudly (lost update), not
     be clobbered by os.replace.  The racer is a MOR delete: a racing
     append would allocate the staged commit's own data dir and fail on
     its errorifexists write instead."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     t = SnapshotParquetTable(spark, str(tmp_path / "t"))
     t.create(spark.createDataFrame([(1,), (2,)], "id long"))
     schema_json = t._load()[-1].schema_json
 
-    def stage() -> list[tuple[str, str]]:
-        f = str(tmp_path / f"staged-{len(os.listdir(tmp_path))}.parquet")
-        pq.write_table(pa.table({"id": pa.array([7], pa.int64())}), f)
-        return [(f, "f.parquet")]
-
-    real_stats = SnapshotParquetTable._collect_file_stats
-    raced = []
-
-    def racing_stats(data_dir):
-        # the concurrent writer lands mid-footer-scan (once)
-        if not raced:
-            raced.append(True)
-            t.delete_where_mor("id = 1", ["id"])
-        return real_stats(data_dir)
-
-    monkeypatch.setattr(SnapshotParquetTable, "_collect_file_stats", staticmethod(racing_stats))
+    _race_footer_scan(monkeypatch, lambda: t.delete_where_mor("id = 1", ["id"]))
     with pytest.raises(RuntimeError, match="concurrent commit"):
-        SnapshotParquetTable(None, t.path).commit_staged(stage(), schema_json)
+        SnapshotParquetTable(None, t.path).commit_staged(_stage(tmp_path), schema_json)
     monkeypatch.undo()
 
     # the table's snapshot survived intact, the unpublished dir is gone,
     # and a replayed (re-staged) commit lands on the new head
     assert [r.id for r in t.read().orderBy("id").collect()] == [2]
     assert not os.path.exists(os.path.join(t.path, "data-snap-000002"))
-    assert SnapshotParquetTable(None, t.path).commit_staged(stage(), schema_json) == 3
+    assert SnapshotParquetTable(None, t.path).commit_staged(_stage(tmp_path), schema_json) == 3
     assert [r.id for r in t.read().orderBy("id").collect()] == [2, 7]
+
+
+def test_commit_staged_detects_concurrent_expire(spark, tmp_path, monkeypatch):
+    """An ``expire_snapshots`` landing mid-commit keeps the manifest tail
+    and the refs file, so only a compare of the whole manifest sees it;
+    publishing the list loaded before it would bring back the expired
+    entries, whose data dirs expire already deleted."""
+    t = SnapshotParquetTable(spark, str(tmp_path / "t"))
+    t.create(spark.createDataFrame([(1,)], "id long"))
+    t.append(spark.createDataFrame([(2,)], "id long"))
+    t.replace(spark.createDataFrame([(3,)], "id long"))
+    schema_json = t._load()[-1].schema_json
+
+    _race_footer_scan(monkeypatch, lambda: t.expire_snapshots(keep_last=1))
+    with pytest.raises(RuntimeError, match="concurrent commit"):
+        SnapshotParquetTable(None, t.path).commit_staged(_stage(tmp_path), schema_json)
+    monkeypatch.undo()
+
+    assert [s.snapshot_id for s in t._load()] == [3]
+    assert not os.path.exists(os.path.join(t.path, "data-snap-000004"))
+    assert SnapshotParquetTable(None, t.path).commit_staged(_stage(tmp_path), schema_json) == 4
+    assert [s.snapshot_id for s in t._load()] == [3, 4]
+    assert [r.id for r in t.read().orderBy("id").collect()] == [3, 7]
 
 
 # --- partitioned targets for writeStream.format("snapshot_table") ------------

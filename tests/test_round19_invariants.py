@@ -417,7 +417,7 @@ class TestSinkTransformTargets:
 def test_commit_staged_detects_concurrent_rollback(spark, tmp_path, monkeypatch):
     """A rollback_to landing between the staged commit's manifest load
     and its publish moves refs['main'] WITHOUT appending a manifest
-    entry — the tail compare alone misses it; the refs byte-compare must
+    entry — the manifest compare alone misses it; the refs byte-compare must
     not."""
     import pyarrow as pa
     import pyarrow.parquet as pq
