@@ -7,6 +7,13 @@ Runs the headline query library at $SPARK_GRAFT_SF_DIR (default
 
 Each query is fully materialized through the `noop` sink (JVM-side, no
 driver collect) so timings measure the whole plan, not just the limit.
+
+The full result is also written to $SPARK_GRAFT_BENCH_OUT, by default
+`BENCH_RESULT.json`: gitignored scratch output that every run overwrites,
+including SPARK_GRAFT_BENCH_ONLY subsets, registry-rest sweeps and scaling
+runs at other CPU counts.  The committed headline record, which
+tests/test_bench_hygiene.py reads, is `BENCH_HEADLINE.json`; refresh it with
+`SPARK_GRAFT_BENCH_OUT=BENCH_HEADLINE.json python bench.py`.
 """
 
 from __future__ import annotations
