@@ -135,12 +135,13 @@ def _require_nonzero(ids, norms) -> None:
 
 
 def _numpy_probe_cells(mat, cents, nprobe: int):
-    """The `_probe_cells_udf` assignment rule replayed on a float64
+    """The matmul probe rule of the self-validated IVF ops, on a float64
     matrix: per row, the ``nprobe`` nearest centroid ids by cosine, ties
-    → lowest id via stable argsort.  IDENTICAL numpy op sequence to the
-    in-plan pandas UDF (same matmul, same np.linalg.norm, same stable
-    argsort), so the cells the pair kernel computes equal the cells the
-    IVF recall harnesses assign through the UDF."""
+    → lowest id via stable argsort.  The pair kernel, the in-plan
+    `_probe_cells_udf` and the IVF+PQ index build all call it, so they
+    pick the same cells.  BLAS matmul and np.linalg.norm do not replay
+    the oracle's fold, so on near-ties this can pick other cells than
+    the fold-exact `_fold_cosines_np` rule the hashed ops use."""
     import numpy as np
 
     cent_ids = np.array([cid for cid, _ in cents], dtype=np.int64)
@@ -150,6 +151,19 @@ def _numpy_probe_cells(mat, cents, nprobe: int):
         np.linalg.norm(mat, axis=1, keepdims=True) * cent_norm[None, :]
     )
     return cent_ids[np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]]
+
+
+def _fold_cosines_np(m, nrm, cents):
+    """b×k cosine plane of rows ``m`` (norms ``nrm``) against the
+    centroid list, in the oracle's IEEE op sequence: the left-folded dot
+    (`_fold_dots_np`) divided by ‖x‖·‖c‖, with ‖c‖ the left-folded norm.
+    The cell rule of every op whose cells are hashed; ``cents`` are
+    id-ascending (`collect_centroids`, `fitted_centroids`), so the first
+    maximum of a row is the lowest tied centroid id."""
+    import numpy as np
+
+    cent_mat = np.array([cv for _, cv in cents], dtype=np.float64)
+    return _fold_dots_np(m, cent_mat) / (nrm[:, None] * _fold_norms_np(cent_mat)[None, :])
 
 
 def _score_plane(col: str, m, cn, qmat, qn):
@@ -465,7 +479,7 @@ def fitted_centroids(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[f
 
 def _probe_cells_udf(cents: list[tuple[int, list[float]]], nprobe: int):
     """Arrow-vectorized cell probe: for each embedding, the ``nprobe``
-    nearest centroid ids by cosine (ties → lowest id via stable argsort).
+    nearest centroid ids by `_numpy_probe_cells`.
 
     This is the honest 100 TB shape for IVF assignment: one dense
     float64 matmul per Arrow batch against the k×dim centroid matrix
@@ -475,18 +489,10 @@ def _probe_cells_udf(cents: list[tuple[int, list[float]]], nprobe: int):
     interpreted evaluation, measured 78 s vs ~1 s at sf0.1)."""
     import numpy as np
 
-    cent_ids = np.array([cid for cid, _ in cents], dtype=np.int64)
-    cent_mat = np.array([cv for _, cv in cents], dtype=np.float64)  # k×dim
-    cent_norm = np.linalg.norm(cent_mat, axis=1)
-
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def probe(embs: pd.Series) -> pd.Series:
         m = np.stack(embs.to_numpy()).astype(np.float64)  # b×dim
-        sims = (m @ cent_mat.T) / (
-            np.linalg.norm(m, axis=1, keepdims=True) * cent_norm[None, :]
-        )
-        order = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
-        return pd.Series(list(cent_ids[order]))
+        return pd.Series(list(_numpy_probe_cells(m, cents, nprobe)))
 
     return probe
 
@@ -595,21 +601,36 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     approx = ivf_topk_results(spark, sf_dir).select("query_id", "neighbor_id")
-    n_queries = emb.filter(F.col("vec_id") < N_QUERIES).agg(
-        F.count("*").alias("n_queries")
-    )
-    n_exact = exact.agg(F.count("*").alias("n_exact_results"))
-    n_hits = approx.join(exact, ["query_id", "neighbor_id"], "left_semi").agg(
-        F.count("*").alias("_hits")
-    )
-    return (
-        n_queries.crossJoin(n_exact)
-        .crossJoin(n_hits)
-        .select(
-            "n_queries",
-            "n_exact_results",
-            (F.col("_hits") / F.col("n_exact_results") >= IVF_RECALL_MIN).alias("recall_ok"),
+    return _recall_verdict(emb, approx, exact, IVF_RECALL_MIN)
+
+
+def _recall_verdict(
+    emb: DataFrame, approx: DataFrame, exact: DataFrame, recall_min: float
+) -> DataFrame:
+    """The one-row verdict of the self-validated ANN ops: the query count,
+    the exact top-k size and whether the (query_id, neighbor_id) pairs
+    of ``approx`` recall at least ``recall_min`` of ``exact``.  The
+    three counts come from ONE aggregate over a tagged union, so the plan
+    has no cross join of single-row aggregates."""
+    pair = ["query_id", "neighbor_id"]
+    tagged = (
+        emb.filter(F.col("vec_id") < N_QUERIES)
+        .select(F.lit("q").alias("t"))
+        .unionByName(exact.select(F.lit("e").alias("t")))
+        .unionByName(
+            approx.join(exact, pair, "left_semi").select(F.lit("h").alias("t"))
         )
+    )
+    counts = tagged.agg(
+        *[
+            F.count(F.when(F.col("t") == t, 1)).alias(name)
+            for t, name in (("q", "n_queries"), ("e", "n_exact_results"), ("h", "_hits"))
+        ]
+    )
+    return counts.select(
+        "n_queries",
+        "n_exact_results",
+        (F.col("_hits") / F.col("n_exact_results") >= recall_min).alias("recall_ok"),
     )
 
 
@@ -882,10 +903,10 @@ def q_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     # left fold by ≲1e-15 relative, far inside the rounding), at a
     # fraction of its Catalyst-analysis and exchange cost.
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "embedding", _norm(F.col("embedding")).alias("nrm")
+        "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
     )
     cents = collect_centroids(spark, sf_dir)
-    assigned = emb.mapInPandas(_kmeans_assign_udf(cents), _KMEANS_ASSIGN_SCHEMA)
+    assigned = _assign_clusters(emb, cents, ("cluster_id", "c", "embedding"))
     per = (
         assigned.select("cluster_id", "c", F.posexplode("embedding"))
         .groupBy("cluster_id", "pos")
@@ -963,48 +984,48 @@ def _py_norm(v: list[float]) -> float:
     return math.sqrt(acc)
 
 
-def _kmeans_assign_udf(cents: list[tuple[int, list[float]]]):
-    """Fold-exact vectorized E-step for ``mapInPandas``: per row, the
-    argmax-cosine centroid (tie → lowest id via first-max argmax).
+# Output column types of `_assign_clusters`: the computed cluster_id
+# and cosine ``c``, plus the input columns its callers pass through.
+_ASSIGN_COLUMN_TYPES = {
+    "cluster_id": "long",
+    "c": "double",
+    "vec_id": "long",
+    "embedding": "array<float>",
+    "nrm": "double",
+}
 
-    The dot product is accumulated dimension-by-dimension
-    (``acc = acc + m[:, j] * cv[j]``) — the SAME left fold in IEEE
-    doubles as the JVM/_sql_dot expression, just vectorized across the
-    batch — so the cosines (and therefore the assignments the oracle
-    hash-checks) are bit-identical to the unrolled SQL.  Unlike a
+
+def _assign_clusters(df: DataFrame, cents, cols) -> DataFrame:
+    """Fold-exact argmax-cosine assignment as one ``mapInPandas`` pass
+    over ``df`` (vec_id, embedding, nrm): per row, the max-cosine
+    centroid (tie → lowest id) as ``cluster_id`` and that cosine as
+    ``c``.  Emits ``cols`` in order; names other than cluster_id and c
+    pass through from ``df``.
+
+    The cosine is `_fold_cosines_np`, the SAME left fold in IEEE doubles
+    as the unrolled SQL dot, vectorized across the batch, so the
+    assignments the oracles hash-check are bit-identical.  Unlike a
     broadcast crossJoin + max aggregate, this is a narrow stage with no
-    exchange and it scales in k."""
+    exchange and it scales in k.  A zero vector raises ValueError
+    naming its vec_id."""
     import numpy as np
 
-    cent_ids = np.array([cid for cid, _ in cents], dtype="int64")
-    cent_vecs = [np.asarray(cv, dtype=np.float64) for _, cv in cents]
-    cent_norms = [_py_norm(cv) for _, cv in cents]
+    cent_ids = np.array([cid for cid, _ in cents], dtype=np.int64)
 
     def assign(pdfs):
         for pdf in pdfs:
-            if not len(pdf):
+            if pdf.empty:
                 continue
-            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             nrm = pdf["nrm"].to_numpy()
-            cos = np.empty((len(cent_ids), len(pdf)))
-            for k, cv in enumerate(cent_vecs):
-                acc = m[:, 0] * cv[0]
-                for j in range(1, DIM):
-                    acc = acc + m[:, j] * cv[j]
-                cos[k] = acc / (nrm * cent_norms[k])
-            best = np.argmax(cos, axis=0)  # first max → lowest centroid id
-            yield pd.DataFrame(
-                {
-                    "cluster_id": cent_ids[best],
-                    "c": cos[best, np.arange(len(pdf))],
-                    "embedding": pdf["embedding"],
-                }
-            )
+            _require_nonzero(pdf["vec_id"].to_numpy(), nrm)
+            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            cos = _fold_cosines_np(m, nrm, cents)
+            best = np.argmax(cos, axis=1)  # first max → lowest centroid id
+            out = {"cluster_id": cent_ids[best], "c": cos[np.arange(len(pdf)), best]}
+            yield pd.DataFrame({c: out[c] if c in out else pdf[c] for c in cols})
 
-    return assign
-
-
-_KMEANS_ASSIGN_SCHEMA = "cluster_id long, c double, embedding array<float>"
+    schema = ", ".join(f"{c} {_ASSIGN_COLUMN_TYPES[c]}" for c in cols)
+    return df.mapInPandas(assign, schema)
 
 
 def q_kmeans_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1017,7 +1038,7 @@ def q_kmeans_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     The scale pattern: centroids are DRIVER-SIDE MODEL STATE (k×dim
     doubles), shipped into each E-step as a UDF closure — each iteration
     is a fresh scan + one narrow Arrow-batched assignment
-    (``_kmeans_assign_udf``) + one keyed decimal aggregate (the only
+    (``_assign_clusters``) + one keyed decimal aggregate (the only
     exchange; shuffle ∝ corpus rows × dims after map-side combine) —
     never a growing lineage; the corpus projection is localCheckpointed
     once and reused by every iteration.  Convergence is decided from the
@@ -1025,7 +1046,7 @@ def q_kmeans_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     convergence-check pattern from dedup_clusters).
 
     Cross-engine exactness: the E-step cosine fold is bit-identical to
-    the oracle (see ``_kmeans_assign_udf``), and the M-step mean is an
+    the oracle (see ``_assign_clusters``), and the M-step mean is an
     order-independent DECIMAL(30,10) sum divided by the member count, so
     Spark's collected centroids equal the oracle CTE chain's exactly."""
     _, final, n_iters_run, _ = _kmeans_fit(spark, sf_dir)
@@ -1059,14 +1080,27 @@ def q_kmeans_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KMEANS_MODEL_CACHE: dict = {}
 
 
+def _embeddings_cache_key(sf_dir: str):
+    """``(abspath, st_mtime_ns, st_size)`` of the dataset's embeddings
+    file — the key of the fitted-model caches (k-means here, the PQ
+    codebook in quantization); None when the file cannot be stat'ed,
+    and then nothing is cached."""
+    import os
+
+    src = os.path.join(sf_dir, "embeddings.parquet")
+    try:
+        st = os.stat(src)
+    except OSError:
+        return None
+    return (os.path.abspath(src), st.st_mtime_ns, st.st_size)
+
+
 def _kmeans_fit(spark: SparkSession, sf_dir: str):
     """Run (or reuse) the E+M loop; returns ``(cents, final, n_iters_run,
     emb)`` where ``cents`` is the FITTED centroid list, ``final`` maps
     cluster_id → (n_members, Σcos, centroid vector), and ``emb`` is the
     localCheckpointed corpus projection (reusable for a final assignment
     pass without re-scanning)."""
-    import os
-
     # No repartition spread: the fixture corpus is small enough that the
     # per-iteration cost is job scheduling, not compute — fewer tasks per
     # stage wins; at scale the scan's own splits provide the parallelism.
@@ -1074,12 +1108,7 @@ def _kmeans_fit(spark: SparkSession, sf_dir: str):
         "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
     ).localCheckpoint(eager=True)
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        cache_key = (os.path.abspath(src), st.st_mtime_ns, st.st_size)
-    except OSError:
-        cache_key = None
+    cache_key = _embeddings_cache_key(sf_dir)
     if cache_key is not None and cache_key in _KMEANS_MODEL_CACHE:
         cents, final, n_iters_run = _KMEANS_MODEL_CACHE[cache_key]
         return cents, final, n_iters_run, emb
@@ -1089,9 +1118,7 @@ def _kmeans_fit(spark: SparkSession, sf_dir: str):
     n_iters_run = 0
     final = None  # {cluster_id: (n_members, sum_c, [per-dim decimal-exact sums])}
     for _ in range(KMEANS_ITERS):
-        assigned = emb.select("embedding", "nrm").mapInPandas(
-            _kmeans_assign_udf(cents), _KMEANS_ASSIGN_SCHEMA
-        )
+        assigned = _assign_clusters(emb, cents, ("cluster_id", "c", "embedding"))
         # M-step as ONE keyed decimal aggregate over (cluster, dim) —
         # posexplode trades 64 wide agg expressions (whose Catalyst
         # analysis alone cost ~2 s/iteration) for 64× tiny rows through a
@@ -1136,39 +1163,6 @@ def _kmeans_fit(spark: SparkSession, sf_dir: str):
     return cents, final, n_iters_run, emb
 
 
-def _kmeans_assignments_udf(cents: list[tuple[int, list[float]]]):
-    """Final assignment pass with ``vec_id`` passthrough — same fold-exact
-    cosine as ``_kmeans_assign_udf``."""
-    import numpy as np
-
-    cent_ids = np.array([cid for cid, _ in cents], dtype="int64")
-    cent_vecs = [np.asarray(cv, dtype=np.float64) for _, cv in cents]
-    cent_norms = [_py_norm(cv) for _, cv in cents]
-
-    def assign(pdfs):
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            nrm = pdf["nrm"].to_numpy()
-            cos = np.empty((len(cent_ids), len(pdf)))
-            for k, cv in enumerate(cent_vecs):
-                acc = m[:, 0] * cv[0]
-                for j in range(1, DIM):
-                    acc = acc + m[:, j] * cv[j]
-                cos[k] = acc / (nrm * cent_norms[k])
-            best = np.argmax(cos, axis=0)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "cluster_id": cent_ids[best],
-                    "c": cos[best, np.arange(len(pdf))],
-                }
-            )
-
-    return assign
-
-
 def q_kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Use the fitted model: per-vector cluster assignment under the
     CONVERGED centroids (``_kmeans_fit``) — the table a pipeline joins
@@ -1177,9 +1171,7 @@ def q_kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     already-checkpointed corpus; rounding happens in Spark so the emitted
     cosine matches the oracle's round() on the bit-identical double."""
     cents, _, _, emb = _kmeans_fit(spark, sf_dir)
-    out = emb.select("vec_id", "embedding", "nrm").mapInPandas(
-        _kmeans_assignments_udf(cents), "vec_id long, cluster_id long, c double"
-    )
+    out = _assign_clusters(emb, cents, ("vec_id", "cluster_id", "c"))
     return out.select(
         "vec_id", "cluster_id", F.round("c", 6).alias("centroid_cosine")
     ).orderBy("vec_id")
@@ -1203,10 +1195,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold-exact pair cosine mean the emitted pair set hash-matches the
     unrolled-SQL oracle — no recall bound needed, unlike LSH tiers."""
     cents, _, _, emb = _kmeans_fit(spark, sf_dir)
-    side = emb.select("vec_id", "embedding", "nrm").mapInPandas(
-        _asg_passthrough_udf(cents),
-        "cluster_id long, vec_id long, embedding array<float>, nrm double",
-    )
+    side = _assign_clusters(emb, cents, ("cluster_id", "vec_id", "embedding", "nrm"))
     # per-cluster pairwise via one Arrow batch per cluster: the j-loop in
     # `_cluster_pairs_udf` is the SAME left fold as the SQL dot, vectorized
     # across the pair axis (replaces a 64-term codegen fold over a
@@ -1222,40 +1211,6 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.select(
         "cluster_id", "id_a", "id_b", F.round("cosine", 6).alias("cosine")
     ).filter(F.col("cosine") >= SEMDEDUP_COSINE)
-
-
-def _asg_passthrough_udf(cents: list[tuple[int, list[float]]]):
-    """Fold-exact assignment with embedding/nrm passthrough — feeds the
-    grouped pairwise stage without a join back to the corpus."""
-    import numpy as np
-
-    cent_ids = np.array([cid for cid, _ in cents], dtype="int64")
-    cent_vecs = [np.asarray(cv, dtype=np.float64) for _, cv in cents]
-    cent_norms = [_py_norm(cv) for _, cv in cents]
-
-    def assign(pdfs):
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            nrm = pdf["nrm"].to_numpy()
-            cos = np.empty((len(cent_ids), len(pdf)))
-            for k, cv in enumerate(cent_vecs):
-                acc = m[:, 0] * cv[0]
-                for j in range(1, DIM):
-                    acc = acc + m[:, j] * cv[j]
-                cos[k] = acc / (nrm * cent_norms[k])
-            best = np.argmax(cos, axis=0)
-            yield pd.DataFrame(
-                {
-                    "cluster_id": cent_ids[best],
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "embedding": pdf["embedding"],
-                    "nrm": nrm,
-                }
-            )
-
-    return assign
 
 
 def _cluster_pairs_udf(threshold: float):
@@ -1379,9 +1334,7 @@ def q_semantic_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .packing import MIXTURE_ALPHA
 
     cents, _, _, emb = _kmeans_fit(spark, sf_dir)
-    asg = emb.select("vec_id", "embedding", "nrm").mapInPandas(
-        _kmeans_assignments_udf(cents), "vec_id long, cluster_id long, c double"
-    )
+    asg = _assign_clusters(emb, cents, ("vec_id", "cluster_id", "c"))
     counts = (
         asg.groupBy("cluster_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_vectors"))

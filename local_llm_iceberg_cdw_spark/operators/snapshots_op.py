@@ -1824,20 +1824,19 @@ def _multiset_equal(a: DataFrame, b: DataFrame) -> bool:
 def _ann_encode(spark: SparkSession, df: DataFrame, cents) -> DataFrame:
     """SQ8×IVF index row for each embedding: (vec_id, cell, m, codes).
 
-    cell = fold-exact argmax-cosine seed centroid (the same Arrow
-    assignment machinery the kmeans/semantic ops hash against DuckDB —
-    ``_asg_passthrough_udf``), m = max|x| (greatest: fold-order-free),
+    cell = fold-exact argmax-cosine centroid (the same Arrow assignment
+    the kmeans/semantic ops hash against DuckDB — ``_assign_clusters``),
+    m = max|x| (greatest: fold-order-free),
     codes = floor(x·127/m + 0.5) per dimension (floor on identical
     doubles carries no half-tie semantics).  Everything downstream of
     the narrow Arrow stage is JVM-side array expressions."""
     from .quantization import _sq8_max_abs
-    from .similarity import _asg_passthrough_udf, _norm
+    from .similarity import _assign_clusters, _norm
 
-    assigned = df.select(
-        "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
-    ).mapInPandas(
-        _asg_passthrough_udf(cents),
-        "cluster_id long, vec_id long, embedding array<float>, nrm double",
+    assigned = _assign_clusters(
+        df.select("vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")),
+        cents,
+        ("cluster_id", "vec_id", "embedding"),
     )
     with_m = assigned.select(
         "vec_id",
@@ -1892,19 +1891,32 @@ def ann_build_maintained_index(spark: SparkSession, sf_dir: str, workdir: str):
 
 def ann_probe_topk(spark: SparkSession, sf_dir: str, idx: DataFrame, cents) -> DataFrame:
     """The production ANN read path over a persisted index scan: nprobe
-    cells per query (broadcast probe rows), SQ8-ADC scores from the
-    stored codes, deterministic per-query top-k.  Candidate rows ∝
-    probed cells; vectors never shuffle (codes ride the scan)."""
-    from pyspark.sql.window import Window
-
-    from .similarity import IVF_NPROBE, N_QUERIES, TOP_K, _probe_cells_udf
+    cells per query by the matmul probe (`_probe_cells_udf`), then
+    `_sq8_probe_topk` — (query_id, neighbor_id, rank)."""
+    from .similarity import IVF_NPROBE, N_QUERIES, _probe_cells_udf
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    queries = F.broadcast(
+    probes = (
         emb.filter(F.col("vec_id") < N_QUERIES)
         .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
         .withColumn("cell", F.explode(_probe_cells_udf(cents, IVF_NPROBE)(F.col("qv"))))
     )
+    return _sq8_probe_topk(idx, probes).select("query_id", "neighbor_id", "rank")
+
+
+def _sq8_probe_topk(idx: DataFrame, probes: DataFrame) -> DataFrame:
+    """SQ8-ADC search of a persisted SQ8×IVF index scan ``idx`` (vec_id,
+    cell, m, codes) for a prebuilt probe frame ``probes`` (query_id,
+    cell, qv): the probe rows broadcast into a cell-keyed join, each
+    candidate scores ``sq8_score`` = round6((m/127)·Σ qv_d·code_d) from
+    the stored codes (left fold from 0.0, the oracle's order), and the
+    per-query top-k ranks by (sq8_score desc, neighbor_id).  Returns
+    (query_id, neighbor_id, sq8_score, rank).  Candidate rows ∝ probed
+    cells; vectors never shuffle (codes ride the scan)."""
+    from pyspark.sql.window import Window
+
+    from .similarity import TOP_K
+
     adc = F.aggregate(
         F.zip_with(
             F.col("qv"),
@@ -1915,19 +1927,18 @@ def ann_probe_topk(spark: SparkSession, sf_dir: str, idx: DataFrame, cents) -> D
         lambda acc, x: acc + x,
     )
     w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
+        F.col("sq8_score").desc(), F.col("neighbor_id").asc()
     )
     return (
-        idx.join(queries, "cell")
+        idx.join(F.broadcast(probes), "cell")
         .filter(F.col("query_id") != F.col("vec_id"))
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            F.round((F.col("m") / F.lit(127.0)) * adc, 6).alias("score"),
+            F.round((F.col("m") / F.lit(127.0)) * adc, 6).alias("sq8_score"),
         )
-        .withColumn("rank", F.row_number().over(w))
+        .withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank")
     )
 
 
@@ -2017,13 +2028,11 @@ def q_ann_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         rebuilt = _ann_encode(spark, corpus.read(), cents).localCheckpoint(eager=True)
         index_equals_rebuild = _multiset_equal(maintained, rebuilt)
 
-        def search(idx: DataFrame) -> DataFrame:
-            return ann_probe_topk(spark, sf_dir, idx, cents)
-
         # the one-job multiset check scans each search pipeline exactly
         # once, so no localCheckpoint is needed on the search results
         search_results_identical = _multiset_equal(
-            search(maintained), search(rebuilt)
+            ann_probe_topk(spark, sf_dir, maintained, cents),
+            ann_probe_topk(spark, sf_dir, rebuilt, cents),
         )
 
         result = _ann_increment_audit(index).withColumn(
@@ -2225,33 +2234,40 @@ FROM enc2 GROUP BY m3 ORDER BY increment
 """
 
 
-def _probe_cells_exact(cents, qrows, nprobe: int) -> dict[int, list[int]]:
-    """Driver-side FOLD-EXACT nprobe probe for hashed results: per query,
-    the ``nprobe`` best cells by cosine computed with the same left fold
-    as the SQL oracle's unrolled dot (plain Python floats, j ascending —
-    numpy matmul's pairwise summation may flip a near-tie, which is why
-    `_probe_cells_udf` is fine for self-validated ops but not for a
-    probe whose CELL SET is part of the driver hash).  Ties → lowest
-    centroid id.  Bounded model state: |queries| × k folds over DIM."""
-    def fold_dot(a, b):
-        acc = a[0] * b[0]
-        for j in range(1, len(a)):
-            acc = acc + a[j] * b[j]
-        return acc
+def _exact_probes(spark: SparkSession, emb: DataFrame, cents):
+    """Driver-side FOLD-EXACT probe for hashed results: per query, the
+    ``IVF_NPROBE`` best cells by `_fold_cosines_np` — the rule that
+    assigns index rows to cells (`_assign_clusters`) and the SQL
+    oracle's ranked-cosine CTE, ties → lowest centroid id.  The matmul
+    probe (`_probe_cells_udf`) may flip a near-tie, which is fine for
+    self-validated ops but not for a probe whose CELL SET is part of the
+    driver hash.  Bounded model state: |queries| × k folds over DIM.
 
-    import math
+    Returns ``(probes, cells)``: the broadcastable (query_id, cell, qv)
+    frame for `_sq8_probe_topk` and each query's list of probed cells."""
+    from .similarity import (
+        IVF_NPROBE,
+        _collect_query_vectors,
+        _fold_cosines_np,
+        _fold_norms_np,
+    )
 
-    cn = {cid: math.sqrt(fold_dot(cv, cv)) for cid, cv in cents}
-    out: dict[int, list[int]] = {}
-    for qid, qv in qrows:
-        q = [float(x) for x in qv]
-        qn = math.sqrt(fold_dot(q, q))
-        scored = [
-            (fold_dot(q, cv) / (qn * cn[cid]), cid) for cid, cv in cents
-        ]
-        scored.sort(key=lambda t: (-t[0], t[1]))
-        out[qid] = [cid for _, cid in scored[:nprobe]]
-    return out
+    q_ids, qmat, _ = _collect_query_vectors(emb)
+    cos = _fold_cosines_np(qmat, _fold_norms_np(qmat), cents)
+    cent_ids = [cid for cid, _ in cents]
+    cells = [
+        [cent_ids[k] for k in row[:IVF_NPROBE]]
+        for row in (-cos).argsort(axis=1, kind="stable")
+    ]
+    probes = spark.createDataFrame(
+        [
+            (int(qid), cell, [float(x) for x in qv])
+            for qid, qv, q_cells in zip(q_ids, qmat, cells)
+            for cell in q_cells
+        ],
+        "query_id long, cell long, qv array<float>",
+    )
+    return probes, cells
 
 
 def q_ann_index_partitioned_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2276,18 +2292,16 @@ def q_ann_index_partitioned_probe(spark: SparkSession, sf_dir: str) -> DataFrame
       top-k row-for-row (pruning is an optimization, never a filter).
 
     Probe cells are computed with the fold-exact driver-side quantizer
-    (`_probe_cells_exact`) so the cell set is bit-identical to the SQL
-    oracle's ranked-cosine CTE — the `_asg_passthrough_udf` rule from
-    the determinism ladder applied to the probe side.
+    (`_exact_probes`) so the cell set is bit-identical to the SQL
+    oracle's ranked-cosine CTE — the `_assign_clusters` rule from the
+    determinism ladder applied to the probe side.
 
     Scale: this is the lever that makes a persisted 100 TB index
     searchable — a probe opens nprobe partitions (manifest-planned, no
     listing of the other k−nprobe), and candidate rows ∝ probed cells;
     without the spec the same probe scans every index file and filters
     in-plan."""
-    from pyspark.sql.window import Window
-
-    from .similarity import IVF_NPROBE, N_QUERIES, TOP_K, collect_centroids
+    from .similarity import collect_centroids
 
     workdir = tempfile.mkdtemp(prefix="snap_ann_probe_")
     try:
@@ -2298,44 +2312,8 @@ def q_ann_index_partitioned_probe(spark: SparkSession, sf_dir: str) -> DataFrame
             _ann_encode(spark, emb, cents).repartition("cell"),
             partition_by=["cell"],
         )
-        qrows = [
-            (int(r.vec_id), list(r.embedding))
-            for r in emb.filter(F.col("vec_id") < N_QUERIES).collect()
-        ]
-        probes = _probe_cells_exact(cents, qrows, IVF_NPROBE)
-        probe_cells = sorted({c for cells in probes.values() for c in cells})
-        queries = F.broadcast(
-            spark.createDataFrame(
-                [(qid, cell, qv) for (qid, qv) in qrows for cell in probes[qid]],
-                "query_id long, cell long, qv array<float>",
-            )
-        )
-
-        def search(idx: DataFrame) -> DataFrame:
-            adc = F.aggregate(
-                F.zip_with(
-                    F.col("qv"),
-                    F.col("codes"),
-                    lambda q, c: q.cast("double") * c.cast("double"),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            w = Window.partitionBy("query_id").orderBy(
-                F.col("sq8_score").desc(), F.col("neighbor_id").asc()
-            )
-            return (
-                idx.join(queries, "cell")
-                .filter(F.col("query_id") != F.col("vec_id"))
-                .select(
-                    "query_id",
-                    F.col("vec_id").alias("neighbor_id"),
-                    F.round((F.col("m") / F.lit(127.0)) * adc, 6).alias("sq8_score"),
-                )
-                .withColumn("rank", F.row_number().over(w).cast("long"))
-                .filter(F.col("rank") <= TOP_K)
-            )
-
+        probes, cells = _exact_probes(spark, emb, cents)
+        probe_cells = sorted({c for q_cells in cells for c in q_cells})
         pruned_scan = index.read().filter(F.col("cell").isin(probe_cells))
         plan = pruned_scan._jdf.queryExecution().executedPlan().toString()
         # Catalyst renders a one-element IN-list as EqualTo and the exact
@@ -2350,8 +2328,8 @@ def q_ann_index_partitioned_probe(spark: SparkSession, sf_dir: str) -> DataFrame
                 plan,
             )
         )
-        topk = search(pruned_scan).localCheckpoint(eager=True)
-        matches_unpruned = _multiset_equal(topk, search(index.read()))
+        topk = _sq8_probe_topk(pruned_scan, probes).localCheckpoint(eager=True)
+        matches_unpruned = _multiset_equal(topk, _sq8_probe_topk(index.read(), probes))
         import glob as _glob
 
         data_dir = index._head(index._load()).data_dirs[0]
@@ -2473,15 +2451,7 @@ def q_ann_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     offline; the replace commit is atomic metadata, and CDC consumers
     see the rewrite as a clean delete+insert set bounded by the
     reassigned fraction, not the table size."""
-    from pyspark.sql.window import Window
-
-    from .similarity import (
-        IVF_NPROBE,
-        N_QUERIES,
-        TOP_K,
-        collect_centroids,
-        fitted_centroids,
-    )
+    from .similarity import collect_centroids, fitted_centroids
 
     workdir = tempfile.mkdtemp(prefix="snap_ann_refresh_")
     try:
@@ -2513,45 +2483,10 @@ def q_ann_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_ins = changes.filter(F.col("_change_type") == "insert").count()
         changelog_ok = n_del == n_reassigned and n_ins == n_reassigned
 
-        qrows = [
-            (int(r.vec_id), list(r.embedding))
-            for r in emb.filter(F.col("vec_id") < N_QUERIES).collect()
-        ]
-        probes = _probe_cells_exact(fitted, qrows, IVF_NPROBE)
-        queries = F.broadcast(
-            spark.createDataFrame(
-                [(qid, cell, qv) for (qid, qv) in qrows for cell in probes[qid]],
-                "query_id long, cell long, qv array<float>",
-            )
+        probes, _ = _exact_probes(spark, emb, fitted)
+        search_identical = _multiset_equal(
+            _sq8_probe_topk(gen2, probes), _sq8_probe_topk(rebuilt, probes)
         )
-
-        def search(idx: DataFrame) -> DataFrame:
-            adc = F.aggregate(
-                F.zip_with(
-                    F.col("qv"),
-                    F.col("codes"),
-                    lambda q, c: q.cast("double") * c.cast("double"),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            w = Window.partitionBy("query_id").orderBy(
-                F.col("score").desc(), F.col("neighbor_id").asc()
-            )
-            return (
-                idx.join(queries, "cell")
-                .filter(F.col("query_id") != F.col("vec_id"))
-                .select(
-                    "query_id",
-                    F.col("vec_id").alias("neighbor_id"),
-                    F.round((F.col("m") / F.lit(127.0)) * adc, 6).alias("score"),
-                )
-                .withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= TOP_K)
-                .select("query_id", "neighbor_id", "rank")
-            )
-
-        search_identical = _multiset_equal(search(gen2), search(rebuilt))
 
         checksum = F.aggregate(
             F.transform("codes", lambda c, i: c * (i + F.lit(1)).cast("bigint")),

@@ -4,8 +4,10 @@ The standard gate (``test_oracle_parity.py``) runs at sf0.001; this sweep
 re-verifies a float-sensitive / heavy subset at sf0.1, where accumulated
 summation error, bigger pair spaces, and larger shuffles would surface
 any fold-order or threshold-boundary divergence the small fixtures hide.
-Gated behind ``SPARK_GRAFT_SWEEP_SF01=1`` (~4 min) so the default suite
-stays fast; the full 30-op sweep was green when last run (round 6).
+Gated behind ``SPARK_GRAFT_SWEEP_SF01=1`` so the default suite stays
+fast; run it after any change to an op in ``SWEEP``:
+
+    SPARK_GRAFT_SWEEP_SF01=1 python -m pytest tests/test_oracle_parity_sf01.py -q
 """
 
 from __future__ import annotations
@@ -83,6 +85,14 @@ SWEEP = [
     # watermark cutoffs + DECIMAL money folds at 10x events
     "ann_index_maintenance",
     "stream_append_watermark_drained",
+    # the shared IVF/PQ/SQ8 kernels: fold-exact cell assignment (k-means
+    # step, persisted index), the fold-exact probe's cell set, and the
+    # composed ADC + re-rank paths' recall verdicts at 10x corpus
+    "kmeans_step",
+    "ann_index_partitioned_probe",
+    "ann_index_refresh",
+    "ivfpq_topk",
+    "ivfsq8_topk",
 ]
 
 pytestmark = pytest.mark.skipif(

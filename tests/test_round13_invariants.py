@@ -18,11 +18,10 @@ def test_ivfsq8_recall_at_least_pq_tier(spark):
     from local_llm_iceberg_cdw_spark.catalog import load_table
     from local_llm_iceberg_cdw_spark.operators.quantization import (
         IVFSQ8_RECALL_MIN,
-        _dot_flat,
         ivfpq_results,
         ivfsq8_results,
     )
-    from local_llm_iceberg_cdw_spark.operators.similarity import N_QUERIES, TOP_K
+    from local_llm_iceberg_cdw_spark.operators.similarity import N_QUERIES, TOP_K, _dot
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     qv = F.broadcast(
@@ -39,7 +38,7 @@ def test_ivfsq8_recall_at_least_pq_tier(spark):
         .select(
             "query_id",
             "neighbor_id",
-            F.round(_dot_flat(F.col("qv"), F.col("cv")), 6).alias("exact_dot"),
+            F.round(_dot(F.col("qv"), F.col("cv")), 6).alias("exact_dot"),
         )
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= TOP_K)

@@ -106,6 +106,38 @@ def test_ivfsq8_results_fold_twin_matches_brute_exactly(spark):
     assert _digest(qz.ivfsq8_results(spark, SF_SMOKE)) == (50, "539f35e1572c377d")
 
 
+@pytest.mark.parametrize(
+    "build, want",
+    [
+        (lambda spark: qz.ivfpq_results(spark, SF_SMOKE), (50, "539f35e1572c377d")),
+        (
+            lambda spark: qz.ivfpq_results(spark, SF_SMOKE, fitted=True),
+            (50, "180a24dcdda7efde"),
+        ),
+        (
+            lambda spark: qz.ivfsq8_results(spark, SF_SMOKE, fitted=True),
+            (50, "180a24dcdda7efde"),
+        ),
+        (
+            lambda spark: sim.ivf_topk_results(spark, SF_SMOKE, fitted=True),
+            (50, "6d5e37a7ce76b7ac"),
+        ),
+    ],
+    ids=[
+        "ivfpq_results",
+        "ivfpq_results_fitted",
+        "ivfsq8_results_fitted",
+        "ivf_topk_results_fitted",
+    ],
+)
+def test_ivf_composed_results_match_golden_rows_exactly(spark, build, want):
+    """The IVF compositions' rows, seed and fitted models, as emitted
+    before their cell-assignment, ADC and re-rank code was shared.  The
+    judged ``*_topk`` forms hash only counts and a recall boolean, so
+    these digests are the only pin on the rows themselves."""
+    assert _digest(build(spark)) == want
+
+
 _VECTOR_OPS = {
     "cosine_topk": sim.q_cosine_topk,
     "hard_negative_mining": sim.q_hard_negative_mining,
@@ -113,6 +145,7 @@ _VECTOR_OPS = {
     "semantic_decontamination": sim.q_semantic_decontamination,
     "sq8_adc_topk": qz.q_sq8_adc_topk,
     "ivfsq8_results": qz.ivfsq8_results,
+    "ivfsq8_topk": qz.q_ivfsq8_topk,
     "dense_shortlist": lambda spark, sf: sim.dense_shortlist(
         spark, sf, sim.MMR_QUERY_VEC, 15
     ),
@@ -129,9 +162,10 @@ def test_vector_op_plans_one_arrow_pair_pass(spark, name):
 
 
 def test_zero_vector_fails_loudly_naming_its_vec_id(spark, tmp_path):
-    """A zero embedding has no cosine: the pair kernel and the
-    decontamination scorer raise a ValueError naming its vec_id, on the
-    executor (corpus row) and on the driver (query vector) alike."""
+    """A zero embedding has no cosine: the pair kernel, the
+    decontamination scorer and the k-means cell assignment raise a
+    ValueError naming its vec_id, on the executor (corpus row) and on
+    the driver (query vector) alike."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -151,6 +185,8 @@ def test_zero_vector_fails_loudly_naming_its_vec_id(spark, tmp_path):
         lambda: sim.dense_shortlist(spark, d, sim.MMR_QUERY_VEC, 15).collect(),
         lambda: sim.dense_shortlist(spark, d, zero_id, 15).collect(),
         lambda: sim.q_semantic_decontamination(spark, d).collect(),
+        lambda: sim.q_kmeans_assignments(spark, d).collect(),
+        lambda: sim.q_semantic_dedup(spark, d).collect(),
     ):
         with pytest.raises(Exception, match=f"vec_id {zero_id} is a zero vector"):
             run()
