@@ -19,20 +19,34 @@ Reproduces the Iceberg behaviors the reference depends on
 
 Design for scale: data lives in parquet (all executor-side, full pushdown
 — the manifest only lists directories); the manifest is a tiny
-driver-side JSON, exactly how Iceberg treats its metadata JSON. Commits
-are atomic via write-temp-then-rename.
+driver-side JSON, exactly how Iceberg treats its metadata JSON.
+
+Every commit is compare-and-publish (Iceberg's optimistic concurrency):
+a verb reads the manifest and ``_refs.json`` once (``_begin``), derives
+its new entry from the parent it read (``_child``), and ``_publish``
+writes the new manifest and refs only if both files still hold the
+bytes read at the start — otherwise it removes the dirs the commit
+wrote and raises.  Each file is replaced atomically (write temp, then
+``os.replace``).  The compare and the rename are not one atomic step:
+a writer landing in the microseconds between them is still lost, so
+the format remains single-writer in that window.
 """
 
 from __future__ import annotations
 
+import copy
+import dataclasses
+import functools
 import json
 import os
+import shutil
 import time
 import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST = "_snapshots.json"
 REFS = "_refs.json"
@@ -90,6 +104,77 @@ class Snapshot:
     # were expired — without it, expiration would strand old-named files
     # behind a new-named manifest schema.  None on ordinary snapshots.
     dir_renames: dict | None = None
+
+
+@dataclass
+class _CommitBase:
+    """What a commit read when it began (``_begin``): the raw manifest and
+    refs bytes ``_publish`` compares before writing, and the snapshots,
+    refs and main head parsed from those same bytes."""
+
+    manifest: bytes | None
+    refs_raw: bytes | None
+    snaps: list[Snapshot]
+    refs: dict
+    head: Snapshot | None  # main head; None on an empty table
+
+    @property
+    def next_sid(self) -> int:
+        return self.snaps[-1].snapshot_id + 1 if self.snaps else 1
+
+    def branch_head(self, branch: str) -> Snapshot:
+        if branch not in self.refs or self.refs[branch]["type"] != "branch":
+            raise ValueError(f"unknown branch {branch!r} (tags are immutable)")
+        by_id = {s.snapshot_id: s for s in self.snaps}
+        return by_id[self.refs[branch]["snapshot_id"]]
+
+
+def _union_all(dfs: list[DataFrame]) -> DataFrame:
+    """Union by name; a frame may lack columns later frames carry (schema
+    evolution, renamed dirs), which read as NULL."""
+    return functools.reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs)
+
+
+def _with_pos(df: DataFrame) -> DataFrame:
+    """Tag a parquet scan with its physical ``(file, pos)`` coordinates
+    under the collision-proof aliases ``__sp_file_path`` / ``__sp_pos``
+    (a data column literally named ``file_path`` or ``pos`` must not make
+    the reference ambiguous).  ``_metadata`` resolves only on the scan
+    relation, so this runs before any union."""
+    return df.select(
+        F.col("_metadata.file_path").alias("__sp_file_path"),
+        F.col("_metadata.row_index").alias("__sp_pos"),
+        "*",
+    )
+
+
+def _delete_match(rows: DataFrame, dk: DataFrame, position: bool = False):
+    """The condition a delete file ``dk`` masks ``rows`` on: ``(file,
+    pos)`` equality for a position delete (``rows`` carry the ``__sp_*``
+    coordinates); for an equality delete, NULL-SAFE equality (IS NOT
+    DISTINCT FROM) on every key column — Iceberg equality deletes treat a
+    NULL delete-field value as matching NULL, so a plain ON-name join
+    would never mask rows for a key tuple containing NULL."""
+    if position:
+        return (rows["__sp_file_path"] == dk["file_path"]) & (rows["__sp_pos"] == dk["pos"])
+    return functools.reduce(lambda a, b: a & b, [rows[c].eqNullSafe(dk[c]) for c in dk.columns])
+
+
+def _conform(df: DataFrame, schema: StructType | None) -> DataFrame:
+    """Project ``df`` onto the manifest schema: manifest column order (a
+    hive-partitioned read appends partition columns last), no hidden
+    layout columns, and typed NULLs for columns a historical layout or a
+    mapped union lacks.  Catalyst collapses the projection into the
+    scan."""
+    if not schema:
+        return df
+    have = set(df.columns)
+    return df.select(
+        *[
+            F.col(f.name) if f.name in have else F.lit(None).cast(f.dataType).alias(f.name)
+            for f in schema.fields
+        ]
+    )
 
 
 # -- hidden-partition transforms (Iceberg partition-spec transforms) --------
@@ -231,18 +316,24 @@ class SnapshotParquetTable:
     def _manifest_path(self) -> str:
         return os.path.join(self.path, MANIFEST)
 
-    def _load(self) -> list[Snapshot]:
-        if not os.path.exists(self._manifest_path()):
-            return []
-        with open(self._manifest_path()) as f:
-            raw = json.load(f)
-        missing = {i for i, s in enumerate(raw) if "parent_snapshot_id" not in s}
-        snaps = [Snapshot(**{"parent_snapshot_id": None, **s}) for s in raw]
+    def _load(self, raw: bytes | None = None, refs: dict | None = None) -> list[Snapshot]:
+        """The manifest's snapshots, parsed from ``raw`` (the manifest
+        bytes a commit read in ``_begin``, with the refs it read) or, when
+        None, from the manifest file as it is now."""
+        if raw is None:
+            raw = self._file_bytes(self._manifest_path())
+            if raw is None:
+                return []
+        entries = json.loads(raw)
+        missing = {i for i, s in enumerate(entries) if "parent_snapshot_id" not in s}
+        snaps = [Snapshot(**{"parent_snapshot_id": None, **s}) for s in entries]
         if missing:
-            self._backfill_parents(snaps, missing)
+            self._backfill_parents(snaps, missing, refs)
         return snaps
 
-    def _backfill_parents(self, snaps: list[Snapshot], missing: set[int]) -> None:
+    def _backfill_parents(
+        self, snaps: list[Snapshot], missing: set[int], refs: dict | None = None
+    ) -> None:
         """Recover commit lineage for pre-lineage manifest entries.
 
         A strictly-linear backfill (parent = previous manifest entry) is
@@ -293,7 +384,7 @@ class SnapshotParquetTable:
         if not non_appends:
             return
         by_id = {s.snapshot_id: s for s in snaps}
-        refs = self._load_refs()
+        refs = self._load_refs() if refs is None else refs
         strict_branch: set[int] = set()
         for name, r in refs.items():
             # only branches own commits; a tag is a pointer at an existing
@@ -325,6 +416,123 @@ class SnapshotParquetTable:
             json.dump([s.__dict__ for s in snapshots], f, indent=2)
         os.replace(tmp, self._manifest_path())  # atomic commit
 
+    # -- commits: begin, child, publish -------------------------------------
+    #
+    # Every verb that writes the manifest or the refs file runs the same
+    # three steps: ``_begin`` reads both files once, ``_child`` derives the
+    # new manifest entry from its parent, and ``_publish`` writes — only if
+    # both files still hold the bytes ``_begin`` read.
+
+    def _begin(self) -> _CommitBase:
+        manifest = self._file_bytes(self._manifest_path())
+        refs_raw = self._file_bytes(self._refs_path())
+        refs = json.loads(refs_raw) if refs_raw is not None else {}
+        snaps = self._load(manifest, refs) if manifest is not None else []
+        head = self._head(snaps, refs) if snaps else None
+        return _CommitBase(manifest, refs_raw, snaps, refs, head)
+
+    @staticmethod
+    def _child(parent: Snapshot | None, sid: int, operation: str, **changed) -> Snapshot:
+        """The manifest entry of commit ``sid`` on ``parent``: the parent's
+        data and delete files, partition spec, schema, layout flag, sort
+        order and file bounds carry over (copied, so the parent's own
+        entry never changes); its commit properties and rename records do
+        not.  ``changed`` overrides any field; ``timestamp_ms`` left None
+        stamps the commit now."""
+        base = parent or Snapshot(0, 0, operation, [])
+        mutable = ("data_dirs", "partition_by", "delete_files", "sort_order", "file_stats")
+        fields = {
+            **{f: copy.copy(getattr(base, f)) for f in mutable},
+            "snapshot_id": sid,
+            "timestamp_ms": None,
+            "operation": operation,
+            "parent_snapshot_id": parent.snapshot_id if parent else None,
+            "commit_props": None,
+            "renamed": None,
+            "dir_renames": None,
+            **changed,
+        }
+        if fields["timestamp_ms"] is None:
+            fields["timestamp_ms"] = int(time.time() * 1000)
+        return dataclasses.replace(base, **fields)
+
+    @staticmethod
+    def _with_dir(parent: Snapshot | None, data_dir: str, dir_stats: list[dict]) -> dict:
+        """``data_dirs`` and ``file_stats`` of a commit that adds one data
+        dir to ``parent``'s files.  Parent bounds carry forward: an added
+        file never invalidates existing files' bounds."""
+        return {
+            "data_dirs": [*(parent.data_dirs if parent else []), data_dir],
+            "file_stats": {**((parent.file_stats if parent else None) or {}), data_dir: dir_stats},
+        }
+
+    def _publish(
+        self,
+        base: _CommitBase,
+        child: Snapshot | None = None,
+        *,
+        branch: str | None = None,
+        snaps: list[Snapshot] | None = None,
+        refs: dict | None = None,
+        written: tuple[str, ...] = (),
+    ) -> int | None:
+        """Publish a commit that began at ``base``.  ``child`` is appended
+        to the manifest ``base`` read and its target ref moves to it:
+        ``branch``, or main once the table has refs (a refless table's
+        manifest tail is main).  ``snaps`` / ``refs`` instead replace the
+        manifest / refs file outright (``expire_snapshots``, the ref
+        verbs).  Returns the child's snapshot id.
+
+        Optimistic-concurrency check: a commit takes real time between
+        ``_begin`` and here (Spark writes, footer scans; ``commit_staged``
+        runs in its own DataSource worker process), and another writer can
+        commit in between — ``os.replace`` would then silently clobber
+        that snapshot (lost update).  Two commits that pick the same sid
+        and write the same dir fail on the dir (``errorifexists``, or
+        ``commit_staged``'s makedirs); the others are caught here.  The
+        whole manifest is compared, not its tail: an ``expire_snapshots``
+        keeps the tail, and publishing the list read at ``_begin`` would
+        bring back expired entries whose data dirs are deleted.  Refs-only
+        movers (``rollback_to`` / ``fast_forward`` repoint refs['main']
+        without a manifest entry) would resurrect the rolled-back-over
+        lineage, so the refs file is compared too.  Iceberg's commit path
+        does the same CAS-and-retry against the catalog.  On a conflict
+        the ``written`` dirs — created by this commit, so no one else
+        wrote into them — are removed, freeing the sid for the retry.  The
+        remaining microsecond window between the compare and the rename
+        is the documented single-writer residue."""
+        conflict = None
+        if self._file_bytes(self._manifest_path()) != base.manifest:
+            conflict = (
+                f"concurrent commit detected on {self.path}: the manifest changed "
+                "while this commit was staged — rerun the commit (a rerun "
+                "re-plans against the new head)"
+            )
+        elif self._file_bytes(self._refs_path()) != base.refs_raw:
+            conflict = (
+                f"concurrent ref update detected on {self.path}: _refs.json "
+                "changed while this commit was staged (a rollback_to or "
+                "fast_forward moved main) — rerun the commit against the new head"
+            )
+        if conflict is not None:
+            for d in written:
+                shutil.rmtree(d, ignore_errors=True)
+            raise RuntimeError(conflict)
+        if child is not None:
+            snaps = [*base.snaps, child]
+            refs = base.refs
+            if branch is not None:
+                refs[branch]["snapshot_id"] = child.snapshot_id
+            elif refs:
+                refs["main"] = {"snapshot_id": child.snapshot_id, "type": "branch"}
+            else:
+                refs = None
+        if snaps is not None:
+            self._commit(snaps)
+        if refs is not None:
+            self._commit_refs(refs)
+        return child.snapshot_id if child is not None else None
+
     # -- refs: tags & branches (Iceberg's named references) ----------------
     #
     # Refs live beside the manifest as {name: {snapshot_id, type}} — the
@@ -341,16 +549,13 @@ class SnapshotParquetTable:
         return os.path.join(self.path, REFS)
 
     def _load_refs(self) -> dict:
-        if not os.path.exists(self._refs_path()):
-            return {}
-        with open(self._refs_path()) as f:
-            return json.load(f)
+        raw = self._file_bytes(self._refs_path())
+        return json.loads(raw) if raw is not None else {}
 
     @staticmethod
     def _file_bytes(path: str) -> bytes | None:
-        """Raw manifest or refs-file content, or None when absent — what a
-        staged commit compares before publishing to catch a concurrent
-        mover."""
+        """Raw manifest or refs-file content, or None when absent — what
+        ``_publish`` compares to catch a concurrent writer."""
         try:
             with open(path, "rb") as f:
                 return f.read()
@@ -363,10 +568,11 @@ class SnapshotParquetTable:
             json.dump(refs, f, indent=2)
         os.replace(tmp, self._refs_path())
 
-    def _head(self, snaps: list[Snapshot]) -> Snapshot:
+    def _head(self, snaps: list[Snapshot], refs: dict | None = None) -> Snapshot:
         """Main-branch head: the refs pointer when refs exist, else the
-        manifest tail (legacy linear table)."""
-        refs = self._load_refs()
+        manifest tail (legacy linear table).  ``refs`` defaults to the
+        refs file as it is now."""
+        refs = self._load_refs() if refs is None else refs
         if "main" in refs:
             by_id = {s.snapshot_id: s for s in snaps}
             return by_id[refs["main"]["snapshot_id"]]
@@ -388,30 +594,23 @@ class SnapshotParquetTable:
             cur = by_id.get(pid) if pid is not None else None
         return chain
 
-    def _advance_main(self, sid: int) -> None:
-        refs = self._load_refs()
-        if refs:
-            refs["main"] = {"snapshot_id": sid, "type": "branch"}
-            self._commit_refs(refs)
-
     def _create_ref(self, name: str, ref_type: str, version: int | None) -> int:
-        snaps = self._load()
-        if not snaps:
+        base = self._begin()
+        if not base.snaps:
             raise ValueError("cannot create a ref on an empty table")
-        refs = self._load_refs()
+        refs = base.refs
         if name == "main" or name in refs:
             raise ValueError(f"ref {name!r} already exists")
-        head = self._head(snaps)
-        target = head.snapshot_id if version is None else version
-        if target not in {s.snapshot_id for s in snaps}:
+        target = base.head.snapshot_id if version is None else version
+        if target not in {s.snapshot_id for s in base.snaps}:
             raise ValueError(f"unknown snapshot version {target}")
         if "main" not in refs:
-            refs["main"] = {"snapshot_id": head.snapshot_id, "type": "branch"}
+            refs["main"] = {"snapshot_id": base.head.snapshot_id, "type": "branch"}
         # fork_snapshot_id freezes the creation target so lineage recovery
         # (_backfill_parents) can split a branch walk exactly at the fork
         # even if the manifest's parent ids are ever lost
         refs[name] = {"snapshot_id": target, "type": ref_type, "fork_snapshot_id": target}
-        self._commit_refs(refs)
+        self._publish(base, refs=refs)
         return target
 
     def create_tag(self, name: str, version: int | None = None) -> int:
@@ -433,20 +632,16 @@ class SnapshotParquetTable:
         parent-snapshot-id chain — a file-set comparison would wrongly
         reject a branch-side compact/replace (which resets data_dirs but
         preserves lineage)."""
-        snaps = self._load()
-        refs = self._load_refs()
-        if branch not in refs or refs[branch]["type"] != "branch":
-            raise ValueError(f"unknown branch {branch!r}")
-        by_id = {s.snapshot_id: s for s in snaps}
-        target = by_id[refs[branch]["snapshot_id"]]
-        head = self._head(snaps)
+        base = self._begin()
+        target = base.branch_head(branch)
+        by_id = {s.snapshot_id: s for s in base.snaps}
         ancestors = {s.snapshot_id for s in self._ancestry(target, by_id)}
-        if head.snapshot_id not in ancestors:
+        if base.head.snapshot_id not in ancestors:
             raise ValueError(
                 f"cannot fast-forward: main has commits not on branch {branch!r}"
             )
-        refs["main"] = {"snapshot_id": target.snapshot_id, "type": "branch"}
-        self._commit_refs(refs)
+        base.refs["main"] = {"snapshot_id": target.snapshot_id, "type": "branch"}
+        self._publish(base, refs=base.refs)
         return target.snapshot_id
 
     def cherry_pick(self, snapshot_id: int) -> int:
@@ -463,8 +658,8 @@ class SnapshotParquetTable:
         delta ambiguous); re-applying an already-visible delta raises.
         Pending MOR deletes on main keep masking only the files they
         applied to — the picked files postdate them."""
-        snaps = self._load()
-        by_id = {s.snapshot_id: s for s in snaps}
+        base = self._begin()
+        by_id = {s.snapshot_id: s for s in base.snaps}
         if snapshot_id not in by_id:
             raise ValueError(f"unknown snapshot {snapshot_id} at {self.path}")
         src = by_id[snapshot_id]
@@ -478,7 +673,7 @@ class SnapshotParquetTable:
         delta_dirs = [d for d in src.data_dirs if d not in parent_dirs]
         if not delta_dirs:
             raise ValueError(f"snapshot {snapshot_id} adds no data files")
-        head = self._head(snaps)
+        head = base.head
         if set(delta_dirs) & set(head.data_dirs):
             raise ValueError(
                 f"snapshot {snapshot_id}'s delta is already visible on main"
@@ -487,30 +682,19 @@ class SnapshotParquetTable:
             raise ValueError(
                 "cherry-pick requires identical schemas on main and the source"
             )
-        sid = snaps[-1].snapshot_id + 1
         file_stats = dict(head.file_stats) if head.file_stats else {}
         for d in delta_dirs:
             if src.file_stats and d in src.file_stats:
                 file_stats[d] = src.file_stats[d]
-        snaps.append(
-            Snapshot(
-                snapshot_id=sid,
-                timestamp_ms=int(time.time() * 1000),
-                operation="append",
-                data_dirs=[*head.data_dirs, *delta_dirs],
-                partition_by=head.partition_by,
-                schema_json=head.schema_json,
-                parent_snapshot_id=head.snapshot_id,
-                delete_files=head.delete_files,
-                mixed_layout=head.mixed_layout
-                or bool(src.partition_by != head.partition_by),
-                sort_order=head.sort_order,
-                file_stats=file_stats or None,
-            )
+        child = self._child(
+            head,
+            base.next_sid,
+            "append",
+            data_dirs=[*head.data_dirs, *delta_dirs],
+            mixed_layout=head.mixed_layout or bool(src.partition_by != head.partition_by),
+            file_stats=file_stats or None,
         )
-        self._commit(snaps)
-        self._advance_main(sid)
-        return sid
+        return self._publish(base, child)
 
     def refs(self) -> DataFrame:
         """The refs metadata table (Iceberg's ``<table>.refs``): one row
@@ -538,22 +722,20 @@ class SnapshotParquetTable:
         pre-bad state.  Requires the target to be a main ancestor —
         rolling "back" to a side branch would be a fast-forward/
         cherry-pick, not a rollback, and is rejected."""
-        snaps = self._load()
-        if not snaps:
+        base = self._begin()
+        if not base.snaps:
             raise ValueError("cannot roll back an empty table")
-        by_id = {s.snapshot_id: s for s in snaps}
+        by_id = {s.snapshot_id: s for s in base.snaps}
         if version not in by_id:
             raise ValueError(f"unknown snapshot version {version}")
-        head = self._head(snaps)
-        ancestors = {s.snapshot_id for s in self._ancestry(head, by_id)}
+        ancestors = {s.snapshot_id for s in self._ancestry(base.head, by_id)}
         if version not in ancestors:
             raise ValueError(
                 f"snapshot {version} is not an ancestor of main — "
                 "rollback must target main's own lineage"
             )
-        refs = self._load_refs()
-        refs["main"] = {"snapshot_id": version, "type": "branch"}
-        self._commit_refs(refs)
+        base.refs["main"] = {"snapshot_id": version, "type": "branch"}
+        self._publish(base, refs=base.refs)
         return version
 
     # -- DDL ---------------------------------------------------------------
@@ -563,8 +745,6 @@ class SnapshotParquetTable:
 
     def drop(self) -> None:
         """DROP TABLE IF EXISTS semantics (create_iceberg.py:112-115)."""
-        import shutil
-
         if os.path.isdir(self.path):
             shutil.rmtree(self.path)
 
@@ -684,19 +864,12 @@ class SnapshotParquetTable:
         full-table read into a per-day read.  The first snapshot fixes the
         table's partition spec; later appends must match it.
         """
-        snaps = self._load() if self.exists() else []
+        base = self._begin()
         if not os.path.isdir(self.path):
             os.makedirs(self.path, exist_ok=True)
         parent: Snapshot | None = None
-        if snaps:
-            if branch is not None:
-                refs = self._load_refs()
-                if branch not in refs or refs[branch]["type"] != "branch":
-                    raise ValueError(f"unknown branch {branch!r} (tags are immutable)")
-                by_id = {s.snapshot_id: s for s in snaps}
-                parent = by_id[refs[branch]["snapshot_id"]]
-            else:
-                parent = self._head(snaps)
+        if base.snaps:
+            parent = base.head if branch is None else base.branch_head(branch)
             spec = parent.partition_by
             if partition_by is None:
                 # None always means "unchanged" — even under
@@ -731,79 +904,31 @@ class SnapshotParquetTable:
             sort_order = list(sort_order) or None
         if sort_order:
             df = df.sortWithinPartitions(*sort_order)
-        sid = (snaps[-1].snapshot_id + 1) if snaps else 1
+        sid = base.next_sid
         data_dir = os.path.join(self.path, f"data-snap-{sid:06d}")
-        dir_stats = self._write_data_dir(df, data_dir, partition_by, cluster=cluster)
-        snaps.append(
-            self._append_snapshot(
-                parent,
-                sid,
-                data_dir,
-                dir_stats,
-                partition_by=partition_by,
-                schema_json=schema_json,
-                sort_order=sort_order,
-                commit_props=commit_props,
-                timestamp_ms=timestamp_ms,
-                evolve_partition_spec=evolve_partition_spec,
-            )
-        )
-        self._commit(snaps)
-        if branch is not None:
-            refs = self._load_refs()
-            refs[branch]["snapshot_id"] = sid
-            self._commit_refs(refs)
-        else:
-            self._advance_main(sid)
-        return sid
-
-    @staticmethod
-    def _append_snapshot(
-        parent: Snapshot | None,
-        sid: int,
-        data_dir: str,
-        dir_stats: list[dict],
-        *,
-        partition_by: list[str] | None,
-        schema_json: str,
-        sort_order: list[str] | None,
-        commit_props: dict | None,
-        timestamp_ms: int | None = None,
-        evolve_partition_spec: bool = False,
-    ) -> Snapshot:
-        """The manifest entry of one append: the parent's data dirs plus
-        ``data_dir`` — shared by ``append`` (Spark-written dir) and
-        ``commit_staged`` (task-staged files)."""
         # Iceberg-style manifest statistics: per-file column bounds from
-        # the parquet footers just written.  Parent stats carry forward —
-        # an append never invalidates existing files' bounds.  (Here the
-        # footers are read driver-side; at scale the writer tasks report
-        # bounds with their commit message, same as Iceberg's writers.)
-        file_stats = dict(parent.file_stats) if parent and parent.file_stats else {}
-        file_stats[data_dir] = dir_stats
-        return Snapshot(
-            snapshot_id=sid,
-            timestamp_ms=timestamp_ms if timestamp_ms is not None else int(time.time() * 1000),
-            operation="append",
-            data_dirs=[*(parent.data_dirs if parent else []), data_dir],
+        # the parquet footers just written.  (Here the footers are read
+        # driver-side; at scale the writer tasks report bounds with their
+        # commit message, same as Iceberg's writers.)  Pending equality
+        # deletes keep masking the OLD files; the new file postdates them
+        # and is never anti-joined.
+        dir_stats = self._write_data_dir(df, data_dir, partition_by, cluster=cluster)
+        child = self._child(
+            parent,
+            sid,
+            "append",
+            **self._with_dir(parent, data_dir, dir_stats),
+            timestamp_ms=timestamp_ms,
             partition_by=partition_by,
             schema_json=schema_json,
-            parent_snapshot_id=parent.snapshot_id if parent else None,
-            # pending equality deletes keep masking the OLD files; the
-            # new file postdates them and is never anti-joined
-            delete_files=parent.delete_files if parent else None,
-            # a spec change (or inherited mix) forces per-dir reads
-            mixed_layout=bool(
-                parent is not None
-                and (
-                    parent.mixed_layout
-                    or (evolve_partition_spec and partition_by != parent.partition_by)
-                )
-            ),
+            # a spec change (or inherited mix) forces per-dir reads; the
+            # check above admits a changed spec only under evolution
+            mixed_layout=parent is not None
+            and (parent.mixed_layout or partition_by != parent.partition_by),
             sort_order=sort_order,
-            file_stats=file_stats,
             commit_props=dict(commit_props) if commit_props else None,
         )
+        return self._publish(base, child, branch=branch, written=(data_dir,))
 
     def commit_staged(
         self,
@@ -830,10 +955,6 @@ class SnapshotParquetTable:
         ingestion go through the foreachBatch sinks, which have the full
         verb surface.  A table created empty takes its schema and spec
         from this commit."""
-        import shutil
-
-        from pyspark.sql.types import StructType
-
         partition_by = list(partition_by) if partition_by else None
         for fld in partition_by or []:
             # arithmetic transforms (days/months/years/hours/truncate) are
@@ -843,11 +964,8 @@ class SnapshotParquetTable:
             # mis-prunes (use a foreachBatch sink for bucket layouts)
             if parse_partition_field(fld)["transform"] == "bucket":
                 raise ValueError(f"staged commit cannot take bucket() layouts, got {fld!r}")
-        # raw bytes, read BEFORE _load: the publish recheck compares them
-        staged_manifest = self._file_bytes(self._manifest_path())
-        snaps = self._load()
-        staged_refs = self._file_bytes(self._refs_path())  # what _head resolves main from
-        parent = self._head(snaps) if snaps else None
+        base = self._begin()
+        parent = base.head
         if parent is not None and parent.partition_by != partition_by:
             raise ValueError(
                 f"staged layout {partition_by} does not match the table's spec "
@@ -866,7 +984,7 @@ class SnapshotParquetTable:
                     f"{want}, stream writes {got} (no evolution on this path)"
                 )
             schema_json = parent.schema_json  # keep nullability flags stable
-        sid = snaps[-1].snapshot_id + 1 if snaps else 1
+        sid = base.next_sid
         data_dir = os.path.join(self.path, f"data-snap-{sid:06d}")
         # NO exist_ok: a crash between the moves below and the manifest
         # commit leaks the dir, and the replayed epoch picks the SAME sid
@@ -886,54 +1004,19 @@ class SnapshotParquetTable:
             dest = os.path.join(data_dir, rel)
             os.makedirs(os.path.dirname(dest), exist_ok=True)
             shutil.move(f, dest)
-        snaps.append(
-            self._append_snapshot(
-                parent,
-                sid,
-                data_dir,
-                self._collect_file_stats(data_dir),
-                partition_by=partition_by,
-                schema_json=schema_json,
-                sort_order=parent.sort_order if parent else None,
-                commit_props=commit_props,
-            )
+        child = self._child(
+            parent,
+            sid,
+            "append",
+            **self._with_dir(parent, data_dir, self._collect_file_stats(data_dir)),
+            partition_by=partition_by,
+            schema_json=schema_json,
+            commit_props=dict(commit_props) if commit_props else None,
         )
-        # optimistic-concurrency recheck: the committer runs in its own
-        # DataSource worker process, so a table verb can commit between
-        # the load above (the moves and footer scan take real time) and
-        # the rename below — os.replace would then silently clobber that
-        # snapshot (lost update).  A verb that writes data-snap-{sid}
-        # fails on the dir claimed above instead; the others are caught
-        # here.  The whole manifest is compared, not its tail: an
-        # expire_snapshots keeps the tail, and publishing the list loaded
-        # above would bring back expired entries whose data dirs are
-        # deleted.  Refs-only movers (rollback_to / fast_forward repoint
-        # refs['main'] without a manifest entry) would resurrect the
-        # rolled-back-over lineage, so the refs file is compared too.
-        # Iceberg's commit path does the same CAS-and-retry against the
-        # catalog.  The remaining microsecond window is the documented
-        # single-writer residue.
-        conflict = None
-        if self._file_bytes(self._manifest_path()) != staged_manifest:
-            conflict = (
-                f"concurrent commit detected on {self.path}: the manifest changed "
-                "while this append was staged — rerun the commit (the replayed "
-                "epoch will re-plan against the new head)"
-            )
-        elif self._file_bytes(self._refs_path()) != staged_refs:
-            conflict = (
-                f"concurrent ref update detected on {self.path}: _refs.json "
-                "changed while this append was staged (a rollback_to or "
-                "fast_forward moved main) — rerun the commit against the new head"
-            )
-        if conflict is not None:
-            # unpublished and created above without exist_ok, so no one
-            # else wrote into it: free the sid for the replayed epoch
-            shutil.rmtree(data_dir)
-            raise RuntimeError(conflict)
-        self._commit(snaps)
-        self._advance_main(sid)
-        return sid
+        # a table verb can commit between _begin and here (the moves and
+        # footer scan take real time): _publish refuses, and removes the
+        # unpublished dir so the replayed epoch can reuse the sid
+        return self._publish(base, child, written=(data_dir,))
 
     @staticmethod
     def _check_schema(parent: Snapshot | None, df: DataFrame, evolve_schema: bool) -> str:
@@ -945,8 +1028,6 @@ class SnapshotParquetTable:
         new = {f.name: f.dataType.simpleString() for f in df.schema.fields}
         prev_json = parent.schema_json if parent is not None else None
         if prev_json is not None:
-            from pyspark.sql.types import StructType
-
             old = {
                 f.name: f.dataType.simpleString() for f in StructType.fromJson(json.loads(prev_json)).fields
             }
@@ -977,8 +1058,6 @@ class SnapshotParquetTable:
         (``count_distinct`` over bare columns drops tuples containing
         NULL; the delete path itself is already null-safe via
         ``eqNullSafe``)."""
-        from pyspark.sql import functions as F
-
         n_rows, n_keys = (
             source.select(*key_cols)
             .agg(
@@ -1017,11 +1096,11 @@ class SnapshotParquetTable:
         AQE broadcasts it — so the cost is ~ one rewrite of the table, the
         same as Iceberg COW; MOR-style delete files are out of scope.
         """
-        snaps = self._load()
-        if not snaps:
+        base = self._begin()
+        if not base.snaps:
             raise ValueError("cannot merge into an empty table")
         self._check_merge_source_unique(source, key_cols)
-        head = self._head(snaps)
+        head = base.head
         self._check_schema(head, source, evolve_schema)
         current = self.read()
         keep = current.join(source.select(*key_cols), key_cols, "left_anti")
@@ -1031,28 +1110,10 @@ class SnapshotParquetTable:
         # order, added columns appended) — the exact schema of the
         # rewritten file.
         merged = keep.unionByName(source, allowMissingColumns=True)
-        schema_json = merged.schema.json()
-        sid = snaps[-1].snapshot_id + 1
-        data_dir = os.path.join(self.path, f"data-snap-{sid:06d}")
-        spec = head.partition_by
-        stats = self._write_data_dir(merged, data_dir, spec)
-        snaps.append(
-            Snapshot(
-                snapshot_id=sid,
-                timestamp_ms=int(time.time() * 1000),
-                operation="overwrite",
-                data_dirs=[data_dir],
-                partition_by=spec,
-                schema_json=schema_json,
-                parent_snapshot_id=head.snapshot_id,
-                sort_order=head.sort_order,
-                file_stats={data_dir: stats},
-                commit_props=commit_props,
-            )
+        return self._commit_rewrite(
+            base, head, merged, "overwrite", schema_json=merged.schema.json(),
+            commit_props=commit_props,
         )
-        self._commit(snaps)
-        self._advance_main(sid)
-        return sid
 
     def merge_mor(
         self,
@@ -1086,16 +1147,14 @@ class SnapshotParquetTable:
         semantics; masking via eqNullSafe is reserved for
         ``delete_where_mor``, whose keys name rows actually matched IN
         the table, Iceberg's equality-delete contract)."""
-        snaps = self._load()
-        if not snaps:
+        base = self._begin()
+        if not base.snaps:
             raise ValueError("cannot merge into an empty table")
         self._check_merge_source_unique(source, key_cols)
-        head = self._head(snaps)
+        head = base.head
         schema_json = self._check_schema(head, source, evolve_schema)
-        sid = snaps[-1].snapshot_id + 1
+        sid = base.next_sid
         del_dir = os.path.join(self.path, f"delete-snap-{sid:06d}")
-        import functools
-
         all_non_null = functools.reduce(
             lambda a, b: a & b, [F.col(k).isNotNull() for k in key_cols]
         )
@@ -1103,31 +1162,20 @@ class SnapshotParquetTable:
             1
         ).write.mode("errorifexists").parquet(del_dir)
         data_dir = os.path.join(self.path, f"data-snap-{sid:06d}")
-        spec = head.partition_by
-        file_stats = dict(head.file_stats) if head.file_stats else {}
-        file_stats[data_dir] = self._write_data_dir(source, data_dir, spec)
-        snaps.append(
-            Snapshot(
-                snapshot_id=sid,
-                timestamp_ms=int(time.time() * 1000),
-                operation="overwrite",
-                data_dirs=[*head.data_dirs, data_dir],
-                partition_by=spec,
-                schema_json=schema_json,
-                parent_snapshot_id=head.snapshot_id,
-                delete_files=[
-                    *(head.delete_files or []),
-                    {"dir": del_dir, "applies_to": list(head.data_dirs)},
-                ],
-                mixed_layout=head.mixed_layout,
-                sort_order=head.sort_order,
-                file_stats=file_stats,
-                commit_props=commit_props,
-            )
+        stats = self._write_data_dir(source, data_dir, head.partition_by)
+        child = self._child(
+            head,
+            sid,
+            "overwrite",
+            **self._with_dir(head, data_dir, stats),
+            schema_json=schema_json,
+            delete_files=[
+                *(head.delete_files or []),
+                {"dir": del_dir, "applies_to": list(head.data_dirs)},
+            ],
+            commit_props=commit_props,
         )
-        self._commit(snaps)
-        self._advance_main(sid)
-        return sid
+        return self._publish(base, child, written=(del_dir, data_dir))
 
     def delete_where_mor(self, condition: str, key_cols: list[str]) -> int:
         """MERGE-ON-READ equality ``DELETE``: writes ONE small
@@ -1142,37 +1190,34 @@ class SnapshotParquetTable:
         materializes pending deletes away (its replace snapshot carries
         none), exactly Iceberg's rewrite_data_files + rewrite
         position/equality deletes maintenance."""
-        snaps = self._load()
-        if not snaps:
+        base = self._begin()
+        if not base.snaps:
             raise ValueError("cannot delete from an empty table")
-        head = self._head(snaps)
         keys = self.read().filter(condition).select(*key_cols).distinct()
-        sid = snaps[-1].snapshot_id + 1
-        del_dir = os.path.join(self.path, f"delete-snap-{sid:06d}")
-        keys.coalesce(1).write.mode("errorifexists").parquet(del_dir)
-        snaps.append(
-            Snapshot(
-                snapshot_id=sid,
-                timestamp_ms=int(time.time() * 1000),
-                operation="delete",
-                data_dirs=list(head.data_dirs),
-                partition_by=head.partition_by,
-                schema_json=head.schema_json,
-                parent_snapshot_id=head.snapshot_id,
-                delete_files=[
-                    *(head.delete_files or []),
-                    {"dir": del_dir, "applies_to": list(head.data_dirs)},
-                ],
-                sort_order=head.sort_order,
-                # bounds stay valid under MOR deletes: masking rows only
-                # shrinks each file's value set, so [min, max] remains a
-                # superset and skipping decisions stay conservative-correct
-                file_stats=head.file_stats,
+        return self._commit_delete_file(base, keys)
+
+    def _commit_delete_file(self, base: _CommitBase, rows: DataFrame, position: bool = False) -> int:
+        """Write ``rows`` as ONE delete file and commit it on main as a
+        *delete* snapshot that keeps the head's data files and masks only
+        them (the sequence-number scope).  Equality deletes hold key
+        tuples; position deletes hold ``(__sp_file_path, __sp_pos)`` rows,
+        persisted under the on-disk names ``file_path`` / ``pos`` that
+        ``read()`` anti-joins on.  File bounds carry over: masking rows
+        only shrinks each file's value set, so [min, max] remains a
+        superset and skipping decisions stay conservative-correct."""
+        head, sid = base.head, base.next_sid
+        del_dir = os.path.join(self.path, f"{'p' if position else ''}delete-snap-{sid:06d}")
+        entry = {"dir": del_dir, "applies_to": list(head.data_dirs)}
+        if position:
+            rows = rows.select(
+                F.col("__sp_file_path").alias("file_path"), F.col("__sp_pos").alias("pos")
             )
+            entry["kind"] = "position"
+        rows.coalesce(1).write.mode("errorifexists").parquet(del_dir)
+        child = self._child(
+            head, sid, "delete", delete_files=[*(head.delete_files or []), entry]
         )
-        self._commit(snaps)
-        self._advance_main(sid)
-        return sid
+        return self._publish(base, child, written=(del_dir,))
 
     def _pos_tagged_scan(
         self, snap: Snapshot, apply_deletes: bool
@@ -1190,8 +1235,6 @@ class SnapshotParquetTable:
         physical-name-based (the manifest schema is applied to every
         file), so a renamed column would read NULL from pre-rename files
         — compact() materializes the names first."""
-        import functools
-
         if self._has_unmaterialized_renames(snap):
             raise ValueError(
                 "positional verbs scan files under physical column names; "
@@ -1199,57 +1242,13 @@ class SnapshotParquetTable:
             )
         reader = self.spark.read
         if snap.schema_json is not None:
-            from pyspark.sql.types import StructType
-
             reader = reader.schema(StructType.fromJson(json.loads(snap.schema_json)))
-
-        def tag(df: DataFrame) -> DataFrame:
-            # `_metadata` resolves only on the scan relation, before unions
-            return df.select(
-                F.col("_metadata.file_path").alias("__sp_file_path"),
-                F.col("_metadata.row_index").alias("__sp_pos"),
-                "*",
-            )
-
-        deletes = (snap.delete_files or []) if apply_deletes else []
-        union = lambda dfs: functools.reduce(  # noqa: E731
-            lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs
+        return self._masked_scan(
+            snap.data_dirs,
+            (snap.delete_files or []) if apply_deletes else [],
+            lambda dirs, _with: _union_all([_with_pos(reader.parquet(d)) for d in dirs]),
+            keep_pos=True,
         )
-        if not deletes:
-            return union([tag(reader.parquet(d)) for d in snap.data_dirs])
-        # group data dirs by WHICH pending deletes apply (sequence-number
-        # scoping, exactly read()'s grouping), mask each group, union
-        groups: dict[tuple[int, ...], list[str]] = {}
-        for d in snap.data_dirs:
-            key = tuple(i for i, e in enumerate(deletes) if d in set(e["applies_to"]))
-            groups.setdefault(key, []).append(d)
-        parts = []
-        for key, dirs in groups.items():
-            part = union([tag(reader.parquet(d)) for d in dirs])
-            for i in key:
-                dk = self.spark.read.parquet(deletes[i]["dir"])
-                if deletes[i].get("kind") == "position":
-                    cond = (part["__sp_file_path"] == dk["file_path"]) & (
-                        part["__sp_pos"] == dk["pos"]
-                    )
-                else:
-                    cond = functools.reduce(
-                        lambda a, b: a & b,
-                        [part[c].eqNullSafe(dk[c]) for c in dk.columns],
-                    )
-                part = part.join(dk, cond, "left_anti")
-            parts.append(part)
-        return union(parts)
-
-    @staticmethod
-    def _write_position_delete(positions: DataFrame, del_dir: str) -> None:
-        """Persist ``(__sp_file_path, __sp_pos)`` rows as a position-delete
-        file under the on-disk column names ``file_path`` / ``pos`` (the
-        names ``read()`` anti-joins on)."""
-        positions.select(
-            F.col("__sp_file_path").alias("file_path"),
-            F.col("__sp_pos").alias("pos"),
-        ).coalesce(1).write.mode("errorifexists").parquet(del_dir)
 
     def delete_where_positions(self, condition: str) -> int:
         """MERGE-ON-READ **positional** ``DELETE``: writes ONE small
@@ -1275,41 +1274,12 @@ class SnapshotParquetTable:
         table whose OWN schema contains ``file_path`` or ``pos`` stays
         unambiguous.  O(matched positions) write cost, no data rewrite;
         ``compact()`` materializes pending deletes away."""
-        snaps = self._load()
-        if not snaps:
+        base = self._begin()
+        if not base.snaps:
             raise ValueError("cannot delete from an empty table")
-        head = self._head(snaps)
-        scan = self._pos_tagged_scan(head, apply_deletes=False)
+        scan = self._pos_tagged_scan(base.head, apply_deletes=False)
         positions = scan.filter(condition).select("__sp_file_path", "__sp_pos")
-        sid = snaps[-1].snapshot_id + 1
-        del_dir = os.path.join(self.path, f"pdelete-snap-{sid:06d}")
-        self._write_position_delete(positions, del_dir)
-        snaps.append(
-            Snapshot(
-                snapshot_id=sid,
-                timestamp_ms=int(time.time() * 1000),
-                operation="delete",
-                data_dirs=list(head.data_dirs),
-                partition_by=head.partition_by,
-                schema_json=head.schema_json,
-                parent_snapshot_id=head.snapshot_id,
-                delete_files=[
-                    *(head.delete_files or []),
-                    {
-                        "dir": del_dir,
-                        "applies_to": list(head.data_dirs),
-                        "kind": "position",
-                    },
-                ],
-                mixed_layout=head.mixed_layout,
-                sort_order=head.sort_order,
-                # bounds stay valid: masking rows only shrinks value sets
-                file_stats=head.file_stats,
-            )
-        )
-        self._commit(snaps)
-        self._advance_main(sid)
-        return sid
+        return self._commit_delete_file(base, positions, position=True)
 
     def dedup_positions(self, key_cols: list[str] | None = None) -> int:
         """In-place EXACT DEDUPLICATION via a positional delete: keep one
@@ -1338,15 +1308,13 @@ class SnapshotParquetTable:
         exactly one visible copy always survives."""
         from pyspark.sql.window import Window
 
-        snaps = self._load()
-        if not snaps:
+        base = self._begin()
+        if not base.snaps:
             raise ValueError("cannot dedup an empty table")
-        head = self._head(snaps)
+        head = base.head
         scan = self._pos_tagged_scan(head, apply_deletes=True)
         if key_cols is None:
             if head.schema_json is not None:
-                from pyspark.sql.types import StructType
-
                 schema = StructType.fromJson(json.loads(head.schema_json))
                 key_cols = [f.name for f in schema.fields]
             else:
@@ -1359,34 +1327,7 @@ class SnapshotParquetTable:
             .filter(F.col("__sp_rn") > 1)
             .select("__sp_file_path", "__sp_pos")
         )
-        sid = snaps[-1].snapshot_id + 1
-        del_dir = os.path.join(self.path, f"pdelete-snap-{sid:06d}")
-        self._write_position_delete(positions, del_dir)
-        snaps.append(
-            Snapshot(
-                snapshot_id=sid,
-                timestamp_ms=int(time.time() * 1000),
-                operation="delete",
-                data_dirs=list(head.data_dirs),
-                partition_by=head.partition_by,
-                schema_json=head.schema_json,
-                parent_snapshot_id=head.snapshot_id,
-                delete_files=[
-                    *(head.delete_files or []),
-                    {
-                        "dir": del_dir,
-                        "applies_to": list(head.data_dirs),
-                        "kind": "position",
-                    },
-                ],
-                mixed_layout=head.mixed_layout,
-                sort_order=head.sort_order,
-                file_stats=head.file_stats,
-            )
-        )
-        self._commit(snaps)
-        self._advance_main(sid)
-        return sid
+        return self._commit_delete_file(base, positions, position=True)
 
     def rewrite_position_deletes(self) -> int:
         """Maintenance verb (Iceberg's ``rewrite_position_delete_files``):
@@ -1398,12 +1339,10 @@ class SnapshotParquetTable:
         (they carry per-file key scopes the merge must not widen).
         Returns the new snapshot id, or 0 when fewer than two pending
         position-delete files exist (nothing to merge)."""
-        import functools
-
-        snaps = self._load()
-        if not snaps:
+        base = self._begin()
+        if not base.snaps:
             raise ValueError("cannot rewrite deletes of an empty table")
-        head = self._head(snaps)
+        head = base.head
         entries = list(head.delete_files or [])
         pos = [e for e in entries if e.get("kind") == "position"]
         if len(pos) < 2:
@@ -1415,59 +1354,59 @@ class SnapshotParquetTable:
         # positions are file-path-scoped, so the union of applies_to is
         # semantically exact: the anti-join can only match the named files
         applies = sorted({d for e in pos for d in e["applies_to"]})
-        sid = snaps[-1].snapshot_id + 1
+        sid = base.next_sid
         del_dir = os.path.join(self.path, f"pdelete-snap-{sid:06d}")
         merged.coalesce(1).write.mode("errorifexists").parquet(del_dir)
-        snaps.append(
-            Snapshot(
-                snapshot_id=sid,
-                timestamp_ms=int(time.time() * 1000),
-                operation="replace",
-                data_dirs=list(head.data_dirs),
-                partition_by=head.partition_by,
-                schema_json=head.schema_json,
-                parent_snapshot_id=head.snapshot_id,
-                delete_files=[
-                    *(e for e in entries if e.get("kind") != "position"),
-                    {"dir": del_dir, "applies_to": applies, "kind": "position"},
-                ],
-                mixed_layout=head.mixed_layout,
-                sort_order=head.sort_order,
-                file_stats=head.file_stats,
-            )
+        child = self._child(
+            head,
+            sid,
+            "replace",
+            delete_files=[
+                *(e for e in entries if e.get("kind") != "position"),
+                {"dir": del_dir, "applies_to": applies, "kind": "position"},
+            ],
         )
-        self._commit(snaps)
-        self._advance_main(sid)
-        return sid
+        return self._publish(base, child, written=(del_dir,))
 
     def delete_where(self, condition: str) -> int:
         """Copy-on-write ``DELETE FROM … WHERE condition``: rewrites the
         surviving rows as one new *delete* snapshot (history preserved)."""
-        snaps = self._load()
-        if not snaps:
+        base = self._begin()
+        if not base.snaps:
             raise ValueError("cannot delete from an empty table")
-        head = self._head(snaps)
         surviving = self.read().filter(f"NOT ({condition})")
-        sid = snaps[-1].snapshot_id + 1
+        return self._commit_rewrite(base, base.head, surviving, "delete")
+
+    def _commit_rewrite(
+        self,
+        base: _CommitBase,
+        head: Snapshot,
+        df: DataFrame,
+        operation: str,
+        *,
+        branch: str | None = None,
+        **changed,
+    ) -> int:
+        """Write ``df`` as the ONE data dir of a new snapshot on ``head``,
+        laid out by its current spec, and publish it (on ``branch``, else
+        main) — the copy-on-write commit of ``merge``, ``delete_where``,
+        ``compact`` and ``replace``.  The rewrite materializes every
+        pending delete and the current layout, so the new entry carries
+        no delete files and is not mixed-layout."""
+        sid = base.next_sid
         data_dir = os.path.join(self.path, f"data-snap-{sid:06d}")
-        spec = head.partition_by
-        stats = self._write_data_dir(surviving, data_dir, spec)
-        snaps.append(
-            Snapshot(
-                snapshot_id=sid,
-                timestamp_ms=int(time.time() * 1000),
-                operation="delete",
-                data_dirs=[data_dir],
-                partition_by=spec,
-                schema_json=head.schema_json,
-                parent_snapshot_id=head.snapshot_id,
-                sort_order=head.sort_order,
-                file_stats={data_dir: stats},
-            )
+        stats = self._write_data_dir(df, data_dir, head.partition_by)
+        child = self._child(
+            head,
+            sid,
+            operation,
+            data_dirs=[data_dir],
+            file_stats={data_dir: stats},
+            delete_files=None,
+            mixed_layout=False,
+            **changed,
         )
-        self._commit(snaps)
-        self._advance_main(sid)
-        return sid
+        return self._publish(base, child, branch=branch, written=(data_dir,))
 
     def compact(
         self,
@@ -1500,21 +1439,15 @@ class SnapshotParquetTable:
         tasks write concurrently — at 100 TB you compact a
         10k-cell index with 10k parallel writers, never through the
         single coalesce(1) task an unpartitioned compact uses."""
-        snaps = self._load()
-        if not snaps:
+        base = self._begin()
+        if not base.snaps:
             raise ValueError("cannot compact an empty table")
         if branch is not None:
-            refs = self._load_refs()
-            if branch not in refs or refs[branch]["type"] != "branch":
-                raise ValueError(f"unknown branch {branch!r} (tags are immutable)")
-            by_id = {s.snapshot_id: s for s in snaps}
-            head = by_id[refs[branch]["snapshot_id"]]
+            head = base.branch_head(branch)
             current = self.read(ref=branch)
         else:
-            head = self._head(snaps)
+            head = base.head
             current = self.read()
-        sid = snaps[-1].snapshot_id + 1
-        data_dir = os.path.join(self.path, f"data-snap-{sid:06d}")
         spec = head.partition_by
         if sort:
             if not head.sort_order:
@@ -1551,28 +1484,7 @@ class SnapshotParquetTable:
             )
         else:
             clustered = current.coalesce(target_file_count)
-        stats = self._write_data_dir(clustered, data_dir, spec)
-        snaps.append(
-            Snapshot(
-                snapshot_id=sid,
-                timestamp_ms=int(time.time() * 1000),
-                operation="replace",
-                data_dirs=[data_dir],
-                partition_by=spec,
-                schema_json=head.schema_json,
-                parent_snapshot_id=head.snapshot_id,
-                sort_order=head.sort_order,
-                file_stats={data_dir: stats},
-            )
-        )
-        self._commit(snaps)
-        if branch is not None:
-            refs = self._load_refs()
-            refs[branch]["snapshot_id"] = sid
-            self._commit_refs(refs)
-        else:
-            self._advance_main(sid)
-        return sid
+        return self._commit_rewrite(base, head, clustered, "replace", branch=branch)
 
     def replace(
         self,
@@ -1599,32 +1511,17 @@ class SnapshotParquetTable:
         replayed micro-batch no-ops instead of re-applying its delta
         (``batch_committed`` reads every operation's props, not just
         appends')."""
-        snaps = self._load()
-        if not snaps:
+        base = self._begin()
+        if not base.snaps:
             raise ValueError("cannot replace an empty table (use create)")
-        head = self._head(snaps)
-        schema_json = self._check_schema(head, df, evolve_schema)
-        sid = snaps[-1].snapshot_id + 1
-        data_dir = os.path.join(self.path, f"data-snap-{sid:06d}")
-        spec = head.partition_by
-        stats = self._write_data_dir(df, data_dir, spec)
-        snaps.append(
-            Snapshot(
-                snapshot_id=sid,
-                timestamp_ms=int(time.time() * 1000),
-                operation="replace",
-                data_dirs=[data_dir],
-                partition_by=spec,
-                schema_json=schema_json,
-                parent_snapshot_id=head.snapshot_id,
-                sort_order=head.sort_order,
-                file_stats={data_dir: stats},
-                commit_props=dict(commit_props) if commit_props else None,
-            )
+        return self._commit_rewrite(
+            base,
+            base.head,
+            df,
+            "replace",
+            schema_json=self._check_schema(base.head, df, evolve_schema),
+            commit_props=dict(commit_props) if commit_props else None,
         )
-        self._commit(snaps)
-        self._advance_main(sid)
-        return sid
 
     def rename_column(self, old: str, new: str) -> int:
         """ALTER TABLE … RENAME COLUMN as a METADATA-ONLY commit —
@@ -1646,10 +1543,10 @@ class SnapshotParquetTable:
           or re-specced layout first;
         - rollback across a rename refuses (see ``rollback_to``): undo a
           rename by renaming back, which keeps the log consistent."""
-        snaps = self._load()
-        if not snaps:
+        base = self._begin()
+        if not base.snaps:
             raise ValueError("cannot rename a column of an empty table")
-        head = self._head(snaps)
+        head = base.head
         if head.delete_files:
             raise ValueError(
                 "rename_column with pending merge-on-read delete files would "
@@ -1668,7 +1565,7 @@ class SnapshotParquetTable:
                 "rename_column on a mixed-layout table (historical dirs may "
                 "partition by the old name); compact() first"
             )
-        from pyspark.sql.types import StructField, StructType
+        from pyspark.sql.types import StructField
 
         schema = StructType.fromJson(json.loads(head.schema_json))
         names = [f.name for f in schema.fields]
@@ -1682,31 +1579,21 @@ class SnapshotParquetTable:
                 for f in schema.fields
             ]
         )
-        sid = snaps[-1].snapshot_id + 1
-        snaps.append(
-            Snapshot(
-                snapshot_id=sid,
-                timestamp_ms=int(time.time() * 1000),
-                operation="rename",
-                data_dirs=list(head.data_dirs),
-                partition_by=head.partition_by,
-                schema_json=renamed_schema.json(),
-                parent_snapshot_id=head.snapshot_id,
-                delete_files=None,
-                mixed_layout=head.mixed_layout,
-                sort_order=[new if c == old else c for c in head.sort_order]
-                if head.sort_order
-                else None,
-                # bounds stay keyed by PHYSICAL names: the skipping planner
-                # looks predicates up by logical name, misses, and keeps
-                # the file — conservative, never wrong
-                file_stats=head.file_stats,
-                renamed={old: new},
-            )
+        # file bounds carry over keyed by PHYSICAL names: the skipping
+        # planner looks predicates up by logical name, misses, and keeps
+        # the file — conservative, never wrong
+        child = self._child(
+            head,
+            base.next_sid,
+            "rename",
+            schema_json=renamed_schema.json(),
+            delete_files=None,
+            sort_order=[new if c == old else c for c in head.sort_order]
+            if head.sort_order
+            else None,
+            renamed={old: new},
         )
-        self._commit(snaps)
-        self._advance_main(sid)
-        return sid
+        return self._publish(base, child)
 
     @staticmethod
     def _dir_phys_info(
@@ -1723,8 +1610,6 @@ class SnapshotParquetTable:
         OVERRIDES — the fold is the complete mapping as of that
         snapshot, covering rename commits the expiration removed), and
         every later rename commit rewrites the mapping's image."""
-        from pyspark.sql.types import StructType
-
         pending = set(dirs)
         mapping: dict[str, dict[str, str]] = {}
         schemas: dict[str, str | None] = {}
@@ -1787,16 +1672,18 @@ class SnapshotParquetTable:
         (Iceberg, by contrast, documents that expired snapshots' summary
         properties simply disappear — its writers rely on the checkpoint
         outliving the retention window; this format keeps the stronger
-        guarantee at O(#distinct streams) metadata)."""
-        import shutil
-        from dataclasses import replace as _dc_replace
+        guarantee at O(#distinct streams) metadata).
 
-        snaps = self._load()
+        The shortened manifest is published BEFORE any expired dir is
+        deleted: a publish refused by a concurrent commit (or a crash)
+        must not leave the manifest naming deleted data."""
+        base = self._begin()
+        snaps = base.snaps
         if len(snaps) <= keep_last:
             return 0
         # a snapshot referenced by any tag/branch (or main) never expires —
         # Iceberg's expire_snapshots honors retained refs the same way
-        ref_ids = {r["snapshot_id"] for r in self._load_refs().values()}
+        ref_ids = {r["snapshot_id"] for r in base.refs.values()}
         tail = snaps[-keep_last:]
         kept = [s for s in snaps if s in tail or s.snapshot_id in ref_ids]
         expired = [s for s in snaps if s not in kept]
@@ -1822,14 +1709,12 @@ class SnapshotParquetTable:
         # otherwise old-named files would strand behind a new-named
         # manifest schema once their rename/introducing commits expire.
         if any(s.operation == "rename" or s.dir_renames for s in snaps):
-            from dataclasses import replace as _fold_replace
-
             by_id = {s.snapshot_id: s for s in snaps}
             for i, k in enumerate(kept):
                 chain = list(reversed(self._ancestry(k, by_id)))
                 info = self._dir_phys_info(chain, list(k.data_dirs))
                 if info or k.dir_renames:
-                    kept[i] = _fold_replace(k, dir_renames=info or None)
+                    kept[i] = dataclasses.replace(k, dir_renames=info or None)
         for s in expired:
             absorb(s.commit_props)
         if ledger:
@@ -1845,7 +1730,8 @@ class SnapshotParquetTable:
                     ledger.items(), key=lambda kv: (kv[0][0], kv[0][1] or "")
                 )
             ]
-            kept[0] = _dc_replace(kept[0], commit_props=props)
+            kept[0] = dataclasses.replace(kept[0], commit_props=props)
+        self._publish(base, snaps=kept)
         live = {d for s in kept for d in s.data_dirs}
         live |= {e["dir"] for s in kept for e in (s.delete_files or [])}
         removed = 0
@@ -1855,7 +1741,6 @@ class SnapshotParquetTable:
                 if d not in live and os.path.isdir(d):
                     shutil.rmtree(d)
                     removed += 1
-        self._commit(kept)
         return removed
 
     def remove_orphan_files(self, older_than_ms: int | None = None) -> int:
@@ -1876,7 +1761,6 @@ class SnapshotParquetTable:
         when no writer is live — the recovery path after a known crash).
         Returns the number of directories removed."""
         import glob as _glob
-        import shutil
 
         snaps = self._load()
         live = {d for s in snaps for d in s.data_dirs}
@@ -1963,23 +1847,14 @@ class SnapshotParquetTable:
                 raise ValueError(f"unknown ref {ref!r}")
             version = refs[ref]["snapshot_id"]
         snap = self._snapshot_for(as_of_timestamp_ms, version)
-        import functools
-
         reader = self.spark.read
         schema = None
-        schema_cols: list[str] | None = None
         if snap.schema_json is not None:
             # the manifest owns the schema (Iceberg model): data files that
-            # predate an added column read it as NULL, no footer merging.
-            # Column ORDER is part of the contract too: a hive-partitioned
-            # read appends partition columns last regardless of the
-            # provided schema, so the final projection restores manifest
-            # order (costless — Catalyst collapses it into the scan).
-            from pyspark.sql.types import StructType
-
+            # predate an added column read it as NULL, no footer merging;
+            # _conform restores the manifest column order at the end
             schema = StructType.fromJson(json.loads(snap.schema_json))
             reader = reader.schema(schema)
-            schema_cols = [f.name for f in schema.fields]
 
         # rename evolution: per-dir physical→logical name maps, composed
         # from the rename commits after each dir's introducing snapshot.
@@ -1992,42 +1867,10 @@ class SnapshotParquetTable:
             else {}
         )
 
-        def ordered(df: DataFrame) -> DataFrame:
-            if not schema_cols:
-                return df
-            have = set(df.columns)
-            if all(c in have for c in schema_cols):
-                return df.select(*schema_cols)
-            # a mapped union may lack a later-added column entirely —
-            # conform to the manifest schema with typed NULLs
-            fields = {f.name: f for f in schema.fields}
-            return df.select(
-                *[
-                    F.col(c) if c in have else F.lit(None).cast(fields[c].dataType).alias(c)
-                    for c in schema_cols
-                ]
-            )
-
-        deletes = snap.delete_files or []
-        if not deletes and not snap.partition_by and not snap.mixed_layout and not dir_map:
-            return ordered(reader.parquet(*snap.data_dirs))
-
-        def _with_pos(df: DataFrame) -> DataFrame:
-            # physical (file, pos) coordinates for position-delete masking —
-            # must be selected on the SCAN relation (before any union), the
-            # only place `_metadata` resolves
-            return df.select(
-                F.col("_metadata.file_path").alias("__sp_file_path"),
-                F.col("_metadata.row_index").alias("__sp_pos"),
-                "*",
-            )
-
         def read_mapped(d: str, with_pos: bool) -> DataFrame:
             # a renamed dir reads under its PHYSICAL (write-time) schema,
             # then aliases to the current logical names — the read-side
             # half of metadata-only rename evolution
-            from pyspark.sql.types import StructType
-
             phys = StructType.fromJson(json.loads(dir_map[d]["schema_json"]))
             df = self.spark.read.schema(phys).parquet(d)
             if with_pos:
@@ -2038,20 +1881,17 @@ class SnapshotParquetTable:
                 *keep, *[F.col(n).alias(mp[n]) for n in phys.fieldNames()]
             )
 
-        def read_dirs(dirs: list[str], with_pos: bool = False) -> DataFrame:
+        def read_dirs(dirs: list[str], with_pos: bool) -> DataFrame:
             if dir_map:
                 # per-dir reads so each dir can carry its own name map;
                 # un-renamed dirs still read under the manifest schema
-                dfs = [
-                    read_mapped(d, with_pos)
-                    if d in dir_map
-                    else (
-                        _with_pos(reader.parquet(d)) if with_pos else reader.parquet(d)
-                    )
-                    for d in dirs
-                ]
-                return functools.reduce(
-                    lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs
+                return _union_all(
+                    [
+                        read_mapped(d, with_pos)
+                        if d in dir_map
+                        else (_with_pos(reader.parquet(d)) if with_pos else reader.parquet(d))
+                        for d in dirs
+                    ]
                 )
             if snap.partition_by or snap.mixed_layout:
                 # multiple hive-partitioned roots can't share one read
@@ -2062,56 +1902,44 @@ class SnapshotParquetTable:
                 # to each branch so hive partition-column inference can't
                 # retype columns.
                 dfs = [reader.parquet(d) for d in dirs]
-                if with_pos:
-                    dfs = [_with_pos(df) for df in dfs]
-                return functools.reduce(
-                    lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs
-                )
+                return _union_all([_with_pos(df) for df in dfs] if with_pos else dfs)
             df = reader.parquet(*dirs)
             return _with_pos(df) if with_pos else df
 
-        if not deletes:
-            return ordered(read_dirs(snap.data_dirs))
-        # merge-on-read: group data dirs by WHICH pending delete files
-        # apply (a delete masks only files older than it — Iceberg
-        # sequence numbers — so appends after the delete are never
-        # anti-joined), then mask each group and union.  Delete files are
-        # key-tuple / position-tuple sized, so each anti-join builds a
-        # broadcast hash side.
+        return _conform(self._masked_scan(snap.data_dirs, snap.delete_files or [], read_dirs), schema)
+
+    def _masked_scan(
+        self,
+        data_dirs: list[str],
+        deletes: list[dict],
+        scan,
+        keep_pos: bool = False,
+    ) -> DataFrame:
+        """Merge-on-read: group ``data_dirs`` by WHICH pending ``deletes``
+        apply (a delete masks only files older than it — Iceberg sequence
+        numbers — so appends after the delete are never anti-joined),
+        read each group with ``scan(dirs, with_pos)``, anti-join it with
+        every delete file that applies, and union.  Delete files are
+        key-tuple / position-tuple sized, so each anti-join builds a
+        broadcast hash side.  ``keep_pos`` keeps the ``__sp_*``
+        coordinates on every row; otherwise they are read only where a
+        position delete needs them, and dropped after."""
         groups: dict[tuple[int, ...], list[str]] = {}
-        for d in snap.data_dirs:
-            key = tuple(
-                i for i, e in enumerate(deletes) if d in set(e["applies_to"])
-            )
+        for d in data_dirs:
+            key = tuple(i for i, e in enumerate(deletes) if d in set(e["applies_to"]))
             groups.setdefault(key, []).append(d)
         parts = []
         for key, dirs in groups.items():
-            with_pos = any(deletes[i].get("kind") == "position" for i in key)
-            part = read_dirs(dirs, with_pos=with_pos)
+            with_pos = keep_pos or any(deletes[i].get("kind") == "position" for i in key)
+            part = scan(dirs, with_pos)
             for i in key:
                 dk = self.spark.read.parquet(deletes[i]["dir"])
-                if deletes[i].get("kind") == "position":
-                    cond = (part["__sp_file_path"] == dk["file_path"]) & (
-                        part["__sp_pos"] == dk["pos"]
-                    )
-                else:
-                    # NULL-SAFE equality (IS NOT DISTINCT FROM): Iceberg
-                    # equality deletes treat a NULL delete-field value as
-                    # matching NULL — a plain ON-name anti-join would never
-                    # mask rows for a delete-key tuple containing NULL
-                    cond = functools.reduce(
-                        lambda a, b: a & b,
-                        [part[c].eqNullSafe(dk[c]) for c in dk.columns],
-                    )
-                part = part.join(dk, cond, "left_anti")
-            if with_pos:
+                position = deletes[i].get("kind") == "position"
+                part = part.join(dk, _delete_match(part, dk, position), "left_anti")
+            if with_pos and not keep_pos:
                 part = part.drop("__sp_file_path", "__sp_pos")
             parts.append(part)
-        return ordered(
-            functools.reduce(
-                lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
-            )
-        )
+        return _union_all(parts)
 
     def _main_ancestry(self) -> list[Snapshot]:
         """Oldest-first snapshots along main's ancestry — the one walk
@@ -2164,25 +1992,19 @@ class SnapshotParquetTable:
             return self.read(version=to_version).limit(0)
         snap = by_id[to_version]
         if snap.schema_json is not None:
-            import functools
-
-            from pyspark.sql.types import StructType
-
             schema = StructType.fromJson(json.loads(snap.schema_json))
             reader = self.spark.read.schema(schema)
             if (snap.partition_by or snap.mixed_layout) and len(new_dirs) > 1:
                 # multiple hive-partitioned roots can't share one read
                 # (conflicting-structure detection) — union per-dir reads,
                 # same contract as read()
-                df = functools.reduce(
-                    lambda a, b: a.unionByName(b, allowMissingColumns=True),
-                    [reader.parquet(d) for d in new_dirs],
-                )
+                df = _union_all([reader.parquet(d) for d in new_dirs])
             else:
                 df = reader.parquet(*new_dirs)
-            # restore manifest column order and drop hidden layout columns
-            # (hive reads append partition columns last) — same as read()
-            return df.select(*[f.name for f in schema.fields])
+            # every schema column is present (the reader applies the
+            # schema); _conform restores manifest order and drops hidden
+            # layout columns
+            return _conform(df, schema)
         return self.spark.read.parquet(*new_dirs)
 
     def read_changes(self, from_version: int, to_version: int) -> DataFrame:
@@ -2222,10 +2044,6 @@ class SnapshotParquetTable:
                 "(changelog follows the parent chain)"
             )
         chain.reverse()
-        import functools
-
-        from pyspark.sql import functions as F
-
         parts: list[DataFrame] = []
         for s in chain:
             parent = by_id.get(s.parent_snapshot_id)
@@ -2244,8 +2062,6 @@ class SnapshotParquetTable:
                 new_dirs = [d for d in s.data_dirs if d not in set(parent.data_dirs)]
                 reader = self.spark.read
                 if s.schema_json is not None:
-                    from pyspark.sql.types import StructType
-
                     reader = reader.schema(
                         StructType.fromJson(json.loads(s.schema_json))
                     )
@@ -2268,8 +2084,8 @@ class SnapshotParquetTable:
             ):
                 # MOR equality-delete fast path (r18): the delete file
                 # NAMES the masked keys, so this commit's changelog is
-                # prev-visible-state ⋉ keys (null-safe equality, exactly
-                # read()'s masking condition) — ONE scan + one semi-join
+                # prev-visible-state ⋉ keys (read()'s masking condition,
+                # _delete_match) — ONE scan + one semi-join
                 # keyed on the (small) delete file, instead of the
                 # generic diff's two full scans + two exceptAll shuffles.
                 # Sound because the delete kept the parent's data files
@@ -2280,12 +2096,8 @@ class SnapshotParquetTable:
                 # keep the generic diff.
                 dk = self.spark.read.parquet(s.delete_files[-1]["dir"])
                 prev_state = self.read(version=parent.snapshot_id)
-                cond = functools.reduce(
-                    lambda a, b: a & b,
-                    [prev_state[c].eqNullSafe(dk[c]) for c in dk.columns],
-                )
                 parts.append(
-                    prev_state.join(dk, cond, "left_semi")
+                    prev_state.join(dk, _delete_match(prev_state, dk), "left_semi")
                     .withColumn("_change_type", F.lit("delete"))
                     .withColumn(
                         "_commit_version", F.lit(s.snapshot_id).cast("long")
@@ -2312,15 +2124,11 @@ class SnapshotParquetTable:
             return base.withColumn("_change_type", F.lit("insert")).withColumn(
                 "_commit_version", F.lit(0).cast("long")
             )
-        return functools.reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
-        )
+        return _union_all(parts)
 
     # -- metadata tables (Iceberg t.history / t.snapshots shape) -----------
 
     def history(self) -> DataFrame:
-        from pyspark.sql import functions as F
-
         snaps = self._load()
         by_id = {s.snapshot_id: s for s in snaps}
         ancestors = (
@@ -2340,8 +2148,6 @@ class SnapshotParquetTable:
         )
 
     def snapshots(self) -> DataFrame:
-        from pyspark.sql import functions as F
-
         rows = [
             (s.timestamp_ms, s.snapshot_id, s.operation, len(s.data_dirs)) for s in self._load()
         ]
@@ -2700,8 +2506,6 @@ class SnapshotParquetTable:
         the key (not just the derived name) so two specs differing only in
         N, planned on one table instance, never share a stale projection;
         None when the source type is unknown."""
-        from pyspark.sql.types import StructType
-
         key = (field["source"], field["param"], repr(val))
         if key in self._bucket_cache:
             return self._bucket_cache[key]
@@ -2914,10 +2718,6 @@ class SnapshotParquetTable:
         ``plan_files``' path check) AND manifest-bounds file skipping on
         the non-partition columns compose, which ``read()``'s Catalyst
         partition pruning alone cannot do."""
-        import functools
-
-        from pyspark.sql import functions as F
-
         snap = self._snapshot_for(None, version)
         if snap.delete_files:
             raise ValueError("read_pruned: pending equality deletes; use read()")
@@ -2932,13 +2732,10 @@ class SnapshotParquetTable:
             )
         kept, total = self.plan_files(predicates, version=version)
         reader = self.spark.read
-        schema_cols: list[str] | None = None
+        schema = None
         if snap.schema_json is not None:
-            from pyspark.sql.types import StructType
-
             schema = StructType.fromJson(json.loads(snap.schema_json))
             reader = reader.schema(schema)
-            schema_cols = schema.fieldNames()
         identity_layout = bool(snap.mixed_layout) or (
             bool(snap.partition_by) and not hidden_only
         )
@@ -2954,33 +2751,15 @@ class SnapshotParquetTable:
                 d: [f for f in kept if f.startswith(d + os.sep)]
                 for d in snap.data_dirs
             }
-            parts = [
-                reader.option("basePath", d).parquet(*fs)
-                for d, fs in by_dir.items()
-                if fs
-            ]
-            df = functools.reduce(
-                lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
+            df = _union_all(
+                [reader.option("basePath", d).parquet(*fs) for d, fs in by_dir.items() if fs]
             )
         else:
             # leaf-file paths: no hive partition discovery, so a hidden
             # partition column never materializes — the data files carry
             # every table column (the hidden-only guarantee above)
             df = reader.parquet(*kept)
-        if schema_cols is not None:
-            have = set(df.columns)
-            # drop anything discovery appended beyond the schema (hidden
-            # layout columns), fill columns a historical layout lacks
-            # (schema evolution) with typed NULLs, restore manifest order
-            fields = {f.name: f for f in schema.fields}
-            df = df.select(
-                *[
-                    F.col(c)
-                    if c in have
-                    else F.lit(None).cast(fields[c].dataType).alias(c)
-                    for c in schema_cols
-                ]
-            )
+        df = _conform(df, schema)
         ops = {
             "=": lambda c, v: F.col(c) == F.lit(v),
             "<": lambda c, v: F.col(c) < F.lit(v),

@@ -4,10 +4,12 @@ at t1 vs t2 sees 200 vs 250 customers, mirroring the reference demo
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from local_llm_iceberg_cdw_spark.datagen.telco import generate_append, generate_initial
-from local_llm_iceberg_cdw_spark.formats.snapshot_parquet import Namespace
+from local_llm_iceberg_cdw_spark.formats.snapshot_parquet import Namespace, SnapshotParquetTable
 
 
 @pytest.fixture(scope="module")
@@ -776,3 +778,146 @@ def test_partition_spec_evolution_requires_flag_and_compact_resolves(spark, tmp_
     assert {(r.id, r.grp) for r in t.read().collect()} == before == {
         (1, "a"), (2, "b"), (3, "c"),
     }
+
+
+# -- one publish path: every commit derives its entry from its parent and
+# -- refuses to publish over a concurrent writer ----------------------------
+
+_MIXED_ROWS = [(1, "eu"), (2, "us")]
+_MIXED_APPEND = [(3, "eu"), (3, "eu")]
+
+
+@pytest.mark.parametrize(
+    "verb, expected",
+    [
+        (lambda t, s: t.delete_where_mor("id = 1", ["id"]), [(2, "us"), (3, "eu"), (3, "eu")]),
+        (lambda t, s: t.delete_where_positions("id = 1"), [(2, "us"), (3, "eu"), (3, "eu")]),
+        (lambda t, s: t.dedup_positions(), [(1, "eu"), (2, "us"), (3, "eu")]),
+        (
+            lambda t, s: t.merge_mor(s.createDataFrame([(1, "apac")], "id long, region string"), ["id"]),
+            [(1, "apac"), (2, "us"), (3, "eu"), (3, "eu")],
+        ),
+    ],
+    ids=["delete_where_mor", "delete_where_positions", "dedup_positions", "merge_mor"],
+)
+def test_mor_commits_keep_mixed_layout(spark, tmp_path, verb, expected):
+    """After a spec evolution to unpartitioned the table mixes a hive
+    layout and a flat one; a merge-on-read commit keeps the data files,
+    so it must keep the mixed-layout flag too, or every later read
+    scans both layouts in one pass and fails on conflicting directory
+    structures."""
+    t = SnapshotParquetTable(spark, str(tmp_path / "t"))
+    t.create(spark.createDataFrame(_MIXED_ROWS, "id long, region string"), partition_by=["region"])
+    t.append(
+        spark.createDataFrame(_MIXED_APPEND, "id long, region string"),
+        partition_by=[],
+        evolve_partition_spec=True,
+    )
+    verb(t, spark)
+    assert sorted((r.id, r.region) for r in t.read().collect()) == expected
+    assert t._load()[-1].mixed_layout
+
+
+def _staged_file(tmp_path) -> list[tuple[str, str]]:
+    """One staged parquet file holding id 7, as a sink task leaves it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    f = str(tmp_path / f"staged-{len(os.listdir(tmp_path))}.parquet")
+    pq.write_table(pa.table({"id": pa.array([7], pa.int64())}), f)
+    return [(f, "f.parquet")]
+
+
+def _race_after_load(monkeypatch, racer) -> None:
+    """Run ``racer`` once, right after the next manifest load — between
+    a commit reading the table and publishing its own snapshot."""
+    real_load = SnapshotParquetTable._load
+    raced = []
+
+    def racing_load(self, *args, **kwargs):
+        snaps = real_load(self, *args, **kwargs)
+        if not raced:
+            raced.append(True)
+            racer()
+        return snaps
+
+    monkeypatch.setattr(SnapshotParquetTable, "_load", racing_load)
+
+
+def test_mor_delete_refuses_a_racing_staged_commit(spark, tmp_path, monkeypatch):
+    """A stream sink's staged commit landing while a MOR delete runs must
+    fail the delete loudly: publishing the delete's manifest would drop
+    the sink's snapshot and its rows."""
+    t = SnapshotParquetTable(spark, str(tmp_path / "t"))
+    t.create(spark.createDataFrame([(1,), (2,)], "id long"))
+    schema_json = t._load()[-1].schema_json
+    sink = SnapshotParquetTable(None, t.path)
+
+    _race_after_load(monkeypatch, lambda: sink.commit_staged(_staged_file(tmp_path), schema_json))
+    with pytest.raises(RuntimeError, match="concurrent commit"):
+        t.delete_where_mor("id = 1", ["id"])
+    monkeypatch.undo()
+
+    # the refused delete removed its own file; the sink's commit survived
+    assert not os.path.exists(os.path.join(t.path, "delete-snap-000002"))
+    assert [(s.snapshot_id, s.operation) for s in t._load()] == [(1, "append"), (2, "append")]
+    assert sorted(r.id for r in t.read().collect()) == [1, 2, 7]
+    assert t.delete_where_mor("id = 1", ["id"]) == 3
+    assert sorted(r.id for r in t.read().collect()) == [2, 7]
+
+
+def test_expire_refuses_a_racing_append_and_deletes_nothing(spark, tmp_path, monkeypatch):
+    """An append landing while ``expire_snapshots`` runs must fail the
+    expire before it deletes any dir: the expire publishes its manifest
+    first, so a refused publish leaves every snapshot's data in place."""
+    t = SnapshotParquetTable(spark, str(tmp_path / "t"))
+    t.create(spark.createDataFrame([(1,)], "id long"))
+    t.append(spark.createDataFrame([(2,)], "id long"))
+    t.replace(spark.createDataFrame([(3,)], "id long"))
+    dirs = [os.path.join(t.path, f"data-snap-{i:06d}") for i in (1, 2, 3)]
+
+    _race_after_load(monkeypatch, lambda: t.append(spark.createDataFrame([(4,)], "id long")))
+    with pytest.raises(RuntimeError, match="concurrent commit"):
+        t.expire_snapshots(keep_last=1)
+    monkeypatch.undo()
+
+    assert all(os.path.isdir(d) for d in dirs)
+    assert [s.snapshot_id for s in t._load()] == [1, 2, 3, 4]
+    assert sorted(r.id for r in t.read().collect()) == [3, 4]
+    assert t.expire_snapshots(keep_last=1) == 2  # the retry expires 1 and 2
+    assert [s.snapshot_id for s in t._load()] == [4]
+    assert sorted(r.id for r in t.read().collect()) == [3, 4]
+
+
+def test_one_publish_path_and_one_entry_builder():
+    """Structural pin on ``SnapshotParquetTable``: only ``_publish`` writes
+    the manifest or the refs file (``create`` seeds an empty manifest),
+    and only ``_child`` (new entries) and ``_load`` (parsed entries)
+    construct a ``Snapshot`` — so no verb grows a second, unchecked
+    publish path or a hand-built entry that forgets a field."""
+    import ast
+    import inspect
+
+    from local_llm_iceberg_cdw_spark.formats import snapshot_parquet
+
+    tree = ast.parse(inspect.getsource(snapshot_parquet))
+    cls = next(
+        n for n in tree.body if isinstance(n, ast.ClassDef) and n.name == "SnapshotParquetTable"
+    )
+    writers: dict[str, list[ast.Call]] = {}
+    builders: set[str] = set()
+    for method in cls.body:
+        if not isinstance(method, ast.FunctionDef):
+            continue
+        for node in ast.walk(method):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = node.func
+            if isinstance(fn, ast.Attribute) and fn.attr in ("_commit", "_commit_refs"):
+                writers.setdefault(method.name, []).append(node)
+            if isinstance(fn, ast.Name) and fn.id == "Snapshot":
+                builders.add(method.name)
+    assert set(writers) == {"_publish", "create"}
+    (seed,) = writers["create"]
+    assert seed.func.attr == "_commit" and ast.literal_eval(seed.args[0]) == []
+    assert builders == {"_child", "_load"}
