@@ -147,16 +147,20 @@ class AnswerPipeline:
         table_info: str,
         top_k: int = 50,
         sql_repair_attempts: int = 0,
+        snapshot_tables: dict | None = None,
     ):
         # sql_repair_attempts=0 keeps reference behavior (a failed query
         # is surfaced as the answer, app-gradio.py:183-186); >0 enables
         # the self-repair loop: re-prompt the model with the failed SQL
-        # and the engine's error, then re-execute.
+        # and the engine's error, then re-execute.  snapshot_tables
+        # ({name: SnapshotParquetTable}) lets generated SQL time-travel
+        # on manifest-format tables (`plans.sql.execute_sql`).
         self.spark = spark
         self.llm = llm
         self.table_info = table_info
         self.top_k = top_k
         self.sql_repair_attempts = sql_repair_attempts
+        self.snapshot_tables = snapshot_tables
 
     def generate_sql(self, question: str) -> str:
         raw = self.llm(
@@ -191,7 +195,9 @@ class AnswerPipeline:
         repairs_left = self.sql_repair_attempts
         while True:
             try:
-                df: DataFrame = execute_sql(self.spark, ans.sql)
+                df: DataFrame = execute_sql(
+                    self.spark, ans.sql, snapshot_tables=self.snapshot_tables
+                )
                 ans.columns = df.columns
                 ans.rows = [tuple(r) for r in df.collect()]
                 break

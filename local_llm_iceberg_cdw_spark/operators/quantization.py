@@ -63,6 +63,7 @@ from .similarity import (
     _numpy_probe_cells,
     _pair_scores,
     _recall_verdict,
+    _require_nonzero,
     collect_centroids,
     fitted_centroids,
 )
@@ -192,7 +193,8 @@ def _pq_encode_udf(cb: list[list[list[float]]], cents=None):
     of the selected subspace distances, s ascending.  With ``cents`` the
     rows also carry the vector's IVF ``cell`` (top-1 by
     `_numpy_probe_cells`), so one corpus pass builds BOTH index tiers —
-    at 100 TB the single index-build scan."""
+    at 100 TB the single index-build scan; a zero vector then raises
+    ValueError naming its vec_id."""
     import numpy as np
 
     def encode(pdfs):
@@ -202,6 +204,7 @@ def _pq_encode_udf(cb: list[list[list[float]]], cents=None):
             m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             out = {"vec_id": pdf["vec_id"].to_numpy()}
             if cents is not None:
+                _require_nonzero(out["vec_id"], np.linalg.norm(m, axis=1))
                 out["cell"] = _numpy_probe_cells(m, cents, 1)[:, 0]
             codes = np.empty((len(pdf), PQ_M), dtype=np.int32)
             recon = None
@@ -408,6 +411,8 @@ def ivfpq_results(
     fitted_codebook docstring for the sweep).  fitted=True selects the
     trained coarse quantizer + trained codebook, the expected winner on
     clustered real-world corpora."""
+    import numpy as np
+
     cents = (
         fitted_centroids(spark, sf_dir) if fitted else collect_centroids(spark, sf_dir)
     )
@@ -419,6 +424,7 @@ def ivfpq_results(
     # query-side model state: probed cells (the index build's matmul
     # rule) + ADC tables, both driver-side
     q_ids, qmat, _ = _collect_query_vectors(emb)
+    _require_nonzero(q_ids, np.linalg.norm(qmat, axis=1))
     probes = [
         (int(qid), int(cell), dt)
         for qid, cells, dt in zip(

@@ -141,15 +141,22 @@ def _numpy_probe_cells(mat, cents, nprobe: int):
     `_probe_cells_udf` and the IVF+PQ index build all call it, so they
     pick the same cells.  BLAS matmul and np.linalg.norm do not replay
     the oracle's fold, so on near-ties this can pick other cells than
-    the fold-exact `_fold_cosines_np` rule the hashed ops use."""
+    the fold-exact `_fold_cosines_np` rule the hashed ops use.  A zero
+    row has no cosine and raises ValueError; callers that hold vec_ids
+    check them first (`_require_nonzero`), so their error names the id."""
     import numpy as np
 
     cent_ids = np.array([cid for cid, _ in cents], dtype=np.int64)
     cent_mat = np.array([cv for _, cv in cents], dtype=np.float64)
     cent_norm = np.linalg.norm(cent_mat, axis=1)
-    sims = (mat @ cent_mat.T) / (
-        np.linalg.norm(mat, axis=1, keepdims=True) * cent_norm[None, :]
-    )
+    norms = np.linalg.norm(mat, axis=1)
+    zero = norms == 0
+    if zero.any():
+        raise ValueError(
+            f"row {int(zero.argmax())} of the probed batch is a zero vector; "
+            "its cosine is undefined"
+        )
+    sims = (mat @ cent_mat.T) / (norms[:, None] * cent_norm[None, :])
     return cent_ids[np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]]
 
 

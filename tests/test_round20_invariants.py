@@ -163,9 +163,9 @@ def test_vector_op_plans_one_arrow_pair_pass(spark, name):
 
 def test_zero_vector_fails_loudly_naming_its_vec_id(spark, tmp_path):
     """A zero embedding has no cosine: the pair kernel, the
-    decontamination scorer and the k-means cell assignment raise a
-    ValueError naming its vec_id, on the executor (corpus row) and on
-    the driver (query vector) alike."""
+    decontamination scorer, the k-means cell assignment and the IVF+PQ
+    index build raise a ValueError naming its vec_id, on the executor
+    (corpus row) and on the driver (query vector) alike."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -187,9 +187,13 @@ def test_zero_vector_fails_loudly_naming_its_vec_id(spark, tmp_path):
         lambda: sim.q_semantic_decontamination(spark, d).collect(),
         lambda: sim.q_kmeans_assignments(spark, d).collect(),
         lambda: sim.q_semantic_dedup(spark, d).collect(),
+        lambda: qz.ivfpq_results(spark, d).collect(),
     ):
         with pytest.raises(Exception, match=f"vec_id {zero_id} is a zero vector"):
             run()
+    # the matmul probe itself, for callers without vec_ids
+    with pytest.raises(ValueError, match="row 1 of the probed batch is a zero vector"):
+        sim._numpy_probe_cells([[1.0, 0.0], [0.0, 0.0]], [(0, [1.0, 0.0])], 1)
 
 
 def test_multiset_equal_rejects_w_collision(spark):

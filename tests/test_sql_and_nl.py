@@ -70,6 +70,29 @@ def test_bind_time_travel_resolves_snapshot_tables(spark, tmp_path):
     assert execute_sql(spark, raw, snapshot_tables={"tv": t}).collect()[0].n == 1
 
 
+def test_pipeline_time_travels_on_snapshot_tables(spark, tmp_path):
+    """Generated AS-OF SQL binds on a manifest-format table when the
+    pipeline is given it: the answer holds the OLDER snapshot's rows."""
+    from local_llm_iceberg_cdw_spark.formats.snapshot_parquet import (
+        SnapshotParquetTable,
+    )
+
+    t = SnapshotParquetTable(spark, str(tmp_path / "t"))
+    t.create(spark.createDataFrame([(1,)], "k long"))
+    t.append(spark.createDataFrame([(2,)], "k long"))
+    llm = MockLLM(
+        [
+            "SELECT k FROM tv FOR SYSTEM_VERSION AS OF 1 ORDER BY k",
+            '{"plottable": false}',
+            "One row.",
+        ]
+    )
+    pipe = AnswerPipeline(spark, llm, table_info="tv(k)", snapshot_tables={"tv": t})
+    ans = pipe.run("What was in tv at its first version?")
+    assert not ans.error
+    assert ans.rows == [(1,)]
+
+
 def test_plot_json_lowercase_booleans():
     d = _parse_plot_json('{"plottable": true, "chart_type": "bar", "title": "T"}')
     assert d.plottable and d.chart_type == "bar"
