@@ -129,6 +129,21 @@ class _CommitBase:
         return by_id[self.refs[branch]["snapshot_id"]]
 
 
+@dataclass
+class CommitChange:
+    """What one commit changed over its parent, from the manifest alone
+    (``SnapshotParquetTable.plan_changes``).  ``kind`` is ``insert``
+    (``dirs``: the data dirs it added, read through ``snap``'s delete
+    files), ``delete_keys`` (``dirs``: its one equality-delete dir),
+    ``metadata`` or ``rewrite`` (no ``dirs``).  ``parent`` is None for
+    the first snapshot a fresh reader sees."""
+
+    snap: Snapshot
+    parent: Snapshot | None
+    kind: str
+    dirs: list[str]
+
+
 def _union_all(dfs: list[DataFrame]) -> DataFrame:
     """Union by name; a frame may lack columns later frames carry (schema
     evolution, renamed dirs), which read as NULL."""
@@ -668,9 +683,8 @@ class SnapshotParquetTable:
                 f"cherry-pick supports append snapshots only; "
                 f"{snapshot_id} is {src.operation!r}"
             )
-        parent = by_id.get(src.parent_snapshot_id)
-        parent_dirs = set(parent.data_dirs) if parent else set()
-        delta_dirs = [d for d in src.data_dirs if d not in parent_dirs]
+        # an append is an insert: the dirs it added over its parent
+        delta_dirs = self._commit_change(src, by_id.get(src.parent_snapshot_id)).dirs
         if not delta_dirs:
             raise ValueError(f"snapshot {snapshot_id} adds no data files")
         head = base.head
@@ -1240,13 +1254,10 @@ class SnapshotParquetTable:
                 "positional verbs scan files under physical column names; "
                 "renamed columns must be materialized first — compact()"
             )
-        reader = self.spark.read
-        if snap.schema_json is not None:
-            reader = reader.schema(StructType.fromJson(json.loads(snap.schema_json)))
-        return self._masked_scan(
+        return self._read_dirs(
+            snap,
             snap.data_dirs,
-            (snap.delete_files or []) if apply_deletes else [],
-            lambda dirs, _with: _union_all([_with_pos(reader.parquet(d)) for d in dirs]),
+            snap.delete_files if apply_deletes else None,
             keep_pos=True,
         )
 
@@ -1654,11 +1665,18 @@ class SnapshotParquetTable:
         if not snaps:
             return False
         snap = snap or self._head(snaps)
-        by_id = {s.snapshot_id: s for s in snaps}
-        chain = list(reversed(self._ancestry(snap, by_id)))
+        return bool(self._dir_map(snap, snap.data_dirs))
+
+    def _dir_map(self, snap: Snapshot, dirs: list[str]) -> dict[str, dict]:
+        """``_dir_phys_info`` of ``dirs`` along ``snap``'s ancestry: the
+        read info of each dir whose physical column names differ from
+        ``snap``'s logical schema.  Empty, without walking the dirs, when
+        no rename commit or expiration fold is on the chain."""
+        by_id = {s.snapshot_id: s for s in self._load()}
+        chain = list(reversed(self._ancestry(snap, by_id)))  # oldest first
         if not any(s.operation == "rename" or s.dir_renames for s in chain):
-            return False
-        return bool(self._dir_phys_info(chain, list(snap.data_dirs)))
+            return {}
+        return self._dir_phys_info(chain, list(dirs))
 
     def expire_snapshots(self, keep_last: int = 1) -> int:
         """Drop metadata (and unreferenced data dirs) of old snapshots.
@@ -1847,25 +1865,33 @@ class SnapshotParquetTable:
                 raise ValueError(f"unknown ref {ref!r}")
             version = refs[ref]["snapshot_id"]
         snap = self._snapshot_for(as_of_timestamp_ms, version)
+        return self._read_dirs(snap, snap.data_dirs, snap.delete_files)
+
+    def _read_dirs(
+        self,
+        snap: Snapshot,
+        dirs: list[str],
+        deletes: list[dict] | None = None,
+        keep_pos: bool = False,
+    ) -> DataFrame:
+        """The one scan of data dirs: ``read()``, the positional verbs,
+        ``read_incremental`` and ``read_changes``' inserts all read files
+        through it.  ``dirs`` read under ``snap``'s manifest schema — the
+        manifest owns the schema (Iceberg model), so files that predate
+        an added column read it as NULL, with no footer merging — with
+        ``deletes`` masked (``_masked_scan``).  The result is
+        ``_conform``-ed to the manifest schema; ``keep_pos`` instead keeps
+        the scan's own columns plus the ``__sp_*`` coordinates."""
         reader = self.spark.read
         schema = None
         if snap.schema_json is not None:
-            # the manifest owns the schema (Iceberg model): data files that
-            # predate an added column read it as NULL, no footer merging;
-            # _conform restores the manifest column order at the end
             schema = StructType.fromJson(json.loads(snap.schema_json))
             reader = reader.schema(schema)
 
         # rename evolution: per-dir physical→logical name maps, composed
         # from the rename commits after each dir's introducing snapshot.
         # Empty (the overwhelmingly common case) keeps every fast path.
-        by_id = {s.snapshot_id: s for s in self._load()}
-        chain = list(reversed(self._ancestry(snap, by_id)))  # oldest first
-        dir_map = (
-            self._dir_phys_info(chain, list(snap.data_dirs))
-            if any(s.operation == "rename" or s.dir_renames for s in chain)
-            else {}
-        )
+        dir_map = self._dir_map(snap, dirs)
 
         def read_mapped(d: str, with_pos: bool) -> DataFrame:
             # a renamed dir reads under its PHYSICAL (write-time) schema,
@@ -1881,7 +1907,7 @@ class SnapshotParquetTable:
                 *keep, *[F.col(n).alias(mp[n]) for n in phys.fieldNames()]
             )
 
-        def read_dirs(dirs: list[str], with_pos: bool) -> DataFrame:
+        def scan(group: list[str], with_pos: bool) -> DataFrame:
             if dir_map:
                 # per-dir reads so each dir can carry its own name map;
                 # un-renamed dirs still read under the manifest schema
@@ -1890,7 +1916,7 @@ class SnapshotParquetTable:
                         read_mapped(d, with_pos)
                         if d in dir_map
                         else (_with_pos(reader.parquet(d)) if with_pos else reader.parquet(d))
-                        for d in dirs
+                        for d in group
                     ]
                 )
             if snap.partition_by or snap.mixed_layout:
@@ -1901,12 +1927,13 @@ class SnapshotParquetTable:
                 # absorbs schema evolution.  The manifest schema is applied
                 # to each branch so hive partition-column inference can't
                 # retype columns.
-                dfs = [reader.parquet(d) for d in dirs]
+                dfs = [reader.parquet(d) for d in group]
                 return _union_all([_with_pos(df) for df in dfs] if with_pos else dfs)
-            df = reader.parquet(*dirs)
+            df = reader.parquet(*group)
             return _with_pos(df) if with_pos else df
 
-        return _conform(self._masked_scan(snap.data_dirs, snap.delete_files or [], read_dirs), schema)
+        df = self._masked_scan(dirs, deletes or [], scan, keep_pos)
+        return df if keep_pos else _conform(df, schema)
 
     def _masked_scan(
         self,
@@ -1941,23 +1968,82 @@ class SnapshotParquetTable:
             parts.append(part)
         return _union_all(parts)
 
-    def _main_ancestry(self) -> list[Snapshot]:
-        """Oldest-first snapshots along main's ancestry — the one walk
-        behind ``main_lineage`` and ``sessionless_main_lineage``."""
-        snaps = self._load()
-        if not snaps:
-            return []
-        by_id = {s.snapshot_id: s for s in snaps}
-        return self._ancestry(self._head(snaps), by_id)[::-1]
+    # -- what each commit changed --------------------------------------------
 
-    def main_lineage(self) -> list[tuple[int, str]]:
-        """``(snapshot_id, operation)`` along the CURRENT main ancestry,
-        oldest first — the offset axis a table-as-stream subscription
-        advances through (``streaming.jobs.stream_table_changes``).
-        Manifest-only: O(snapshots), no data IO.  Branch commits off the
-        main chain are not part of this lineage (same contract as
-        ``read_changes``)."""
-        return [(s.snapshot_id, s.operation) for s in self._main_ancestry()]
+    @staticmethod
+    def _commit_change(s: Snapshot, parent: Snapshot | None) -> CommitChange:
+        """Classify commit ``s`` against ``parent`` (see ``plan_changes``);
+        ``parent`` None means ``s`` is the first snapshot its reader sees."""
+        dels = s.delete_files or []
+        if parent is None:
+            # a whole state is new to this reader: its rows are inserts,
+            # read through its own delete files like any state
+            return CommitChange(s, None, "insert", list(s.data_dirs))
+        pdels = parent.delete_files or []
+        if s.operation == "rename":
+            return CommitChange(s, parent, "metadata", [])
+        if s.operation == "append" and dels == pdels:
+            seen = set(parent.data_dirs)
+            return CommitChange(s, parent, "insert", [d for d in s.data_dirs if d not in seen])
+        if (
+            s.operation == "delete"
+            and s.data_dirs == parent.data_dirs
+            and len(dels) == len(pdels) + 1
+            and dels[:-1] == pdels
+            and dels[-1].get("kind") is None
+            and set(dels[-1]["applies_to"]) == set(s.data_dirs)
+        ):
+            return CommitChange(s, parent, "delete_keys", [dels[-1]["dir"]])
+        return CommitChange(s, parent, "rewrite", [])
+
+    def plan_changes(self, start: int, end: int | None = None) -> list[CommitChange]:
+        """What each commit in the ``(start, end]`` range changed, oldest
+        first, from the manifest alone — the one planner behind
+        ``read_incremental``, ``read_changes``, both driver-loop
+        subscriptions (``streaming.jobs``) and the ``readStream`` facade
+        (``streaming.table_source``, which calls it on an instance bound
+        to no SparkSession; nothing here touches ``self.spark``).
+
+        The range follows ``end``'s ancestry — main's head (refs-aware)
+        when ``end`` is None — so branch commits and rolled-back-over
+        snapshots never enter it.  Each commit is one ``CommitChange``:
+
+        - ``insert``: an append, with the data dirs it added over its
+          parent; or, for a fresh reader (``start == 0``), the first
+          snapshot of the lineage, whatever its operation, with all of
+          its dirs.  Once ``expire_snapshots`` dropped its parent that
+          snapshot may carry delete files, so an insert's dirs read
+          through ``snap.delete_files`` (no-ops for an append's new
+          dirs, which postdate every pending delete);
+        - ``delete_keys``: a full-scope MOR equality delete
+          (``delete_where_mor``): its one delete dir, whose key tuples
+          name exactly the rows it masked (data dirs unchanged);
+        - ``metadata``: a column rename; no row changed;
+        - ``rewrite``: everything else — only a diff of the two table
+          states says what changed.
+
+        ``start > 0`` must still be on the lineage.  Once
+        ``expire_snapshots`` dropped it, its dir set is gone and "what
+        changed since ``start``" has no answer, so the range raises
+        instead of re-delivering the whole table."""
+        snaps = self._load()
+        by_id = {s.snapshot_id: s for s in snaps}
+        if end is None and snaps:
+            end = self._head(snaps).snapshot_id
+        head = by_id.get(end)
+        if (end is not None and head is None) or (start > 0 and start not in by_id):
+            raise ValueError(f"unknown snapshot range {start}..{end} at {self.path}")
+        chain = self._ancestry(head, by_id)[::-1] if head else []
+        ids = [s.snapshot_id for s in chain]
+        if start > 0 and start not in ids:
+            raise ValueError(
+                f"{start} is not an ancestor of {end} (changes follow the parent chain)"
+            )
+        first = ids.index(start) + 1 if start > 0 else 0
+        return [
+            self._commit_change(chain[i], chain[i - 1] if i else None)
+            for i in range(first, len(chain))
+        ]
 
     def read_incremental(self, from_version: int, to_version: int) -> DataFrame:
         """Rows added AFTER ``from_version``, up to ``to_version`` —
@@ -1966,159 +2052,82 @@ class SnapshotParquetTable:
         primitive CDC-style downstream consumers poll instead of
         re-reading the full table.
 
-        Only valid when every snapshot in the range is an append:
-        overwrite/delete/replace rewrite the file set, so "files new in
-        the range" no longer equals "rows added" — Iceberg raises on
-        non-append snapshots in an incremental scan and so do we.
+        Only valid when every commit in the range is an append
+        (``plan_changes`` kind ``insert``): overwrite/delete/replace
+        rewrite the file set, so "files new in the range" no longer
+        equals "rows added" — Iceberg raises on non-append snapshots in
+        an incremental scan and so do we.
         """
-        snaps = self._load()
-        by_id = {s.snapshot_id: s for s in snaps}
-        if from_version not in by_id or to_version not in by_id:
-            raise ValueError(
-                f"unknown snapshot range {from_version}..{to_version} at {self.path}"
-            )
         if from_version >= to_version:
             raise ValueError(f"empty incremental range {from_version}..{to_version}")
-        in_range = [s for s in snaps if from_version < s.snapshot_id <= to_version]
-        non_append = [s for s in in_range if s.operation != "append"]
-        if non_append:
-            ops = {s.snapshot_id: s.operation for s in non_append}
-            raise ValueError(
-                f"incremental read only spans append snapshots; range contains {ops}"
-            )
-        seen = set(by_id[from_version].data_dirs)
-        new_dirs = [d for d in by_id[to_version].data_dirs if d not in seen]
+        changes = self.plan_changes(from_version, to_version)
+        for c in changes:
+            if c.kind != "insert":
+                raise ValueError(
+                    "incremental read only spans append snapshots; snapshot "
+                    f"{c.snap.snapshot_id} is {c.snap.operation!r}, not append"
+                )
+        new_dirs = [d for c in changes for d in c.dirs]
         if not new_dirs:
             return self.read(version=to_version).limit(0)
-        snap = by_id[to_version]
-        if snap.schema_json is not None:
-            schema = StructType.fromJson(json.loads(snap.schema_json))
-            reader = self.spark.read.schema(schema)
-            if (snap.partition_by or snap.mixed_layout) and len(new_dirs) > 1:
-                # multiple hive-partitioned roots can't share one read
-                # (conflicting-structure detection) — union per-dir reads,
-                # same contract as read()
-                df = _union_all([reader.parquet(d) for d in new_dirs])
-            else:
-                df = reader.parquet(*new_dirs)
-            # every schema column is present (the reader applies the
-            # schema); _conform restores manifest order and drops hidden
-            # layout columns
-            return _conform(df, schema)
-        return self.spark.read.parquet(*new_dirs)
+        end = changes[-1].snap
+        return self._read_dirs(end, new_dirs, end.delete_files)
 
     def read_changes(self, from_version: int, to_version: int) -> DataFrame:
         """Row-level changelog between two snapshots — the Iceberg
         changelog-view / Delta CDF analog: every commit in the range
         contributes its logical row changes tagged with ``_change_type``
         (``insert`` | ``delete``) and ``_commit_version``.  Unlike
-        ``read_incremental`` (appends only), this spans EVERY verb:
+        ``read_incremental`` (appends only), this spans EVERY verb, by
+        the commit's ``plan_changes`` kind:
 
-        - append without pending-delete changes: the fast path reads just
-          the commit's new files (zero diffing I/O — the 100 TB path for
-          the dominant commit type);
-        - anything else (MOR/COW delete, MERGE, compaction): the generic
-          multiset diff ``cur ⊖ prev`` / ``prev ⊖ cur`` (``exceptAll``),
-          which emits a compaction as exactly nothing — replace commits
-          are physical, not logical, changes.
+        - ``insert``: reads just the commit's new files (zero diffing
+          I/O — the 100 TB path for the dominant commit type);
+        - ``delete_keys`` (r18): the delete file NAMES the masked keys,
+          so the changelog is prev-visible-state ⋉ keys (``read()``'s
+          masking condition, ``_delete_match``) — one scan and one
+          semi-join on the small key file.  Sound because the delete
+          kept the parent's data files and applies to all of them: cur =
+          prev ∖ (prev ⋉ keys), so prev ⊖ cur = prev ⋉ keys and cur ⊖
+          prev = ∅.  Iceberg's changelog scan reads equality deletes the
+          same way;
+        - ``metadata`` (a rename): no row changed — and a diff would
+          compare frames under two different column names.  Consumers
+          see the new names from the next change they read;
+        - ``rewrite`` (COW delete, MERGE, position deletes, compaction):
+          the generic multiset diff ``cur ⊖ prev`` / ``prev ⊖ cur``
+          (``exceptAll``), which emits a compaction as exactly nothing —
+          replace commits are physical, not logical, changes.
 
         ``from_version`` must be an ancestor of ``to_version`` on the
         parent chain (branch commits off the chain are not part of this
         lineage and raise)."""
-        snaps = self._load()
-        by_id = {s.snapshot_id: s for s in snaps}
-        if from_version not in by_id or to_version not in by_id:
-            raise ValueError(
-                f"unknown snapshot range {from_version}..{to_version} at {self.path}"
-            )
         if from_version >= to_version:
             raise ValueError(f"empty changelog range {from_version}..{to_version}")
-        chain: list[Snapshot] = []
-        cur: Snapshot | None = by_id[to_version]
-        while cur is not None and cur.snapshot_id != from_version:
-            chain.append(cur)
-            cur = by_id.get(cur.parent_snapshot_id)
-        if cur is None:
-            raise ValueError(
-                f"{from_version} is not an ancestor of {to_version} "
-                "(changelog follows the parent chain)"
-            )
-        chain.reverse()
         parts: list[DataFrame] = []
-        for s in chain:
-            parent = by_id.get(s.parent_snapshot_id)
-            prev_deletes = (parent.delete_files or []) if parent else []
-            if s.operation == "rename":
-                # metadata-only: zero logical row changes by definition —
-                # and the generic diff would compare frames under two
-                # different column names.  Downstream consumers see the
-                # new names from the NEXT change they read.
-                continue
-            if (
-                s.operation == "append"
-                and parent is not None
-                and (s.delete_files or []) == prev_deletes
-            ):
-                new_dirs = [d for d in s.data_dirs if d not in set(parent.data_dirs)]
-                reader = self.spark.read
-                if s.schema_json is not None:
-                    reader = reader.schema(
-                        StructType.fromJson(json.loads(s.schema_json))
-                    )
-                delta = reader.parquet(*new_dirs) if new_dirs else None
-                if delta is not None:
-                    parts.append(
-                        delta.withColumn("_change_type", F.lit("insert")).withColumn(
-                            "_commit_version", F.lit(s.snapshot_id).cast("long")
-                        )
-                    )
-                continue
-            if (
-                s.operation == "delete"
-                and parent is not None
-                and s.data_dirs == parent.data_dirs
-                and len(s.delete_files or []) == len(prev_deletes) + 1
-                and (s.delete_files or [])[: len(prev_deletes)] == prev_deletes
-                and (s.delete_files or [])[-1].get("kind") is None
-                and set((s.delete_files or [])[-1]["applies_to"]) == set(s.data_dirs)
-            ):
-                # MOR equality-delete fast path (r18): the delete file
-                # NAMES the masked keys, so this commit's changelog is
-                # prev-visible-state ⋉ keys (read()'s masking condition,
-                # _delete_match) — ONE scan + one semi-join
-                # keyed on the (small) delete file, instead of the
-                # generic diff's two full scans + two exceptAll shuffles.
-                # Sound because the delete kept the parent's data files
-                # and applies to ALL of them: cur = prev ∖ (prev ⋉ keys),
-                # so prev ⊖ cur = prev ⋉ keys and cur ⊖ prev = ∅.
-                # Iceberg's changelog scan reads equality deletes the
-                # same way; position deletes and partial-scope deletes
-                # keep the generic diff.
-                dk = self.spark.read.parquet(s.delete_files[-1]["dir"])
-                prev_state = self.read(version=parent.snapshot_id)
-                parts.append(
-                    prev_state.join(dk, _delete_match(prev_state, dk), "left_semi")
-                    .withColumn("_change_type", F.lit("delete"))
-                    .withColumn(
-                        "_commit_version", F.lit(s.snapshot_id).cast("long")
-                    )
+
+        def tagged(df: DataFrame, tag: str, s: Snapshot) -> None:
+            parts.append(
+                df.withColumn("_change_type", F.lit(tag)).withColumn(
+                    "_commit_version", F.lit(s.snapshot_id).cast("long")
                 )
-                continue
-            prev_state = (
-                self.read(version=parent.snapshot_id)
-                if parent is not None
-                else self.read(version=s.snapshot_id).limit(0)
             )
+
+        for c in self.plan_changes(from_version, to_version):
+            s = c.snap
+            if c.kind == "metadata" or (c.kind == "insert" and not c.dirs):
+                continue
+            if c.kind == "insert":
+                tagged(self._read_dirs(s, c.dirs, s.delete_files), "insert", s)
+                continue
+            prev_state = self.read(version=c.parent.snapshot_id)  # only inserts lack one
+            if c.kind == "delete_keys":
+                dk = self.spark.read.parquet(c.dirs[0])
+                tagged(prev_state.join(dk, _delete_match(prev_state, dk), "left_semi"), "delete", s)
+                continue
             cur_state = self.read(version=s.snapshot_id)
-            for tag, delta in (
-                ("insert", cur_state.exceptAll(prev_state)),
-                ("delete", prev_state.exceptAll(cur_state)),
-            ):
-                parts.append(
-                    delta.withColumn("_change_type", F.lit(tag)).withColumn(
-                        "_commit_version", F.lit(s.snapshot_id).cast("long")
-                    )
-                )
+            tagged(cur_state.exceptAll(prev_state), "insert", s)
+            tagged(prev_state.exceptAll(cur_state), "delete", s)
         if not parts:  # e.g. the range holds only metadata-only renames
             base = self.read(version=to_version).limit(0)
             return base.withColumn("_change_type", F.lit("insert")).withColumn(
@@ -2775,22 +2784,6 @@ class SnapshotParquetTable:
             lambda a, b: a & b, [ops[op](c, v) for c, op, v in predicates]
         )
         return df.filter(residual), len(kept), len(total)
-
-
-def sessionless_main_lineage(table_path: str) -> list[dict]:
-    """Oldest-first snapshot dicts along main's ancestry, with no
-    SparkSession — the driver-side planner primitive behind the
-    ``readStream.format("snapshot_table")`` facade (streaming/
-    table_source.py), which must follow the SAME lineage as the table
-    class or a WAP branch append / ``rollback_to`` makes the stream and
-    the driver loop diverge (streaming unpublished branch rows, or a
-    rolled-back-over snapshot's files).  It is the table class's own
-    walk (``_main_ancestry``) on an instance bound to no session; none
-    of those paths touch ``self.spark``."""
-    t = SnapshotParquetTable(None, table_path)
-    if not t.exists():
-        raise FileNotFoundError(f"not a snapshot table (no {MANIFEST}): {table_path}")
-    return [dict(s.__dict__) for s in t._main_ancestry()]
 
 
 class Namespace:

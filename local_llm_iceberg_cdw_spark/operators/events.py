@@ -1007,7 +1007,8 @@ def q_stream_table_readstream_drained(spark: SparkSession, sf_dir: str) -> DataF
          (% 5 == 4) is appended to an AUDIT BRANCH — it lands in the
          manifest AFTER main's head, and a re-drain must NOT stream it
          (``_wap_staged_hidden``: the facade follows ``refs['main']``
-         via ``sessionless_main_lineage``, not the manifest tail);
+         through ``SnapshotParquetTable.plan_changes``, not the manifest
+         tail);
          ``fast_forward`` publishes the branch and the next drain
          ingests exactly the published delta
          (``_wap_published_ingested``);
@@ -1026,8 +1027,9 @@ def q_stream_table_readstream_drained(spark: SparkSession, sf_dir: str) -> DataF
     vectorized — never row-at-a-time Python).  The Python DataSource
     trade vs the loop: the scan runs in Python workers instead of the
     JVM parquet reader — prefer the loop for raw throughput, this facade
-    for trigger/rate-limit integration; both share the manifest planner
-    (``table_source._delta_dirs`` ≡ ``read_incremental`` extents)."""
+    for trigger/rate-limit integration; both call the same manifest
+    planner (``SnapshotParquetTable.plan_changes``, which also plans
+    ``read_incremental``)."""
     import shutil
     import tempfile
     import uuid

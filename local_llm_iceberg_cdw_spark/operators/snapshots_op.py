@@ -568,9 +568,11 @@ def q_stream_table_cdc_facade_drained(spark: SparkSession, sf_dir: str) -> DataF
     "snapshot_table").option("changelog", "true")`` — the sessionless-
     PLANNABLE subset of the CDC surface as a real Structured Streaming
     source, composed facade→facade (writeStream into a derived snapshot
-    table, zero glue code).  The planner (``_changelog_partitions``,
-    streaming/table_source.py) tags partitions from the manifest alone:
-    the root commit and every append deliver their new files as
+    table, zero glue code).  The facade's ``partitions`` tags files from
+    the format's one change planner (``SnapshotParquetTable.plan_changes``,
+    the same one ``read_changes`` and ``stream_table_cdc`` use), from the
+    manifest alone: the root commit and every append deliver their new
+    files as
     ``insert`` rows; a full-scope MOR equality-delete commit delivers
     its delete-keys parquet as ``delete_key`` rows — the distinct key
     tuples of rows that MATCHED in the table (the format's

@@ -620,26 +620,26 @@ def stream_table_changes(
         return source_table.read_incremental(start, end)
 
     def groups(last: int):
-        # up to batch_snapshots consecutive appends per batch; the lineage
-        # is read after any pinned replay
-        pending = [(sid, op) for sid, op in source_table.main_lineage() if sid > last]
+        # up to batch_snapshots consecutive inserts per batch; the lineage
+        # is planned after any pinned replay
+        pending = source_table.plan_changes(last)
         i = 0
         while i < len(pending):
-            sid, op = pending[i]
-            if op != "append":
+            s = pending[i].snap
+            if pending[i].kind != "insert":
                 if on_non_append == "error":
                     raise ValueError(
-                        f"snapshot {sid} is {op!r}, not append — a table stream "
-                        "only spans appends (pass on_non_append='skip' for "
-                        "content-neutral rewrites like compaction)"
+                        f"snapshot {s.snapshot_id} is {s.operation!r}, not append — a "
+                        "table stream only spans appends (pass on_non_append='skip' "
+                        "for content-neutral rewrites like compaction)"
                     )
-                yield sid, False
+                yield s.snapshot_id, False
                 i += 1
                 continue
             n = 1
-            while n < batch_snapshots and i + n < len(pending) and pending[i + n][1] == "append":
+            while n < batch_snapshots and i + n < len(pending) and pending[i + n].kind == "insert":
                 n += 1
-            yield pending[i + n - 1][0], True
+            yield pending[i + n - 1].snap.snapshot_id, True
             i += n
 
     return _drain_subscription(checkpoint_dir, sink, read_batch, groups)
@@ -690,13 +690,13 @@ def stream_table_cdc(
     commit's new files only); rewrite commits pay one ``exceptAll``
     diff of the two adjacent table states — the price of exact
     row-level semantics, same as Iceberg's changelog procedure."""
-    lineage = source_table.main_lineage()
-    root = lineage[0][0] if lineage else 0
+    lineage = [c.snap.snapshot_id for c in source_table.plan_changes(0)]
+    root = lineage[0] if lineage else 0
 
     if starting_version is None:
         start_at = None
     elif str(starting_version).lower() == "latest":
-        start_at = lineage[-1][0] if lineage else 0
+        start_at = lineage[-1] if lineage else 0
     else:
         try:
             start_at = int(starting_version)
@@ -719,8 +719,9 @@ def stream_table_cdc(
         return base.unionByName(source_table.read_changes(root, end), allowMissingColumns=True)
 
     def groups(last: int):
-        # every commit flows: fixed runs of batch_snapshots commits
-        pending = [sid for sid, _op in lineage if sid > last]
+        # every commit flows: fixed runs of batch_snapshots commits (ids
+        # grow along the chain; read_changes rejects an expired ``last``)
+        pending = [sid for sid in lineage if sid > last]
         for i in range(0, len(pending), batch_snapshots):
             yield pending[i : i + batch_snapshots][-1], True
 

@@ -21,19 +21,21 @@ in its checkpoint), so the replay-determinism contract holds by
 construction here.
 
 Execution shape: ``partitions(start, end)`` plans ONE InputPartition per
-new data FILE in the append range (manifest-only driver work — the
-incremental-scan contract of ``read_incremental``); executors read their
+file the range added (manifest-only driver work); executors read their
 file with pyarrow and yield Arrow record batches, so rows cross the
 Python boundary vectorized, never row-at-a-time.  This is the Python
 DataSource trade: the scan runs in Python workers (Arrow-batched) rather
 than the JVM parquet reader — at 100 TB prefer the native JVM loop for
-raw throughput and this facade for trigger/rate integration; both share
-the manifest planner, so file pruning and batch extents are identical.
+raw throughput and this facade for trigger/rate integration.  Both call
+the same planner, ``SnapshotParquetTable.plan_changes`` in
+formats/snapshot_parquet.py (run here on an instance bound to no
+SparkSession), so what each commit changed, the batch extents and the
+errors are identical.
 
-r18 surface: the driver-side planner resolves main's head through
-``_refs.json`` (``sessionless_main_lineage``) so WAP branches and
-rollbacks stream the PUBLISHED lineage; source options
-``startingSnapshotId=<id|latest>`` (bounded catch-up for fresh
+r18 surface: the planner follows main's ancestry, resolving its head
+through ``_refs.json``, so WAP branches and rollbacks stream the
+PUBLISHED lineage; source options ``startingSnapshotId=<id|latest>``
+(bounded catch-up for fresh
 checkpoints — the Python API's rate valve cannot cap a run's first
 batch) and ``maxFilesPerBatch``/``maxRowsPerBatch`` (admission by
 manifest file stats, Iceberg's streaming-max-files/rows analogs); the
@@ -80,71 +82,39 @@ def _table(path: str):
     return SnapshotParquetTable(None, path)
 
 
-def _main_lineage(path: str) -> list[dict]:
-    """Oldest-first snapshots along the current MAIN ancestry — the
-    format's own refs-aware walk (``sessionless_main_lineage``:
-    ``refs['main']`` from ``_refs.json`` when present, manifest tail
-    otherwise; exact ``_backfill_parents`` recovery for pre-lineage
-    entries; ``FileNotFoundError`` when ``path`` is not a snapshot
-    table).  Driver side only, like ``_table``.  Without the refs
-    resolution a WAP branch append after main's head would stream
-    UNPUBLISHED branch rows, and a ``rollback_to`` would keep streaming
-    the undone lineage — the exact divergences from the driver loop
-    (``stream_table_changes`` → ``main_lineage``) this facade must not
-    have."""
-    from ..formats.snapshot_parquet import sessionless_main_lineage
-
-    return sessionless_main_lineage(path)
+def _head(path: str):
+    """Main's head snapshot — ``refs['main']`` when the table has refs,
+    else the manifest tail — or None for an empty or absent table.
+    Driver side only, like ``_table``."""
+    t = _table(path)
+    snaps = t._load()
+    return t._head(snaps) if snaps else None
 
 
-def _append_delta_size(s: dict, by_id: dict) -> tuple[int, int]:
-    """(new files, new rows) an append snapshot contributes — manifest
-    metadata only: each commit recorded per-file stats for its new dir,
-    so rate admission never touches data.  Non-appends contribute 0 (a
-    rewrite adds no logical rows; skip/error is decided at planning).
-    A stats-less legacy dir falls back to a file count via glob (one
-    directory listing at planning time) and unknown rows (0 — the
-    snapshot still advances, the row valve just can't see it)."""
-    if s["operation"] != "append":
+def _files_of(d: str) -> list[str]:
+    return sorted(_glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True))
+
+
+def _insert_size(change) -> tuple[int, int]:
+    """(new files, new rows) a planned change contributes to the rate
+    valve — manifest metadata only: each commit recorded per-file stats
+    for its new dir, so admission never touches data.  Only ``insert``
+    changes count (a rewrite adds no logical rows; skip/error is decided
+    at planning).  A stats-less legacy dir falls back to a file count
+    via glob and unknown rows (0 — the snapshot still advances, the row
+    valve just can't see it)."""
+    if change.kind != "insert":
         return 0, 0
-    parent = by_id.get(s.get("parent_snapshot_id"))
-    seen = set(parent["data_dirs"]) if parent else set()
-    stats = s.get("file_stats") or {}
+    stats = change.snap.file_stats or {}
     nf = nr = 0
-    for d in s["data_dirs"]:
-        if d in seen:
-            continue
+    for d in change.dirs:
         entries = stats.get(d)
         if entries is None:
-            nf += len(_glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True))
+            nf += len(_files_of(d))
         else:
             nf += len(entries)
             nr += sum(int(e.get("rows") or 0) for e in entries)
     return nf, nr
-
-
-def _delta_dirs(lineage: list[dict], start_id: int, end_id: int, on_non_append: str):
-    """[(snapshot_id, [new data dirs])] for the (start, end] range —
-    the incremental-append contract: each append's delta is its
-    ``data_dirs`` minus its parent's."""
-    by_id = {s["snapshot_id"]: s for s in lineage}
-    out: list[tuple[int, list[str]]] = []
-    for s in lineage:
-        sid = s["snapshot_id"]
-        if not (start_id < sid <= end_id):
-            continue
-        if s["operation"] != "append":
-            if on_non_append == "error":
-                raise ValueError(
-                    f"snapshot {sid} is {s['operation']!r}, not append — a table "
-                    "stream only spans appends (option onNonAppend=skip for "
-                    "content-neutral rewrites like compaction)"
-                )
-            continue
-        parent = by_id.get(s.get("parent_snapshot_id"))
-        seen = set(parent["data_dirs"]) if parent else set()
-        out.append((sid, [d for d in s["data_dirs"] if d not in seen]))
-    return out
 
 
 def _spark_to_arrow_type(dt):
@@ -181,82 +151,24 @@ def _spark_to_arrow_type(dt):
 
 
 class _FilePartition(InputPartition):
-    def __init__(self, file: str, data_dir: str, tag: str | None = None, version: int = 0):
+    def __init__(
+        self,
+        file: str,
+        data_dir: str,
+        tag: str | None = None,
+        version: int = 0,
+        renames: dict | None = None,
+    ):
         self.file = file
         self.data_dir = data_dir
         self.tag = tag  # changelog mode: insert | delete_key
         self.version = version
+        # {physical: logical} column names of a dir a later rename commit
+        # renamed (``SnapshotParquetTable._dir_map``); None = identity
+        self.renames = renames
 
 
 CHANGELOG_COLS = ("_change_type", "_commit_version")
-
-
-def _changelog_partitions(lineage: list[dict], start_id: int, end_id: int):
-    """Tagged file partitions for the (start, end] range in CHANGELOG
-    mode — the sessionless-PLANNABLE subset of the CDC surface (VERDICT
-    r18 #7): the manifest + files alone determine what changed for
-
-    - the ROOT commit (the initial snapshot: its data files, tagged
-      ``insert``),
-    - APPEND commits (the new data dir's files, tagged ``insert``), and
-    - full-scope MOR equality-DELETE commits (``delete_where_mor``: the
-      delete-keys parquet itself, tagged ``delete_key`` — its rows are
-      the distinct key tuples of rows that MATCHED in the table, the
-      format's equality-delete contract; non-key columns read as NULL).
-
-    Everything else (COW rewrites, merges, compaction, positional
-    deletes) needs the two-state ``exceptAll`` reconstruction, which
-    requires a SparkSession the executor-side ``read()`` does not have —
-    those verbs raise at planning, naming the driver-loop subscription
-    ``stream_table_cdc`` (streaming/jobs.py) as the full surface.  At
-    100 TB the dominant stream IS appends + MOR deletes, so the
-    plannable subset is the operating envelope, not a toy."""
-    by_id = {s["snapshot_id"]: s for s in lineage}
-
-    def files_of(d: str) -> list[str]:
-        return sorted(_glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True))
-
-    parts: list[_FilePartition] = []
-    for s in lineage:
-        sid = s["snapshot_id"]
-        if not (start_id < sid <= end_id):
-            continue
-        parent = by_id.get(s.get("parent_snapshot_id"))
-        if parent is None:
-            for d in s["data_dirs"]:  # initial snapshot, insert-tagged
-                parts.extend(_FilePartition(f, d, "insert", sid) for f in files_of(d))
-            continue
-        pdirs = list(parent["data_dirs"])
-        pdels = {e["dir"] for e in (parent.get("delete_files") or [])}
-        new_dirs = [d for d in s["data_dirs"] if d not in set(pdirs)]
-        new_dels = [
-            e for e in (s.get("delete_files") or []) if e["dir"] not in pdels
-        ]
-        if s["operation"] == "append" and new_dirs and not new_dels:
-            for d in new_dirs:
-                parts.extend(_FilePartition(f, d, "insert", sid) for f in files_of(d))
-        elif (
-            s["operation"] == "delete"
-            and not new_dirs
-            and list(s["data_dirs"]) == pdirs
-            and len(new_dels) == 1
-            and new_dels[0].get("kind") is None
-            and os.path.basename(new_dels[0]["dir"]).startswith("delete-snap-")
-            and set(new_dels[0].get("applies_to") or []) == set(pdirs)
-        ):
-            d = new_dels[0]["dir"]
-            parts.extend(
-                _FilePartition(f, d, "delete_key", sid) for f in files_of(d)
-            )
-        else:
-            raise ValueError(
-                f"snapshot {sid} ({s['operation']!r}) is not plannable as a "
-                "sessionless changelog — the readStream changelog facade "
-                "covers append and full-scope MOR equality-delete commits; "
-                "use the driver-loop subscription stream_table_cdc "
-                "(streaming/jobs.py) for the full verb surface"
-            )
-    return parts
 
 
 class SnapshotTableStreamReader(DataSourceStreamReader):
@@ -337,30 +249,27 @@ class SnapshotTableStreamReader(DataSourceStreamReader):
         if self.starting_snapshot_id is None:
             return {"snapshot_id": 0}
         if self.starting_snapshot_id == "latest":
-            lineage = _main_lineage(self.path)
-            return {"snapshot_id": lineage[-1]["snapshot_id"] if lineage else 0}
+            head = _head(self.path)
+            return {"snapshot_id": head.snapshot_id if head else 0}
         return {"snapshot_id": self.starting_snapshot_id}
 
     def latestOffset(self) -> dict:
-        lineage = _main_lineage(self.path)
-        head = lineage[-1]["snapshot_id"] if lineage else 0
         capped = (
             self.max_snapshots is not None
             or self.max_files is not None
             or self.max_rows is not None
         )
         if capped and self._last_planned is not None:
-            # advance lineage entries past the cursor until a cap would be
+            # advance planned commits past the cursor until a cap would be
             # crossed (ids may be sparse after expiration, so count
-            # entries, not id arithmetic); always take ≥1 so a single
+            # commits, not id arithmetic); always take ≥1 so a single
             # over-cap snapshot still progresses
-            by_id = {s["snapshot_id"]: s for s in lineage}
-            newer = [s for s in lineage if s["snapshot_id"] > self._last_planned]
+            newer = _table(self.path).plan_changes(self._last_planned)
             if newer:
                 taken = files = rows = 0
-                last = newer[0]["snapshot_id"]
-                for s in newer:
-                    nf, nr = _append_delta_size(s, by_id)
+                last = newer[0].snap.snapshot_id
+                for c in newer:
+                    nf, nr = _insert_size(c)
                     if taken >= 1 and (
                         (self.max_snapshots is not None and taken + 1 > self.max_snapshots)
                         or (self.max_files is not None and files + nf > self.max_files)
@@ -370,30 +279,78 @@ class SnapshotTableStreamReader(DataSourceStreamReader):
                     taken += 1
                     files += nf
                     rows += nr
-                    last = s["snapshot_id"]
-                head = last
-        return {"snapshot_id": head}
+                    last = c.snap.snapshot_id
+                return {"snapshot_id": last}
+        head = _head(self.path)
+        return {"snapshot_id": head.snapshot_id if head else 0}
 
     def partitions(self, start: dict, end: dict):
+        """One InputPartition per file the planner
+        (``SnapshotParquetTable.plan_changes``) says the ``(start, end]``
+        range added.  Append mode streams ``insert`` changes; any other
+        kind raises or, with ``onNonAppend=skip``, is stepped over.  A
+        fresh stream's first snapshot that carries delete files (left so
+        by ``expire_snapshots``) raises in both modes: executors read bare
+        files, so they cannot mask it.
+        Changelog mode is the sessionless-PLANNABLE subset of the CDC
+        surface: ``insert`` files tagged ``insert``, a full-scope MOR
+        equality delete's key files tagged ``delete_key`` (the distinct
+        key tuples of rows that matched, non-key columns NULL), renames
+        skipped as in ``read_changes``; a ``rewrite`` needs the two-state
+        ``exceptAll`` diff, which needs a SparkSession the executor-side
+        ``read()`` does not have, so it raises, naming the driver-loop
+        ``stream_table_cdc`` (streaming/jobs.py) as the full surface.  At
+        100 TB the dominant stream IS appends + MOR deletes, so the
+        plannable subset is the operating envelope, not a toy."""
         # arm the rate valve at the batch's far edge; max() guards the
         # stale-cursor case after a restart (start = Spark's committed
         # offset, the ground truth the API withholds from latestOffset)
         self._last_planned = max(start["snapshot_id"], end["snapshot_id"])
-        lineage = _main_lineage(self.path)
-        if self.changelog:
-            parts = _changelog_partitions(
-                lineage, start["snapshot_id"], end["snapshot_id"]
-            )
-            return parts or [_FilePartition("", "")]
-        parts = []
-        for _sid, dirs in _delta_dirs(
-            lineage, start["snapshot_id"], end["snapshot_id"], self.on_non_append
-        ):
-            for d in dirs:
-                for f in sorted(
-                    _glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True)
-                ):
-                    parts.append(_FilePartition(f, d))
+        t = _table(self.path)
+        changes = t.plan_changes(start["snapshot_id"], end["snapshot_id"])
+        tags = (
+            {"insert": "insert", "delete_keys": "delete_key"}
+            if self.changelog
+            else {"insert": None}
+        )
+        planned: list[tuple[str, str | None, int]] = []
+        for c in changes:
+            sid, op = c.snap.snapshot_id, c.snap.operation
+            if c.parent is None and c.snap.delete_files:
+                # an expiry left the stream's first snapshot with delete
+                # files; executors read bare files and cannot mask them
+                raise ValueError(
+                    f"snapshot {sid} is the first this stream reads and carries "
+                    "merge-on-read delete files, which the readStream facade "
+                    "cannot apply; drain it with the driver-loop "
+                    "stream_table_changes or stream_table_cdc "
+                    "(streaming/jobs.py), or start after it (startingSnapshotId)"
+                )
+            if c.kind in tags:
+                planned += [(d, tags[c.kind], sid) for d in c.dirs]
+            elif self.changelog and c.kind == "rewrite":
+                raise ValueError(
+                    f"snapshot {sid} ({op!r}) is not plannable as a sessionless "
+                    "changelog — the readStream changelog facade covers append "
+                    "and full-scope MOR equality-delete commits; use the "
+                    "driver-loop subscription stream_table_cdc "
+                    "(streaming/jobs.py) for the full verb surface"
+                )
+            elif not self.changelog and self.on_non_append == "error":
+                raise ValueError(
+                    f"snapshot {sid} is {op!r}, not append — a table stream only "
+                    "spans appends (option onNonAppend=skip for content-neutral "
+                    "rewrites like compaction)"
+                )
+        # the stream schema is main's head's (SnapshotTableDataSource.schema),
+        # so map dirs against the head, not the batch end: a dir a rename
+        # commit up to the head renamed is read by its physical names
+        renames = t._dir_map(_head(self.path), [d for d, _, _ in planned]) if planned else {}
+        parts = [
+            _FilePartition(f, d, tag, sid, renames[d]["map"] if d in renames else None)
+            for d, tag, sid in planned
+            for f in _files_of(d)
+        ]
         # Spark requires ≥1 partition; an all-skip range yields no rows
         return parts or [_FilePartition("", "")]
 
@@ -418,7 +375,9 @@ class SnapshotTableStreamReader(DataSourceStreamReader):
             if "=" in seg:
                 k, _, v = seg.partition("=")
                 hive[unquote(k)] = unquote(v)
-        tag = getattr(partition, "tag", None)
+        tag = partition.tag
+        # a renamed dir's files keep their write-time column names
+        phys = {v: k for k, v in partition.renames.items()} if partition.renames else None
         arrays, names = [], []
         for field in self._schema.fields:
             at = _spark_to_arrow_type(field.dataType)
@@ -432,16 +391,17 @@ class SnapshotTableStreamReader(DataSourceStreamReader):
                 )
                 names.append(field.name)
                 continue
-            if field.name in tbl.column_names:
-                arrays.append(tbl.column(field.name).cast(at))
-            elif field.name in hive:
+            col = field.name if phys is None else phys.get(field.name)
+            if col in tbl.column_names:
+                arrays.append(tbl.column(col).cast(at))
+            elif col in hive:
                 # Spark encodes a NULL partition value as the hive default
                 # sentinel dir — map it back to nulls, never the literal
                 # string (or a cast failure on non-string columns)
-                if hive[field.name] == "__HIVE_DEFAULT_PARTITION__":
+                if hive[col] == "__HIVE_DEFAULT_PARTITION__":
                     arrays.append(pa.nulls(len(tbl), at))
                 else:
-                    arrays.append(pa.array([hive[field.name]] * len(tbl)).cast(at))
+                    arrays.append(pa.array([hive[col]] * len(tbl)).cast(at))
             else:  # schema evolution: older file lacks the column
                 arrays.append(pa.nulls(len(tbl), at))
             names.append(field.name)
@@ -577,9 +537,8 @@ class SnapshotTableStreamWriter(DataSourceStreamArrowWriter):
         # yet-to-be-created table takes .option("partitionBy", "c1,c2").
         from ..formats.snapshot_parquet import parse_partition_field
 
-        lineage = _main_lineage(self.path) if _table(self.path).exists() else []
-        head = lineage[-1] if lineage else None
-        spec = (head or {}).get("partition_by")
+        head = _head(self.path)
+        spec = head.partition_by if head else None
         opt_spec = [
             c.strip() for c in (options.get("partitionby") or "").split(",") if c.strip()
         ]
@@ -755,11 +714,10 @@ class SnapshotTableDataSource(DataSource):
         path = self.options.get("path")
         if not path:
             raise ValueError("snapshot_table source requires .option('path', …)")
-        lineage = _main_lineage(path)
-        head = lineage[-1] if lineage else None
-        if head is None or not head.get("schema_json"):
+        head = _head(path)
+        if head is None or not head.schema_json:
             raise ValueError(f"snapshot table at {path} is empty / has no schema")
-        schema = StructType.fromJson(json.loads(head["schema_json"]))
+        schema = StructType.fromJson(json.loads(head.schema_json))
         if str(self.options.get("changelog", "")).lower() in ("true", "1"):
             from pyspark.sql.types import LongType, StringType, StructField
 

@@ -101,8 +101,13 @@ def test_readstream_facade_schema_follows_main_ref(spark, tmp_path):
 
 
 def test_readstream_facade_matches_driver_loop_on_refs_table(spark, tmp_path):
-    """facade ≡ loop on a refs-bearing table: both stream exactly main's
-    published rows — the parity the module claims, now under branches."""
+    """facade ≡ loop, the parity the module claims: on a refs-bearing
+    table both stream exactly main's published rows; across a column
+    rename both read pre-rename files by their physical names, in
+    uncapped and capped batches; once ``expire_snapshots`` dropped the
+    committed offset both refuse the range instead of re-delivering the
+    table; and where an expiry left the first snapshot with a MOR delete
+    file the loop streams read()'s rows and the facade refuses."""
     from local_llm_iceberg_cdw_spark.streaming.jobs import stream_table_changes
 
     _register(spark)
@@ -127,6 +132,110 @@ def test_readstream_facade_matches_driver_loop_on_refs_table(spark, tmp_path):
         str(tmp_path / "ck_loop"),
     )
     assert sorted(facade_rows) == sorted(loop_rows) == [1, 2]
+
+    # rename: files written before it keep the physical name ``v``; the
+    # non-nullable column would fail in the JVM if it read as NULL
+    r = SnapshotParquetTable(spark, str(tmp_path / "ren"))
+    r.create(spark.range(5).selectExpr("id AS k", "id * 10 AS v"))
+    r.rename_column("v", "w")
+    r.append(spark.range(5, 8).selectExpr("id AS k", "id * 10 AS w"))
+    facade_ren: list[tuple] = []
+    _drain(
+        spark,
+        r.path,
+        str(tmp_path / "ck_facade_ren"),
+        lambda df, b: facade_ren.extend(map(tuple, df.collect())),
+        onNonAppend="skip",
+    )
+    loop_ren: list[tuple] = []
+    stream_table_changes(
+        r,
+        lambda df, b: loop_ren.extend(map(tuple, df.collect())),
+        str(tmp_path / "ck_loop_ren"),
+        on_non_append="skip",
+    )
+    expected = [(k, k * 10) for k in range(8)]
+    assert sorted(map(tuple, r.read().collect())) == expected
+    assert sorted(facade_ren) == sorted(loop_ren) == expected
+
+    # the same lineage in capped batches (maxSnapshotsPerBatch=1, driven
+    # through the reader's own offset protocol as Spark does after a
+    # run's first batch): the batch that ends before the rename commit
+    # still reads its files under the stream schema's names
+    from local_llm_iceberg_cdw_spark.streaming.table_source import (
+        SnapshotTableStreamReader,
+    )
+
+    rd = SnapshotTableStreamReader(
+        r.read().schema,
+        {"path": r.path, "maxsnapshotsperbatch": "1", "onnonappend": "skip"},
+    )
+    rd._last_planned = cur = 0
+    capped: list[tuple] = []
+    while (end := rd.latestOffset()["snapshot_id"]) != cur:
+        for part in rd.partitions({"snapshot_id": cur}, {"snapshot_id": end}):
+            for batch in rd.read(part):
+                capped += [(x["k"], x["w"]) for x in batch.to_pylist()]
+        cur = end
+    assert sorted(capped) == expected
+
+    # expire with a pending MOR delete: the oldest kept snapshot (an
+    # append after the delete, or the delete itself) carries a delete
+    # file.  The loop reads that first state through read(); the facade,
+    # whose executors read bare files, refuses instead of resurrecting
+    # the masked rows.
+    for name, tail in (("mor_append", True), ("mor_delete", False)):
+        m = SnapshotParquetTable(spark, str(tmp_path / name))
+        m.create(spark.range(10).selectExpr("id"))
+        m.delete_where_mor("id < 3", key_cols=["id"])
+        if tail:
+            m.append(spark.range(10, 12).selectExpr("id"))
+        m.expire_snapshots(keep_last=1)
+        loop_mor: list[int] = []
+        stream_table_changes(
+            m,
+            lambda df, b: loop_mor.extend(x.id for x in df.collect()),
+            str(tmp_path / f"ck_loop_{name}"),
+        )
+        assert sorted(loop_mor) == sorted(x.id for x in m.read().collect()), name
+        assert 0 not in loop_mor, name
+        with pytest.raises(Exception, match="merge-on-read delete files"):
+            _drain(spark, m.path, str(tmp_path / f"ck_facade_{name}"), lambda df, b: None)
+
+    # expire: the committed offset (snapshot 3) leaves the manifest
+    e = SnapshotParquetTable(spark, str(tmp_path / "exp"))
+    e.create(spark.range(10).selectExpr("id"))
+    for lo in (10, 20):
+        e.append(spark.range(lo, lo + 10).selectExpr("id"))
+    facade_exp: list[int] = []
+    loop_exp: list[int] = []
+
+    def facade_exp_drain():
+        _drain(
+            spark,
+            e.path,
+            str(tmp_path / "ck_facade_exp"),
+            lambda df, b: facade_exp.extend(r.id for r in df.collect()),
+        )
+
+    def loop_exp_drain():
+        stream_table_changes(
+            e,
+            lambda df, b: loop_exp.extend(r.id for r in df.collect()),
+            str(tmp_path / "ck_loop_exp"),
+        )
+
+    facade_exp_drain()
+    loop_exp_drain()
+    assert sorted(facade_exp) == sorted(loop_exp) == list(range(30))
+    e.append(spark.range(30, 40).selectExpr("id"))
+    e.expire_snapshots(keep_last=1)
+    with pytest.raises(Exception, match="unknown snapshot range"):
+        facade_exp_drain()
+    with pytest.raises(ValueError, match="unknown snapshot range"):
+        loop_exp_drain()
+    # no sink saw a duplicate row
+    assert sorted(facade_exp) == sorted(loop_exp) == list(range(30))
 
 
 # --- hive NULL-partition sentinel (ADVICE r17 low) ----------------------------

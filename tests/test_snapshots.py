@@ -315,6 +315,30 @@ def test_incremental_read_deltas_and_guards(spark, tmp_path):
     assert t.read_incremental(1, 2).count() == 5
 
 
+def test_read_changes_columns_match_read(spark, tmp_path):
+    """An append's changelog rows come through read()'s dir scan: the
+    columns are read()'s, in read()'s order, plus the two change columns
+    — on unpartitioned, identity and hidden-transform layouts (no hive
+    layout column, no partition column moved last)."""
+    import datetime
+
+    from local_llm_iceberg_cdw_spark.formats.snapshot_parquet import SnapshotParquetTable
+
+    def batch(lo):
+        return spark.createDataFrame(
+            [(k, datetime.datetime(2024, 1, 1 + k)) for k in range(lo, lo + 2)],
+            "k long, ts timestamp",
+        )
+
+    for name, spec in (("plain", None), ("identity", ["k"]), ("hidden", ["days(ts)"])):
+        t = SnapshotParquetTable(spark, str(tmp_path / name))
+        t.create(batch(0), partition_by=spec)
+        v2 = t.append(batch(2))
+        changes = t.read_changes(1, v2)
+        assert changes.columns == t.read().columns + ["_change_type", "_commit_version"], name
+        assert sorted(r.k for r in changes.collect()) == [2, 3], name
+
+
 def test_tags_and_branches(spark, tmp_path):
     """Iceberg-style named refs: a tag freezes a state, a branch diverges
     from main without touching it, and main DML keeps advancing main."""
