@@ -8,21 +8,27 @@ claim a computed artifact instead of prose:
 
 * ``compute_strata()`` recomputes, from the CORRECTNESS_r*.json files and the
   live registry (``operators.all_queries()``), each entry's latest driver
-  adjudication round, its green/red status at that adjudication, and the set
-  of entries that have never seen a driver row.
+  adjudication round, its green/red status at that adjudication, the set
+  of entries that have never seen a driver row, and the next driver window
+  (``driver_window()``: the first ``DRIVER_WINDOW`` registry entries, the
+  only ones the external driver adjudicates).  ``all_queries()`` calls it
+  with its own names to put that window first, so the window is computed
+  from the driver's rows plus the short ``ROUND_CHANGED`` map, never kept
+  by hand.
 * ``python -m local_llm_iceberg_cdw_spark.freshness --write`` regenerates the
   committed ``FRESHNESS.md`` artifact from those numbers.
 * ``tests/test_freshness_claims.py`` pins FRESHNESS.md == recomputation, so a
   stale committed claim fails the suite instead of surviving into a verdict.
 
-COVERAGE.md and the rotation note in ``operators/__init__.py`` must cite
-FRESHNESS.md rather than hand-quoting strata numbers.
+COVERAGE.md must cite FRESHNESS.md rather than hand-quoting strata numbers.
 """
 
 from __future__ import annotations
 
 import json
 import re
+import sys
+from collections.abc import Iterable
 from pathlib import Path
 from typing import Any
 
@@ -32,15 +38,64 @@ FRESHNESS_MD = REPO_ROOT / "FRESHNESS.md"
 _HEADER = "# FRESHNESS — driver-adjudication strata (generated, do not hand-edit)"
 
 
+# Ops whose driver-scale (sf0.01) path changed after their newest driver
+# row, mapped to the first round whose row can describe the new path.  An
+# entry leads the driver window until a row from that round or later
+# exists, then falls back to its stratum by itself; to front-load an op,
+# add it here with the next round number.
+ROUND_CHANGED: dict[str, int] = {
+    # sf0.01 has 500 embeddings: these ran the Catalyst brute tier, now deleted
+    "cosine_topk": 21,
+    "hard_negative_mining": 21,
+    "hybrid_rrf_search": 21,
+    "ivf_topk": 21,
+    "ivfsq8_topk": 21,
+    "mmr_diversified_topk": 21,
+    "rag_context_pack": 21,
+    "semantic_decontamination": 21,
+    "sq8_adc_topk": 21,
+    # the readStream facade now plans its partitions with plan_changes
+    "stream_table_cdc_facade_drained": 21,
+    "stream_table_readstream_drained": 21,
+}
+
+DRIVER_WINDOW = 50  # the driver adjudicates only the first 50 registry entries
+
+
 def correctness_rounds(repo_root: Path = REPO_ROOT) -> dict[int, dict[str, dict[str, Any]]]:
-    """All CORRECTNESS_r*.json records, keyed by round number."""
+    """All CORRECTNESS_r*.json records, keyed by round number.
+
+    The driver writes a new file at round end, so an unreadable one is
+    skipped with a stderr line naming it rather than failing every caller
+    (``__spark_entry__.queries()`` among them); the suite's parse test keeps
+    a bad committed file loud.
+    """
     out: dict[int, dict[str, dict[str, Any]]] = {}
     for path in sorted(repo_root.glob("CORRECTNESS_r*.json")):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", path.name)
         if not m:
             continue
-        out[int(m.group(1))] = json.loads(path.read_text())
+        try:
+            rows = json.loads(path.read_text())
+            if not isinstance(rows, dict):
+                raise ValueError(f"top level is {type(rows).__name__}, not an object")
+        except (OSError, ValueError) as exc:
+            print(f"correctness_rounds: skipping {path.name}: {exc}", file=sys.stderr)
+            continue
+        out[int(m.group(1))] = rows
     return out
+
+
+def driver_window(names: Iterable[str], latest: dict[str, int]) -> list[str]:
+    """The next driver window: ops whose path changed since their newest row
+    first, then oldest adjudication first (never adjudicated = round 0),
+    ties by name."""
+
+    def key(op: str) -> tuple[bool, int, str]:
+        rnd = latest.get(op, 0)
+        return (rnd >= ROUND_CHANGED.get(op, 0), rnd, op)
+
+    return sorted(names, key=key)[:DRIVER_WINDOW]
 
 
 def row_is_green(row: dict[str, Any]) -> bool:
@@ -70,7 +125,8 @@ def compute_strata(
     Returns a dict with ``as_of`` (newest round consumed), ``latest``
     (op -> round), ``strata`` (round -> sorted ops), ``reds`` (ops whose
     latest row is not green), ``never_adjudicated`` (registry ops with no
-    driver row), and ``oldest_round`` (min over adjudicated registry ops).
+    driver row), ``oldest_round`` (min over adjudicated registry ops) and
+    ``window`` (the next driver window those rounds give).
     """
     rounds = correctness_rounds(repo_root)
     if max_round is not None:
@@ -97,6 +153,7 @@ def compute_strata(
         "never_adjudicated": never,
         "oldest_round": min(in_registry.values()) if in_registry else None,
         "registry_size": len(registry),
+        "window": driver_window(registry, in_registry),
     }
 
 
@@ -132,6 +189,15 @@ def render_markdown(s: dict[str, Any]) -> str:
         lines.append("")
         lines.append(", ".join(f"`{o}`" for o in s["reds"]))
         lines.append("")
+    lines += [
+        f"## Next driver window ({len(s['window'])}, in registry order)",
+        "",
+        "`ROUND_CHANGED` ops not yet adjudicated since their change first, then",
+        "oldest adjudication first, ties by name (`freshness.driver_window`).",
+        "",
+    ]
+    lines += [f"{i}. `{o}`" for i, o in enumerate(s["window"], 1)]
+    lines.append("")
     return "\n".join(lines)
 
 

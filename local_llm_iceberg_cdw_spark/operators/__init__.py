@@ -6,15 +6,23 @@ equivalent ANSI SQL for the DuckDB oracle (``None`` for ops that are not
 SQL-expressible — the driver then records a weaker rows-only check).
 
 ``all_queries()`` merges every module's registry; ``__spark_entry__.py``
-re-exports it in the driver's contract shape.
+re-exports it in the driver's contract shape.  The external driver
+adjudicates only the first 50 entries, so ``all_queries()`` puts the
+window ``freshness.driver_window`` computes from the CORRECTNESS_r*.json
+rows first (ops in ``freshness.ROUND_CHANGED`` not yet re-adjudicated,
+then oldest adjudication first); the rest keep module order.  The window
+is read on each call, never at import.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 from dataclasses import dataclass
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..freshness import REPO_ROOT, compute_strata
 
 
 @dataclass(frozen=True)
@@ -24,114 +32,9 @@ class QuerySpec:
     doc: str = ""
 
 
-# The external driver records correctness rows for the FIRST 50 registry
-# entries only, so ordering is part of the verification contract.
-# ROUND-19 WINDOW (exactly the r18 rotation note + VERDICT r18 #2):
-#   (a) the EIGHT r19-NEW/CHANGED judged ops:
-#       stream_table_cdc_facade_drained (NEW — never adjudicated, MUST
-#       be in the window: the CDC facade twin, readStream changelog
-#       mode — manifest-planned insert/delete_key partitions, piped
-#       facade-to-facade, non-plannable verbs rejected at planning);
-#       stream_cdc_scd2_drained (the r18 weak fixed: the refresh is now
-#       ONE O(delta) merge_mor fold — equality-delete close + single
-#       new data file — zero whole-history collects or rewrites);
-#       stream_table_cdc_drained (gained the _bounded_catchup stage:
-#       starting_version=<int|'latest'> on fresh checkpoints);
-#       stream_cdc_mv_drained (pulled in by the shared-helper change:
-#       stream_table_cdc grew the starting_version path both sinks run
-#       behind);
-#       stream_table_pipe_drained (gained the _day_target_pruned stage:
-#       days(ts) hidden-transform sink targets, pure-pyarrow derivation
-#       pinned ≡ Spark-side dir names; plus the refs-aware commit
-#       recheck);
-#       stream_table_readstream_drained and stream_table_source_drained
-#       (pulled in by the shared source-facade changes: changelog-mode
-#       plumbing in the reader ctor/read()/schema(), TimestampNTZ
-#       support);
-#       orphan_cleanup_recovery (pulled in: remove_orphan_files now
-#       recurses into the r18 stream-staging/task-*/ layout and prunes
-#       aged empty task trees — ADVICE r18 medium);
-#   (b) the full 26-row r13 stratum, alphabetical from
-#       json_extract_props — the oldest standing stratum, retired;
-#   (c) 16 of the 42-row r14 stratum, alphabetical from
-#       approx_percentile_sketch; the remaining 26 r14 rows defer
-#       to r20.
-# 8 + 26 + 16 = 50 — the section counts and this arithmetic are
-# TEST-PINNED against the list below (VERDICT r16 What's-wrong #2:
-# generated/verified, not hand-counted), see
-# tests/test_round17_invariants.py::test_window_comment_counts_match_list.
-# Everything NOT in the window is pytest-oracle-gated at sf0.001 on
-# every suite run (tests/test_oracle_parity.py, dtype-aware, EXACT
-# float compare — repr(), not %.6g), and the window is sim-checked at
-# sf0.01 via SPARK_GRAFT_DRIVER_SIM=1 before each snapshot.  Do NOT
-# hand-claim adjudication strata in this note: FRESHNESS.md is the
-# generated source of truth, pinned by tests/test_freshness_claims.py
-# (which also asserts the never-adjudicated stratum fits the window).
-# ROUND-20 ROTATION NOTE: front-load any r20-new/changed ops, then the
-# 26 deferred r14 rows (alphabetical from min_cost_supplier, or
-# wherever the computed stratum resumes), then the r15 stratum —
-# strata are computed, not remembered:
-# `python -m local_llm_iceberg_cdw_spark.freshness`.
-# The |window| == 50 invariant is test-pinned
-# (tests/test_operators.py::test_driver_window_priority_is_exactly_the_window).
-_DRIVER_WINDOW_PRIORITY = [
-    # (a) NEW/CHANGED r19
-    "stream_table_cdc_facade_drained",
-    "stream_cdc_scd2_drained",
-    "stream_table_cdc_drained",
-    "stream_cdc_mv_drained",
-    "stream_table_pipe_drained",
-    "stream_table_readstream_drained",
-    "stream_table_source_drained",
-    "orphan_cleanup_recovery",
-    # (b) the 26-row r13 stratum, alphabetical
-    "json_extract_props",
-    "k_core_decomposition",
-    "khop_reachability",
-    "kmeans_assignments",
-    "kmeans_converged",
-    "label_outliers",
-    "local_clustering_coefficient",
-    "media_decontamination",
-    "media_dhash_clusters",
-    "media_pipeline_e2e",
-    "media_resize_dims",
-    "media_silence_segments",
-    "mixture_weights",
-    "multimodal_metadata",
-    "repeated_ngrams",
-    "sampling_quota_allocation",
-    "semantic_dedup",
-    "snapshot_cherry_pick_read",
-    "snapshot_drift_psi",
-    "sq8_adc_topk",
-    "star_join_revenue_by_nation",
-    "stream_append_watermark_drained",
-    "stream_attribution_drained",
-    "stream_dedup_drained",
-    "stream_sessions_drained",
-    "topk_orders",
-    # (c) 16 of the 42-row r14 stratum, alphabetical
-    "approx_percentile_sketch",
-    "asof_join_last_order",
-    "bigram_pmi",
-    "bigram_top_terms",
-    "bloom_decontamination",
-    "bm25_topk",
-    "bpe_train_merges",
-    "bucketed_colocated_join",
-    "bulk_part_suppliers",
-    "copurchase_triangles",
-    "cosine_topk",
-    "doc_length_histogram",
-    "error_rate_windows",
-    "event_funnel",
-    "market_share",
-    "merge_upsert_state",
-]
-
-
-def all_queries() -> dict[str, QuerySpec]:
+def all_queries(repo_root: Path = REPO_ROOT) -> dict[str, QuerySpec]:
+    """Every registry entry, the next driver window first.  ``repo_root``
+    is where the CORRECTNESS_r*.json rows are read (tests pass a fake)."""
     from . import (
         analytics,
         corpus,
@@ -181,9 +84,7 @@ def all_queries() -> dict[str, QuerySpec]:
             raise ValueError(f"duplicate query names: {overlap}")
         merged.update(mod.QUERIES)
 
-    missing = [n for n in _DRIVER_WINDOW_PRIORITY if n not in merged]
-    if missing:
-        raise ValueError(f"priority list names unknown queries: {missing}")
-    ordered = {n: merged[n] for n in _DRIVER_WINDOW_PRIORITY}
+    window = compute_strata(repo_root, registry=list(merged))["window"]
+    ordered = {n: merged[n] for n in window}
     ordered.update({n: s for n, s in merged.items() if n not in ordered})
     return ordered

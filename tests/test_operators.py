@@ -155,16 +155,19 @@ def test_embedding_lsh_finds_exact_duplicates(spark):
 
 def test_driver_window_priority_ordering():
     """The external driver records correctness rows for the first 50
-    registry entries only — the priority list must lead the registry so
-    the round-2 window covers every op that lacked a round-1 row."""
-    from local_llm_iceberg_cdw_spark.operators import (
-        _DRIVER_WINDOW_PRIORITY,
-        all_queries,
-    )
+    registry entries only — the computed window must lead the registry so
+    the next round covers every op that lacks a row for its current path."""
+    from local_llm_iceberg_cdw_spark import freshness
+    from local_llm_iceberg_cdw_spark.operators import all_queries
 
-    names = list(all_queries())
-    assert names[: len(_DRIVER_WINDOW_PRIORITY)] == _DRIVER_WINDOW_PRIORITY
-    assert len(_DRIVER_WINDOW_PRIORITY) <= 50
+    latest = freshness.compute_strata()["latest"]
+    registry = list(all_queries())
+    assert set(freshness.ROUND_CHANGED) <= set(registry), "ROUND_CHANGED names an unknown op"
+    window = registry[:50]
+    changed = [op for op in window if latest.get(op, 0) < freshness.ROUND_CHANGED.get(op, 0)]
+    assert window[: len(changed)] == changed
+    rounds = [latest.get(op, 0) for op in window[len(changed) :]]
+    assert rounds == sorted(rounds), "oldest adjudication first"
 
 
 def test_decontamination_eval_docs_complete_and_consistent(spark):
@@ -402,14 +405,13 @@ def test_semantic_dedup_is_cluster_scoped_subset(spark):
 
 
 def test_driver_window_priority_is_exactly_the_window():
-    """The driver adjudicates the FIRST 50 registry entries; the priority
-    list IS that window.  >50 entries silently push the tail outside the
+    """The driver adjudicates the FIRST 50 registry entries; the computed
+    window IS that window.  >50 entries silently push the tail outside the
     gate (caught once in round 8); <50 lets insertion order leak in."""
-    from local_llm_iceberg_cdw_spark.operators import (
-        _DRIVER_WINDOW_PRIORITY,
-        all_queries,
-    )
+    from local_llm_iceberg_cdw_spark import freshness
+    from local_llm_iceberg_cdw_spark.operators import all_queries
 
-    assert len(_DRIVER_WINDOW_PRIORITY) == 50
-    assert len(set(_DRIVER_WINDOW_PRIORITY)) == 50
-    assert list(all_queries())[:50] == _DRIVER_WINDOW_PRIORITY
+    window = freshness.compute_strata()["window"]
+    assert len(window) == 50
+    assert len(set(window)) == 50
+    assert list(all_queries())[:50] == window

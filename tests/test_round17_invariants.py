@@ -229,32 +229,6 @@ def test_clustered_write_one_file_per_dir(spark, tmp_path):
     assert any(len(glob.glob(os.path.join(d, "*.parquet"))) > 1 for d in dirs2)
 
 
-# --- window-comment arithmetic is verified, not hand-counted -----------------
-
-
-def test_window_comment_counts_match_list():
-    """VERDICT r16 What's-wrong #2 (two rounds of comment miscounts):
-    the (0)/(a)/(b)/(c) section sizes and the 'N + N + N + N = 50' line
-    in operators/__init__.py are pinned against the actual list — the
-    arithmetic can no longer drift from the code."""
-    import re
-
-    import local_llm_iceberg_cdw_spark.operators as ops
-
-    src = open(ops.__file__).read()
-    block = src[src.index("_DRIVER_WINDOW_PRIORITY = [") : src.index("]\n\n\ndef ")]
-    # section marker comments inside the list: "# (0) ...", "# (a) ..." …
-    sections = re.split(r"\n\s*# \([0a-z]\)[^\n]*", block)[1:]
-    counts = [len(re.findall(r'"\w+"', s)) for s in sections]
-    assert sum(counts) == len(ops._DRIVER_WINDOW_PRIORITY) == 50
-    m = re.search(r"# ((?:\d+ \+ )+\d+) = 50", src)
-    assert m, "the window comment must state its section arithmetic"
-    claimed = [int(g) for g in m.group(1).split(" + ")]
-    assert claimed == counts, (
-        f"comment claims {claimed} but the list sections hold {counts}"
-    )
-
-
 # --- spark.readStream snapshot_table facade (VERDICT r16 stretch #9) ---------
 
 
